@@ -123,65 +123,68 @@ def parse_fragment(markup: str) -> Element:
     stack: List[Element] = [root]
     top = root  # cached stack[-1]: saves two index loads per tag/text event
     kids = root.children  # cached top.children: one attr load per event
-    pos = 0
     # hot loop: bind globals/attributes to locals; ~150 tags per table and
     # every document goes through here, so constant factors matter
     unescape = _htmlmod.unescape
     implicit = _IMPLICIT_CLOSERS.get
     void = _VOID_TAGS
-    for m in _TAG_RE.finditer(markup):
-        start, end = m.span()
-        if start > pos:
-            text = markup[pos:start]
-            if "&" in text:  # unescape only when an entity can exist
-                text = unescape(text)
-            if text:
-                if kids and kids[-1].__class__ is str:
-                    kids[-1] += text  # merge adjacent text nodes
-                else:
-                    kids.append(text)
-        pos = end
-        closing, tag, rawattrs, selfclose = m.groups()
+    # one split call tokenizes the whole fragment without a Match object per
+    # tag: [text, closing, tag, rawattrs, selfclose, text, ...], so after the
+    # leading text every tag arrives as a 5-tuple with the text that follows
+    parts = _TAG_RE.split(markup)
+    text = parts[0]
+    if text and "&" in text:
+        text = unescape(text)
+    if text:
+        kids.append(text)
+    it = iter(parts)
+    next(it)
+    for closing, tag, rawattrs, selfclose, text in zip(it, it, it, it, it):
         if not tag.islower():  # islower scans without allocating; real-world
             tag = tag.lower()  # markup is almost always lowercase already
         if closing:
-            # pop to the matching open tag, if present anywhere on the stack
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    del stack[i:]
-                    top = stack[-1]
-                    kids = top.children
-                    break
-            continue
-        # implicit closes (e.g. a <tr> closes a still-open <tr>/<td>/<th>)
-        closers = implicit(tag)
-        if closers:
-            while len(stack) > 1 and top.tag in closers:
+            if tag == top.tag:  # the common case: close the innermost element
                 stack.pop()
                 top = stack[-1]
-            kids = top.children
-        # most tags carry no attributes: skip the parse without allocating a
-        # stripped copy (isspace never allocates)
-        node = Element(
-            tag,
-            _parse_attrs(rawattrs)
-            if rawattrs and not rawattrs.isspace()
-            else None,
-        )
-        kids.append(node)
-        if not selfclose and tag not in void:
-            stack.append(node)
-            top = node
-            kids = node.children
-    if pos < len(markup):
-        tail = markup[pos:]
-        if "&" in tail:
-            tail = unescape(tail)
-        if tail:
-            if kids and kids[-1].__class__ is str:
-                kids[-1] += tail
+                kids = top.children
             else:
-                kids.append(tail)
+                # pop to the matching open tag, if present anywhere below
+                for i in range(len(stack) - 2, 0, -1):
+                    if stack[i].tag == tag:
+                        del stack[i:]
+                        top = stack[-1]
+                        kids = top.children
+                        break
+        else:
+            # implicit closes (e.g. a <tr> closes a still-open <tr>/<td>/<th>)
+            closers = implicit(tag)
+            if closers:
+                while len(stack) > 1 and top.tag in closers:
+                    stack.pop()
+                    top = stack[-1]
+                kids = top.children
+            # most tags carry no attributes: skip the parse without
+            # allocating a stripped copy (isspace never allocates)
+            node = Element(
+                tag,
+                _parse_attrs(rawattrs)
+                if rawattrs and not rawattrs.isspace()
+                else None,
+            )
+            kids.append(node)
+            if not selfclose and tag not in void:
+                stack.append(node)
+                top = node
+                kids = node.children
+        if text:
+            if "&" in text:  # unescape only when an entity can exist
+                text = unescape(text)
+                if not text:
+                    continue
+            if kids and kids[-1].__class__ is str:
+                kids[-1] += text  # merge adjacent text nodes
+            else:
+                kids.append(text)
     return root
 
 

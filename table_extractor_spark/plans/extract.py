@@ -22,6 +22,9 @@ per document (kind IS NULL) instead of a second parse or a struct column.
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from typing import Iterator, Optional, Tuple
 
 import pyarrow as pa
@@ -121,10 +124,52 @@ def parse_documents_metrics_gen(batches) -> Iterator["pa.RecordBatch"]:
     yield from _parse_batches(batches, emit_spans=False)
 
 
+def _install_lazy_zip_invalidation() -> None:
+    """Stop each Python task re-reading every zip on ``sys.path``.
+
+    Before every task, a reused PySpark worker calls
+    ``importlib.invalidate_caches()``; before Python 3.12 that eagerly
+    re-reads the central directory of each ``zipimporter`` (16 of them over
+    pyspark.zip, the py4j zip and the Spark jar), ~160 ms of CPU per task
+    on a 4-vCPU VM against ~1 ms for an empty ``mapInArrow`` body.  The replacement
+    re-reads an archive only when its ``(st_mtime_ns, st_size, st_ino)``
+    changed since its last read, so new ``--py-files`` are still seen.
+    Python 3.12 made that invalidation lazy (CPython gh-103200), so there
+    this does nothing.  Idempotent; installed from the worker-side
+    generator, so the driver and the Spark-free kernel keep the stock
+    behaviour."""
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 12) or hasattr(cls.invalidate_caches, "stat_keyed"):
+        return
+    reread = cls.invalidate_caches
+    read_at: dict = {}  # archive path -> stat key when its directory was read
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        if key is not None and read_at.get(self.archive) == key:
+            files = zipimport._zip_directory_cache.get(self.archive)
+            if files is not None:
+                self._files = files
+                return
+        reread(self)
+        # stat taken BEFORE the read: a rewrite racing the read leaves a
+        # stale key behind, which only costs one more read next time
+        read_at[self.archive] = key
+
+    invalidate_caches.stat_keyed = True
+    cls.invalidate_caches = invalidate_caches
+
+
 def _parse_batches(batches, emit_spans: bool) -> Iterator["pa.RecordBatch"]:
     from time import perf_counter
 
     import numpy as np
+
+    _install_lazy_zip_invalidation()
 
     names = list(OUT_COLUMNS) + list(METRIC_FIELDS)
     empty: tuple = ()
@@ -228,7 +273,17 @@ def _spread(
             num_partitions = int(
                 docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
             )
-        return docs.coalesce(num_partitions)
+        # coalesce cannot add partitions, so it only applies when the plan
+        # guarantees at least num_partitions (an explicit upstream
+        # repartition); a narrower or unknown spread (0: scans, local data)
+        # falls back to the salted repartition.  Read from the physical plan
+        # without running it — df.rdd would execute AQE's shuffle stages.
+        planned = (
+            docs._jdf.queryExecution().sparkPlan()
+            .outputPartitioning().numPartitions()
+        )
+        if planned >= num_partitions:
+            return docs.coalesce(num_partitions)
     return salted_repartition(docs, num_partitions=num_partitions, salt=salt)
 
 
@@ -267,7 +322,9 @@ def extract_pipeline(
     are already evenly spread over >= num_partitions partitions (an
     explicit upstream repartition, as in synthesize_docs_from_testdata) —
     guide §2.4: the same markup bytes were previously exchanged a second
-    time purely to re-establish a spread they already had.
+    time purely to re-establish a spread they already had.  When the plan
+    does not guarantee that many partitions, ``"coalesce"`` falls back to
+    the salted repartition rather than run the kernel narrower.
 
     NOTE on reuse: the two returned frames share the parse stage.  Run-once
     jobs should ``parsed.persist()`` or write the parse output to a table and

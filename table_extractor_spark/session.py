@@ -27,12 +27,16 @@ def recommended_confs(shuffle_partitions: Optional[int] = None) -> Dict[str, str
         # sf0.1x8.  On a 1000-executor cluster the map x reduce file blowup
         # is worse, which is exactly why large deployments disable bypass.
         "spark.shuffle.sort.bypassMergeThreshold": "1",
-        # Arrow batching is ROW-count based, not byte based: the default 10k
+        # Arrow batches are capped here by row count only: the default 10k
         # rows/batch would materialize 10k x doc-size bytes in one Python
-        # worker pdf — a batch of mega-articles (fixture worst case ~2 MB of
+        # worker — a batch of mega-articles (fixture worst case ~2 MB of
         # markup each) would be 20 GB.  2048 keeps the worst batch ~4 GB while
         # still amortizing worker round-trips for normal pages; partitions
         # smaller than this (the common local case) form one batch regardless.
+        # Spark can also cap batches by bytes
+        # (spark.sql.execution.arrow.maxBytesPerBatch; a batch closes at
+        # whichever cap it reaches first); it is left unset until a
+        # byte cap is measured on mega-article inputs.
         "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
         # zstd over default snappy for every parquet write: measured 20%
         # smaller (10.8 -> 8.6 MB on sf0.1 lineitem) at no write-time cost —

@@ -33,6 +33,7 @@ import time
 from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.repartition import bucket_expr
@@ -42,6 +43,22 @@ from ..sources.writers import dynamic_partition_overwrite
 LINEAGE_COLS = (
     "run_id", "bucket", "n_docs", "n_spans", "wall_sec", "committed_at",
 ) + METRIC_FIELDS
+
+# the only read failures that mean "nothing written here yet": an absent
+# directory, or one with no data files (an all-empty wave)
+_NOTHING_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _read_parquet_or_none(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """``spark.read.parquet(path)``, or None when nothing was written there.
+    Any other failure (corrupt file, permissions, I/O) propagates: read as
+    "nothing done" it would make a resume quietly redo every bucket."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in _NOTHING_WRITTEN:
+            return None
+        raise
 
 
 @dataclass
@@ -87,9 +104,8 @@ class CheckpointedRun:
 
     def completed_buckets(self, spark: SparkSession) -> List[int]:
         """Buckets whose lineage row exists (== durably committed)."""
-        try:
-            lin = spark.read.parquet(self.lineage_dir)
-        except Exception:
+        lin = _read_parquet_or_none(spark, self.lineage_dir)
+        if lin is None:
             return []
         rows = (
             lin.filter(F.col("run_id") == self.run_id)
@@ -98,10 +114,7 @@ class CheckpointedRun:
         return sorted(r["bucket"] for r in rows)
 
     def lineage(self, spark: SparkSession) -> Optional[DataFrame]:
-        try:
-            return spark.read.parquet(self.lineage_dir)
-        except Exception:
-            return None
+        return _read_parquet_or_none(spark, self.lineage_dir)
 
     # -- execution ----------------------------------------------------------
 
@@ -151,9 +164,8 @@ class CheckpointedRun:
         )
         def _agg_or_none(path, aggs):
             # an all-empty wave may leave a parquet dir with no data files
-            try:
-                df = spark.read.parquet(path)
-            except Exception:
+            df = _read_parquet_or_none(spark, path)
+            if df is None:
                 return None
             return (
                 df.filter(F.col("bucket").isin(*[int(b) for b in wave]))

@@ -151,3 +151,18 @@ def test_path_unsafe_run_id_rejected(tmp_path):
         CheckpointedRun(base_dir=str(tmp_path), run_id="a/b")
     with pytest.raises(ValueError):
         CheckpointedRun(base_dir=str(tmp_path), run_id="x=1")
+
+
+def test_corrupt_lineage_raises_instead_of_reprocessing(spark, run):
+    """Only an absent or data-less lineage directory means "nothing done";
+    a corrupt lineage file must surface, not read as zero completed buckets
+    (which would make the resume quietly redo every bucket)."""
+    assert run.completed_buckets(spark) == []  # no lineage dir yet
+    os.makedirs(run.lineage_dir)
+    assert run.completed_buckets(spark) == []  # empty lineage dir
+    with open(os.path.join(run.lineage_dir, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="part-0.parquet"):
+        run.completed_buckets(spark)
+    with pytest.raises(Exception, match="part-0.parquet"):
+        run.lineage(spark)

@@ -51,6 +51,39 @@ def test_htmlmini_unclosed_rows_recover():
     assert len(t) == 2
 
 
+def shape(node):
+    """(tag, children) nesting with text nodes kept as strings."""
+    if isinstance(node, str):
+        return node
+    return (node.tag, [shape(c) for c in node.children])
+
+
+def test_htmlmini_stray_close_tag_is_dropped():
+    root = parse_fragment("<td>a</b>b</td>")
+    assert shape(root) == ("#root", [("td", ["ab"])])
+
+
+def test_htmlmini_ancestor_close_pops_everything_opened_inside():
+    root = parse_fragment("<table><tr><td><b><i>x</table>y")
+    assert shape(root) == (
+        "#root",
+        [("table", [("tr", [("td", [("b", [("i", ["x"])])])])]), "y"],
+    )
+
+
+def test_htmlmini_uppercase_close_tag_closes_lowercase_open():
+    root = parse_fragment("<td><b>x</B>y</TD>z")
+    assert shape(root) == ("#root", [("td", [("b", ["x"]), "y"]), "z"])
+
+
+def test_htmlmini_trailing_text_and_final_entity_are_kept():
+    root = parse_fragment("<td>a</td>tail &amp;")
+    assert shape(root) == ("#root", [("td", ["a"]), "tail &"])
+    assert shape(parse_fragment("lead&nbsp;<br>&lt;")) == (
+        "#root", ["lead\xa0", ("br", []), "<"]
+    )
+
+
 def test_htmlmini_element_text_none_when_child_first():
     t = table_of("<table><tr><td><b>x</b>y</td></tr></table>")
     td = next(next(t.iterchildren()).iterchildren())

@@ -105,6 +105,25 @@ def test_salted_repartition_defuses_skew(spark):
     assert moved > len(a) / 2, f"salt change moved only {moved}/{len(a)} docs"
 
 
+def test_coalesce_spread_keeps_num_partitions_as_floor(spark):
+    """coalesce cannot add partitions: a 1-partition input asked to spread
+    over 4 must fall back to the salted repartition and reach the kernel 4
+    partitions wide, while an input already wider keeps the cheap coalesce."""
+    from pyspark.sql import functions as F
+
+    narrow = fixture_corpus_df(spark, copies=4).coalesce(1)
+    _, metrics = extract_pipeline(
+        narrow, num_partitions=4, prefilter=False, spread="coalesce"
+    )
+    pids = metrics.select(F.spark_partition_id().alias("pid")).distinct()
+    assert pids.count() == 4
+
+    wide = fixture_corpus_df(spark).repartition(8, "doc_id")
+    out, _ = extract_pipeline(wide, num_partitions=4, spread="coalesce")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce 4" in plan and plan.count("Exchange") == 1, plan
+
+
 def test_skew_report_values_and_null_key_order(spark):
     """skew_report (the pre-shuffle hot-key diagnostic): exact counts,
     integer ppm shares, total rank order — and a NULL key must sort AFTER
