@@ -4,14 +4,14 @@
 deterministically from /root/testdata/sf0.001 (BASELINE.json input_hint shape)
 and returns the normalized output-span DataFrame.
 
-``queries()``/``oracle_sql()`` expose the full operator battery from
-``table_extractor_spark.plans.queries`` — one entry per implemented operator
-from SURVEY.md §2 plus the training-data operators (dedup, similarity, text
-analysis, tokenizer induction, packing/mixing).  Since round 4 EVERY
-registered query carries a DuckDB-runnable ANSI oracle: the approximate
-(ANN) and iterative (k-means, PQ, BPE) families run integer-exact and
-their oracles REPLAY the full deterministic training, so no rows-only
-checks remain.
+``queries()``/``oracle_sql()`` expose the registry in
+``table_extractor_spark.plans.queries``: the extraction engine's queries
+(kernel extraction, metrics, triples, TTL and the explorer path),
+``bench.py``'s headline set, and the operator queries the test suite checks
+by name.  EVERY registered query carries a DuckDB-runnable ANSI oracle: the
+approximate (ANN) and iterative (k-means, PQ, BPE) families run
+integer-exact and their oracles REPLAY the full deterministic training, so
+no rows-only checks remain.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """Every registered query, in registration order."""
     return _q.queries()
 
 

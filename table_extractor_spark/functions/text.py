@@ -72,42 +72,6 @@ def redact_pii(text_col) -> F.Column:
     return F.regexp_replace(out, PII_PHONE_RE, "<PHONE>")
 
 
-def strip_boilerplate(
-    text_col,
-    block_sep: str = "\n",
-    min_words: int = 5,
-    max_link_density: float = 0.5,
-    link_marker: str = "href:",
-) -> F.Column:
-    """Main-content extraction, readability/jusText-style heuristics: split
-    the document into blocks, drop blocks that are too short (navigation,
-    footers) or too link-dense (menus, related-article strips), keep the
-    rest in order.  Pure JVM array ops — the per-block signals are the
-    standard content-vs-chrome discriminators and need no model.
-
-    ``link_marker`` prefixes link tokens (the upstream HTML flattener emits
-    them; the synthetic corpus uses the same convention).  Returns the
-    cleaned text (kept blocks re-joined with the separator)."""
-    blocks = F.split(text_col, block_sep)
-    kept = F.filter(
-        blocks,
-        lambda b: (
-            (F.size(F.split(F.trim(b), " ")) >= min_words)
-            & (
-                F.size(
-                    F.filter(
-                        F.split(F.trim(b), " "),
-                        lambda w: w.startswith(link_marker),
-                    )
-                ).cast("double")
-                / F.size(F.split(F.trim(b), " ")).cast("double")
-                <= max_link_density
-            )
-        ),
-    )
-    return F.array_join(kept, block_sep)
-
-
 def dup_word_ratio(text_col) -> F.Column:
     """Fraction of word OCCURRENCES that are repeats of an earlier word —
     the Gopher-style repetition signal (boilerplate and keyword-stuffed spam

@@ -44,11 +44,3 @@ def normalize_url(col) -> Column:
     # 5. one trailing slash off a non-root path (also just before '?')
     out = F.regexp_replace(out, r"(://[^/?#]+/.+?)/(\?|$)", r"$1$2")
     return out
-
-
-def url_dedup_key(col) -> Column:
-    """60-bit key over the canonical URL — groupBy this before any
-    content-level dedup; one uniform shuffle."""
-    from ..operators.dedup import hash60
-
-    return hash60(normalize_url(col))

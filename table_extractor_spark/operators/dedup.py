@@ -69,16 +69,6 @@ def minhash_from_hashes(hs_col, perms: int = DEFAULT_PERMS) -> F.Column:
     return F.array(*[perm_min(2 * i + 3, 17 * i + 5) for i in range(perms)])
 
 
-def minhash_signature(text_col, perms: int = DEFAULT_PERMS, k: int = 3) -> F.Column:
-    """Single-expression minhash (for ad-hoc use on a handful of rows).
-
-    WARNING: evaluates the shingle-hash subtree once PER PERMUTATION (no CSE
-    inside higher-order functions).  For DataFrame-scale work always use
-    ``minhash_signatures``, which stages the hash array in its own projection.
-    """
-    return minhash_from_hashes(shingle_hashes(text_col, k), perms)
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: hash-groupBy on content hash; keeper = min id.
 
@@ -542,12 +532,6 @@ def ngram_containment(
     )
 
 
-def bottomk_fingerprint(text_col, k: int = 4, shingle_k: int = 3) -> F.Column:
-    """Bottom-k sketch (document fingerprint): k smallest distinct shingle
-    hashes, sorted — a deterministic winnowing-style fingerprint."""
-    return F.slice(F.array_sort(shingle_hashes(text_col, shingle_k)), 1, k)
-
-
 def connected_components(
     pairs: DataFrame, a: str = "a", b: str = "b", max_iters: int = 20
 ) -> DataFrame:
@@ -854,7 +838,7 @@ def winnowing_fingerprints(
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD 2003
     — public method, independent implementation): (doc_id, pos, fp), the
     rightmost-minimum shingle hash of every ``window`` consecutive k-gram
-    hashes, deduplicated.  Unlike the global ``bottomk_fingerprint``/minhash
+    hashes, deduplicated.  Unlike global bottom-k/minhash
     sketches, winnowing guarantees a fingerprint inside EVERY window-length
     region, so two docs sharing any sufficiently long passage share a
     fingerprint at a known position — the partial-overlap primitive

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .repartition import spread_for_compute
+
 
 def as_double(vec_col) -> F.Column:
     return F.transform(vec_col, lambda x: x.cast("double"))
@@ -33,13 +35,6 @@ def dot(a, b) -> F.Column:
 def norm(a) -> F.Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0),
                               lambda acc, v: acc + v))
-
-
-from .repartition import spread_for_compute  # noqa: E402  (shared defusal)
-
-
-def cosine(a, b) -> F.Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def quantized(vec_col, quantize: int) -> F.Column:

@@ -1,9 +1,9 @@
 """C2. Training-data pipeline queries: mixing, sampling, retrieval, sketches, ANN.
 
-Split out of plans/queries.py in round 6 — same registrations, same
-oracle pairing, same engine-parity rules (see the plans/queries.py
-module docstring); the @register calls execute when plans/queries.py
-imports this module.
+Only the queries the test suite checks by name stay registered here.
+Same engine-parity rules as every other registered query (see the
+plans/queries.py module docstring); the @register calls execute when
+plans/queries.py imports this module.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from ..functions import text as T
 from ..operators import similarity as S
 from ..sources.tables import load_table
 from .registry import DUCK_HASH, register, spark_hash
-from .battery_dedup_text import _DUCK_SHINGLES, _DUCK_SIGS_CTE
+from .battery_headline import _DUCK_SIGS_CTE
 
 # target pre-training language mix (parts-per-million); zh deliberately 0
 # to exercise the drop-a-domain path end to end
@@ -260,54 +260,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "token_count",
-    oracle="""
-SELECT doc_id,
-       len(string_split(text, ' ')) AS ws_tokens,
-       len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))
-         AS re_tokens
-FROM documents
-""",
-)
-def token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        T.whitespace_token_count(F.col("text")).alias("ws_tokens"),
-        T.token_count(F.col("text")).alias("re_tokens"),
-    )
-
-
-@register(
-    "decontamination_report",
-    oracle=f"""
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-h AS (SELECT doc_id, {_DUCK_SHINGLES} AS hs FROM w),
-bench AS (SELECT DISTINCT unnest(hs) AS bh FROM h WHERE doc_id % 97 = 0),
-x AS (SELECT doc_id, unnest(hs) AS g FROM h),
-hits AS (
-  SELECT doc_id, COUNT(DISTINCT g) AS n
-  FROM x JOIN bench ON x.g = bench.bh GROUP BY doc_id
-)
-SELECT h.doc_id, CAST(COALESCE(hits.n, 0) AS BIGINT) AS n_collisions,
-       COALESCE(hits.n, 0) > 0 AS contaminated
-FROM h LEFT JOIN hits ON h.doc_id = hits.doc_id
-""",
-)
-def decontamination_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (operators/contamination): the synthetic
-    'benchmark' is every 97th doc; every training doc sharing a word 3-gram
-    with it gets flagged with its distinct collision count.  Benchmark
-    n-gram set broadcasts (eval sets are MBs at any corpus scale); the
-    corpus is never shuffled before the per-doc aggregation."""
-    from ..operators.contamination import benchmark_ngrams, contamination_report
-
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return contamination_report(docs, benchmark_ngrams(bench))
-
-
-@register(
     "fuzzy_decontamination",
     oracle=_DUCK_SIGS_CTE + """
 , bench AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 0),
@@ -444,324 +396,6 @@ def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "countmin_frequency_estimates",
-    oracle="""
-WITH wds AS (
-  SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents
-),
-occ AS (SELECT word FROM wds WHERE word <> ''),
-wf AS (SELECT word, COUNT(*) AS exact_cnt FROM occ GROUP BY word),
-cells AS (
-  SELECT t.r AS row,
-         (('0x' || substr(md5(CAST(t.r AS VARCHAR) || '|' || occ.word), 1, 15))::bigint
-          % 256) AS cell,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM occ, generate_series(0, 3) t(r)
-  GROUP BY 1, 2
-),
-topw AS (SELECT word, exact_cnt FROM wf ORDER BY exact_cnt DESC, word LIMIT 20),
-qc AS (
-  SELECT topw.word, topw.exact_cnt, t.r AS row,
-         (('0x' || substr(md5(CAST(t.r AS VARCHAR) || '|' || topw.word), 1, 15))::bigint
-          % 256) AS cell
-  FROM topw, generate_series(0, 3) t(r)
-)
-SELECT qc.word, CAST(MIN(qc.exact_cnt) AS BIGINT) AS exact_cnt,
-       CAST(MIN(c.cnt) AS BIGINT) AS est_cnt
-FROM qc JOIN cells c ON qc.row = c.row AND qc.cell = c.cell
-GROUP BY qc.word
-""",
-)
-def countmin_frequency_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch frequency estimation (operators/sketches, Cormode &
-    Muthukrishnan 2005): build the d=4 x w=256 sketch over the corpus word
-    stream — the aggregation key space is d*w cells REGARDLESS of corpus
-    size, so the sketch partial-combines map-side into a broadcastable
-    table — then estimate the exact top-20 words and pair estimate with
-    truth (est >= exact by construction; the gap is the collision noise).
-    Row-salted md5 hashing makes every cell and estimate bit-reproducible,
-    so the oracle replays the whole sketch."""
-    from ..operators import sketches as SK
-
-    docs = load_table(spark, sf_dir, "documents")
-    wds = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.col("word") != "")
-    sk = SK.countmin_sketch(wds, key_col="word")
-    wf = wds.groupBy("word").agg(F.count("*").alias("exact_cnt"))
-    top = wf.orderBy(F.col("exact_cnt").desc(), "word").limit(20)
-    est = SK.countmin_estimate(sk, top.select("word"), key_col="word")
-    return top.join(est, "word").select("word", "exact_cnt", "est_cnt")
-
-
-from ..operators.sketches import _hll_alpha_ppm as _hll_alpha
-
-_HLL_ALPHA_PPM_256 = _hll_alpha(256)  # = 718272, one shared constant
-_HLL_M2C_256 = 256 * 256 * (1 << 40)  # m^2 * 2^rho_cap
-
-_HLL_REG_CTE = """
-wds AS (
-  SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents
-),
-occ AS (SELECT word FROM wds WHERE word <> ''),
-hv AS (
-  SELECT word,
-         (('0x' || substr(md5('b|' || word), 1, 15))::BIGINT % 256) AS bucket,
-         ('0x' || substr(md5('r|' || word), 1, 15))::BIGINT AS hr
-  FROM occ
-),
-rh AS (SELECT bucket, LEAST(40, 61 - length(bin(hr))) AS rho FROM hv),
-reg AS (
-  SELECT gs.b AS bucket, CAST(COALESCE(MAX(rh.rho), 0) AS BIGINT) AS rho
-  FROM generate_series(0, 255) gs(b) LEFT JOIN rh ON rh.bucket = gs.b
-  GROUP BY gs.b
-)"""
-
-
-@register(
-    "hll_registers",
-    oracle=f"""
-WITH {_HLL_REG_CTE}
-SELECT bucket, rho FROM reg
-""",
-)
-def hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full m=256 HyperLogLog register table over the corpus word
-    stream (operators/sketches.hll_sketch, Flajolet et al. 2007):
-    bucket = md5-salted hash % m, rho = leading-rank of a second salted
-    hash via minimal-width bin() length — identical arithmetic in both
-    engines, so the oracle replays every register.  The aggregation key
-    space is m regardless of corpus size (map-side partial MAX, no
-    distinct pass needed — MAX is idempotent under duplicates)."""
-    from ..operators import sketches as SK
-
-    docs = load_table(spark, sf_dir, "documents")
-    wds = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.col("word") != "")
-    sk = SK.hll_sketch(wds, key_col="word")
-    return sk.select("bucket", F.col("rho").cast("long").alias("rho"))
-
-
-@register(
-    "hll_distinct_estimate",
-    oracle=f"""
-WITH {_HLL_REG_CTE},
-agg AS (
-  SELECT CAST(SUM(1::BIGINT << (40 - rho)) AS BIGINT) AS s_scaled,
-         CAST(SUM(CASE WHEN rho = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_empty,
-         CAST(COUNT(*) AS BIGINT) AS m
-  FROM reg
-)
-SELECT m, v_empty, s_scaled,
-       CAST(CASE WHEN v_empty = m THEN 0
-            ELSE ({_HLL_ALPHA_PPM_256}
-                  * (CAST({_HLL_M2C_256} AS BIGINT) // s_scaled)) // 1000000
-            END AS BIGINT) AS est_distinct,
-       (SELECT CAST(COUNT(DISTINCT word) AS BIGINT) FROM occ)
-         AS exact_distinct
-FROM agg
-""",
-)
-def hll_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact HyperLogLog cardinality estimate over the corpus
-    vocabulary, paired with the exact distinct count for audit (the gap
-    is the sketch error; sigma ~ 1.04/sqrt(256) = 6.5%).  S, the
-    harmonic term, and the ppm-alpha multiply are all int64-exact (no
-    transcendentals, overflow guarded by assert_true), so the DuckDB
-    oracle replays the ESTIMATE itself, not just the registers.  At
-    100 TB the exact column is the thing you can no longer afford — the
-    sketch side is one m-row table per shard plus a bucket-wise max."""
-    from ..operators import sketches as SK
-
-    docs = load_table(spark, sf_dir, "documents")
-    wds = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.col("word") != "")
-    est = SK.hll_estimate(SK.hll_sketch(wds, key_col="word"))
-    exact = wds.agg(
-        F.count_distinct("word").cast("long").alias("exact_distinct")
-    )
-    return est.crossJoin(exact)
-
-
-@register(
-    "hll_vocab_by_lang",
-    oracle=f"""
-WITH wds AS (
-  SELECT lang, unnest(string_split(lower(text), ' ')) AS word FROM documents
-),
-occ AS (SELECT lang, word FROM wds WHERE word <> ''),
-hv AS (
-  SELECT lang,
-         (('0x' || substr(md5('b|' || word), 1, 15))::BIGINT % 256) AS bucket,
-         ('0x' || substr(md5('r|' || word), 1, 15))::BIGINT AS hr
-  FROM occ
-),
-rh AS (SELECT lang, bucket, LEAST(40, 61 - length(bin(hr))) AS rho FROM hv),
-langs AS (SELECT DISTINCT lang FROM occ),
-reg AS (
-  SELECT langs.lang, gs.b AS bucket,
-         CAST(COALESCE(MAX(rh.rho), 0) AS BIGINT) AS rho
-  FROM langs CROSS JOIN generate_series(0, 255) gs(b)
-  LEFT JOIN rh ON rh.lang IS NOT DISTINCT FROM langs.lang
-              AND rh.bucket = gs.b
-  GROUP BY langs.lang, gs.b
-),
-agg AS (
-  SELECT lang,
-         CAST(SUM(1::BIGINT << (40 - rho)) AS BIGINT) AS s_scaled,
-         CAST(SUM(CASE WHEN rho = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_empty,
-         CAST(COUNT(*) AS BIGINT) AS m
-  FROM reg GROUP BY lang
-),
-ex AS (
-  SELECT lang, CAST(COUNT(DISTINCT word) AS BIGINT) AS exact_distinct
-  FROM occ GROUP BY lang
-)
-SELECT agg.lang, m, v_empty, s_scaled,
-       CAST(CASE WHEN v_empty = m THEN 0
-            ELSE ({_HLL_ALPHA_PPM_256}
-                  * (CAST({_HLL_M2C_256} AS BIGINT) // s_scaled)) // 1000000
-            END AS BIGINT) AS est_distinct,
-       ex.exact_distinct
-FROM agg JOIN ex ON agg.lang = ex.lang
-""",
-)
-def hll_vocab_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language vocabulary cardinality via grouped HyperLogLog
-    (operators/sketches.hll_sketch_grouped): G*m aggregation keys
-    regardless of corpus size — the per-domain/per-language richness
-    profile that would otherwise cost a per-group COUNT(DISTINCT)
-    keyspace shuffle at 100 TB.  Same integer-exact estimator as
-    ``hll_distinct_estimate``, replayed per group by the oracle; exact
-    counts joined in for audit."""
-    from ..operators import sketches as SK
-
-    docs = load_table(spark, sf_dir, "documents")
-    wds = docs.select(
-        "lang", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.col("word") != "")
-    reg = SK.hll_sketch_grouped(wds, "lang", key_col="word")
-    est = SK.hll_estimate_grouped(reg, "lang")
-    exact = wds.groupBy("lang").agg(
-        F.count_distinct("word").cast("long").alias("exact_distinct")
-    )
-    return est.join(exact, "lang")
-
-
-_HLL_SLICE_EST = """
-  SELECT CAST(CASE WHEN SUM(CASE WHEN rho = 0 THEN 1 ELSE 0 END) = 256
-              THEN 0
-              ELSE ({alpha}
-                    * (CAST({m2c} AS BIGINT)
-                       // CAST(SUM(1::BIGINT << (40 - rho)) AS BIGINT)))
-                   // 1000000
-              END AS BIGINT)
-  FROM reg_{slice}
-"""
-
-
-@register(
-    "hll_intersection_estimate",
-    oracle=f"""
-WITH wds AS (
-  SELECT lang, unnest(string_split(lower(text), ' ')) AS word FROM documents
-),
-occ AS (SELECT lang, word FROM wds WHERE word <> ''),
-hv AS (
-  SELECT lang,
-         (('0x' || substr(md5('b|' || word), 1, 15))::BIGINT % 256) AS bucket,
-         ('0x' || substr(md5('r|' || word), 1, 15))::BIGINT AS hr
-  FROM occ WHERE lang IN ('en', 'de')
-),
-rh AS (SELECT lang, bucket, LEAST(40, 61 - length(bin(hr))) AS rho FROM hv),
-reg_a AS (
-  SELECT gs.b AS bucket, CAST(COALESCE(MAX(rh.rho), 0) AS BIGINT) AS rho
-  FROM generate_series(0, 255) gs(b)
-  LEFT JOIN rh ON rh.bucket = gs.b AND rh.lang = 'en' GROUP BY gs.b
-),
-reg_b AS (
-  SELECT gs.b AS bucket, CAST(COALESCE(MAX(rh.rho), 0) AS BIGINT) AS rho
-  FROM generate_series(0, 255) gs(b)
-  LEFT JOIN rh ON rh.bucket = gs.b AND rh.lang = 'de' GROUP BY gs.b
-),
-reg_u AS (
-  SELECT gs.b AS bucket, CAST(COALESCE(MAX(rh.rho), 0) AS BIGINT) AS rho
-  FROM generate_series(0, 255) gs(b)
-  LEFT JOIN rh ON rh.bucket = gs.b GROUP BY gs.b
-),
-est AS (
-  SELECT ({_HLL_SLICE_EST.format(alpha=_HLL_ALPHA_PPM_256,
-                                 m2c=_HLL_M2C_256, slice='a')}) AS est_a,
-         ({_HLL_SLICE_EST.format(alpha=_HLL_ALPHA_PPM_256,
-                                 m2c=_HLL_M2C_256, slice='b')}) AS est_b,
-         ({_HLL_SLICE_EST.format(alpha=_HLL_ALPHA_PPM_256,
-                                 m2c=_HLL_M2C_256, slice='u')}) AS est_union
-),
-ex AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS exact_intersection FROM (
-    SELECT word FROM occ WHERE lang = 'en'
-    INTERSECT
-    SELECT word FROM occ WHERE lang = 'de'
-  )
-)
-SELECT est_a, est_b, est_union,
-       est_a + est_b - est_union AS est_intersection,
-       ex.exact_intersection
-FROM est CROSS JOIN ex
-""",
-)
-def hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared-vocabulary estimate between two language slices via HLL
-    inclusion-exclusion: |A∩B| ≈ est(A) + est(B) - est(A∪B), where the
-    union sketch is the bucket-wise MAX merge (``hll_merge``) — the
-    cross-shard set-overlap question (vocabulary overlap, shared-user
-    audiences, key-space collision between corpus drops) answered from
-    three m-row register tables instead of a distinct-join over the full
-    key space.  The estimate can undershoot or even go negative at small
-    overlaps (inclusion-exclusion compounds the per-sketch sigma; the
-    signed value is reported honestly, not clamped) — the exact
-    intersection rides along for audit.  Same integer-exact estimator
-    as ``hll_distinct_estimate``, so the oracle replays all three
-    estimates bit-for-bit.  Note the estimator is the RAW HLL form (no
-    ln-based linear-counting small-range correction — the integer-exact
-    policy), so absolute values at this fixture's tiny vocabulary sit in
-    the raw estimator's known small-n bias regime; the driver row pins
-    the inclusion-exclusion ALGEBRA (here A=B=A∪B, so the intersection
-    estimate equals the slice estimate exactly), and the test-suite pin
-    covers the >m/2-scale error bound where raw HLL is accurate."""
-    from ..operators import sketches as SK
-
-    docs = load_table(spark, sf_dir, "documents")
-    wds = docs.select(
-        "lang", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter((F.col("word") != "") & F.col("lang").isin("en", "de"))
-    a = wds.filter(F.col("lang") == "en").select("word")
-    b = wds.filter(F.col("lang") == "de").select("word")
-    # the two register tables feed their own estimate AND the union merge
-    sa = SK.hll_sketch(a, key_col="word").persist()
-    sb = SK.hll_sketch(b, key_col="word").persist()
-    est_a = SK.hll_estimate(sa).select(F.col("est_distinct").alias("est_a"))
-    est_b = SK.hll_estimate(sb).select(F.col("est_distinct").alias("est_b"))
-    est_u = SK.hll_estimate(SK.hll_merge(sa, sb)).select(
-        F.col("est_distinct").alias("est_union")
-    )
-    exact = a.intersect(b).agg(
-        F.count("*").cast("long").alias("exact_intersection")
-    )
-    return (
-        est_a.crossJoin(est_b)
-        .crossJoin(est_u)
-        .withColumn(
-            "est_intersection",
-            F.col("est_a") + F.col("est_b") - F.col("est_union"),
-        )
-        .crossJoin(exact)
-    )
-
-
-@register(
     "bloom_dedup_prefilter",
     oracle="""
 WITH ids AS (SELECT doc_id FROM documents),
@@ -813,86 +447,6 @@ def bloom_dedup_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "bloom_hit",
         (F.col("doc_id") % 3 != 0).cast("long").alias("exact_member"),
-    )
-
-
-@register(
-    "doc_length_quantiles_by_lang",
-    oracle="""
-WITH tc AS (
-  SELECT lang,
-         CAST(len(list_filter(string_split(lower(text), ' '),
-                              w -> w <> '')) AS BIGINT) AS n
-  FROM documents
-),
-hist AS (SELECT lang, n // 8 AS bin, COUNT(*) AS cnt FROM tc GROUP BY 1, 2),
-cum AS (
-  SELECT lang, bin,
-         SUM(cnt) OVER (PARTITION BY lang ORDER BY bin) AS cum,
-         SUM(cnt) OVER (PARTITION BY lang) AS n_total
-  FROM hist
-),
-probs AS (SELECT * FROM (VALUES (500000), (900000)) p(p_ppm)),
-br AS (
-  SELECT c.lang, p.p_ppm, MIN(c.bin) AS qbin
-  FROM probs p JOIN cum c ON c.cum * 1000000 >= p.p_ppm * c.n_total
-  GROUP BY c.lang, p.p_ppm
-),
-vc AS (SELECT lang, n, COUNT(*) AS cnt FROM tc GROUP BY 1, 2),
-vcum AS (
-  SELECT lang, n,
-         SUM(cnt) OVER (PARTITION BY lang ORDER BY n) AS cum,
-         SUM(cnt) OVER (PARTITION BY lang) AS n_total
-  FROM vc
-),
-ex AS (
-  SELECT v.lang, p.p_ppm, MIN(v.n) AS exact_q
-  FROM probs p JOIN vcum v ON v.cum * 1000000 >= p.p_ppm * v.n_total
-  GROUP BY v.lang, p.p_ppm
-)
-SELECT br.lang, CAST(br.p_ppm AS BIGINT) AS p_ppm,
-       CAST(br.qbin * 8 AS BIGINT) AS est_lo,
-       CAST(br.qbin * 8 + 7 AS BIGINT) AS est_hi,
-       CAST(ex.exact_q AS BIGINT) AS exact_q
-FROM br JOIN ex ON br.lang = ex.lang AND br.p_ppm = ex.p_ppm
-""",
-)
-def doc_length_quantiles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language length profile via grouped histogram quantile
-    brackets (operators/sketches.histogram_sketch_grouped): G * bins
-    aggregation keys, the cumsum window partitioned by group (no
-    single-partition stage at any G), and the exact per-group quantile
-    rides along at bin_width = 1 so one driver hash pins per-group
-    bracket containment — the per-domain doc-length audit a curation
-    pipeline wants at 100 TB without per-group sorts."""
-    from ..operators import sketches as SK
-
-    probs = (500_000, 900_000)
-    docs = load_table(spark, sf_dir, "documents")
-    tc = docs.select(
-        "lang",
-        F.size(
-            F.filter(
-                F.split(F.lower(F.col("text")), " "), lambda w: w != ""
-            )
-        )
-        .cast("long")
-        .alias("n"),
-    )
-    br = SK.histogram_quantile_brackets_grouped(
-        SK.histogram_sketch_grouped(tc, "lang", val_col="n", bin_width=8),
-        "lang",
-        probs,
-        bin_width=8,
-    )
-    ex = SK.histogram_quantile_brackets_grouped(
-        SK.histogram_sketch_grouped(tc, "lang", val_col="n", bin_width=1),
-        "lang",
-        probs,
-        bin_width=1,
-    ).select("lang", "p_ppm", F.col("est_lo").alias("exact_q"))
-    return br.join(F.broadcast(ex), ["lang", "p_ppm"]).select(
-        "lang", "p_ppm", "est_lo", "est_hi", "exact_q"
     )
 
 
@@ -1036,33 +590,6 @@ def doc_length_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "rare_word_rank_score",
-    oracle="""
-WITH wds AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word FROM documents
-),
-vocab AS (SELECT word, COUNT(*) AS n FROM wds GROUP BY word),
-ranked AS (
-  SELECT word, row_number() OVER (ORDER BY n DESC, word) AS rank FROM vocab
-)
-SELECT doc_id, COUNT(*) AS n_words,
-       CAST(SUM(rank) AS DOUBLE) / COUNT(*) AS mean_rank
-FROM wds JOIN ranked USING (word)
-GROUP BY doc_id
-""",
-)
-def rare_word_rank_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequency-rank quality scoring (functions/text.word_rank_table +
-    with_rare_word_score): per-doc mean corpus-frequency rank — the
-    integer-exact unigram-surprisal stand-in (no transcendentals, so the
-    double reproduces bit-for-bit on any engine).  Vocab rank is the only
-    single-partition window and it runs on the DIMENSION, not the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    ranks = T.word_rank_table(docs)
-    return T.with_rare_word_score(docs, ranks)
-
-
 # --- driver-checkable ANN oracles ------------------------------------------
 #
 # The ANN family runs with quantize=ANN_Q (operators/similarity.quantized):
@@ -1141,7 +668,7 @@ afinal AS (
     return ",".join(parts)
 
 
-# probe-list selection shared by the two IVF oracles: the nprobe nearest
+# probe-list selection for the IVF oracle: the nprobe nearest
 # (exact-arithmetic) centroid lists per query id below ``qmax``
 def _duck_ivf_probes(nprobe: int, qmax: int) -> str:
     return f"""
@@ -1174,51 +701,6 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM (
 """
 
 
-def _duck_ann_lsh_bucket() -> str:
-    """DuckDB replica of similarity.sign_lsh_bucket over the quantized
-    vector ``q`` (planes=4; same hyperplane arithmetic the driver-green
-    embedding_near_dup_pairs oracle pins, 0-based dim i -> 1-based j)."""
-    terms = []
-    for p in range(4):
-        terms.append(
-            f"(CASE WHEN list_sum(list_transform(generate_series(1, len(q)), "
-            f"j -> q[j] * (CASE WHEN ((1 + (2*{p}+3+17*t.t)*(j+6)) % 13) - 6 >= 0 "
-            f"THEN 1.0 ELSE -1.0 END))) >= 0 THEN {1 << p} ELSE 0 END)"
-        )
-    return " + ".join(terms)
-
-
-@register(
-    "ann_lsh_bucketed",
-    oracle=f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings WHERE vec_id < 200),
-qv AS (SELECT vec_id, e, list_transform(e, x -> round(x * {ANN_Q})) AS q
-       FROM v),
-b AS (SELECT vec_id, t.t AS tbl, {_duck_ann_lsh_bucket()} AS bucket
-      FROM qv, generate_series(0, 7) t(t)),
-pairs AS (
-  SELECT DISTINCT l.vec_id AS query_id, r.vec_id AS neighbor_id
-  FROM b l JOIN b r ON l.tbl = r.tbl AND l.bucket = r.bucket
-                   AND l.vec_id <> r.vec_id
-),
-sims AS (
-  SELECT p.query_id, p.neighbor_id, {_DUCK_ANN_COS} AS cos_sim
-  FROM pairs p JOIN v va ON p.query_id = va.vec_id
-               JOIN v vb ON p.neighbor_id = vb.vec_id
-)
-{_DUCK_ANN_TOPK.format(k=3)}
-""",
-)
-def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate ANN via multi-table sign-LSH, bucketed on the quantized
-    vector copy (engine-exact projections) — the DuckDB oracle replays
-    bucket generation, candidate pairing, and the exact-cosine top-k; the
-    recall-vs-exact contract stays in tests/test_similarity_ann.py."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    return S.lsh_bucketed_neighbors(emb, k=3, quantize=ANN_Q)
-
-
 @register(
     "ann_ivf_probed",
     oracle="WITH " + _duck_ivf_cte(rounds=3) + ","
@@ -1248,194 +730,6 @@ def ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 20)
     return S.ivf_search(
         centroids, assignments, queries_df, k=3, nprobe=4, quantize=ANN_Q
-    )
-
-
-def _duck_pq_cte(rounds: int, m: int = 8, k: int = 16) -> str:
-    """CTE chain replaying quantization.pq_train(quantize=ANN_Q) +
-    pq_encode over the IVF-pruned candidates: subspace = (pos-1) / subdim
-    over the SAME exploded quantized vectors ``vq`` as the IVF chain
-    (dim/m inferred per row), seeds = the k lowest vids' subvectors with
-    code = vid rank - 1, per-round assign by exact squared distance (ties
-    -> lower code) and floor-mean update.  Ends with codebook ``pc{r}``
-    (subspace, code, pos, x)."""
-    parts = [f"""
-dims AS (SELECT CAST(MAX(pos) AS INT) AS d FROM vq),
-sv AS (SELECT vec_id,
-              CAST(floor((pos - 1) / floor(d / {m})) AS INT) AS subspace,
-              pos, x
-       FROM vq, dims),
-pseed AS (
-  SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS code
-  FROM (SELECT DISTINCT vec_id FROM sv) ORDER BY vec_id LIMIT {k}
-),
-pc0 AS (
-  SELECT s.subspace, p.code, s.pos, s.x
-  FROM sv s JOIN pseed p ON s.vec_id = p.vec_id
-)"""]
-    for r in range(rounds):
-        parts.append(f"""
-pd{r} AS (
-  SELECT s.vec_id, s.subspace, c.code,
-         SUM((s.x - c.x) * (s.x - c.x)) AS d
-  FROM sv s JOIN pc{r} c ON s.subspace = c.subspace AND s.pos = c.pos
-  GROUP BY s.vec_id, s.subspace, c.code
-),
-pa{r} AS (
-  SELECT vec_id, subspace, code FROM (
-    SELECT vec_id, subspace, code,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, subspace
-                              ORDER BY d, code) AS rk
-    FROM pd{r}
-  ) WHERE rk = 1
-),
-pm{r} AS (
-  SELECT a.subspace, a.code, s.pos,
-         CAST(floor(SUM(s.x) / COUNT(*)) AS DOUBLE) AS x
-  FROM pa{r} a JOIN sv s ON a.vec_id = s.vec_id AND a.subspace = s.subspace
-  GROUP BY a.subspace, a.code, s.pos
-),
-pc{r + 1} AS (
-  SELECT p.subspace, p.code, p.pos, COALESCE(m.x, p.x) AS x
-  FROM pc{r} p LEFT JOIN pm{r} m
-    ON p.subspace = m.subspace AND p.code = m.code AND p.pos = m.pos
-)""")
-    return ",".join(parts)
-
-
-@register(
-    "ann_ivf_pq",
-    oracle="WITH " + _duck_ivf_cte(rounds=2) + ","
-    + _duck_ivf_probes(nprobe=4, qmax=10) + ","
-    + _duck_pq_cte(rounds=2) + f""",
-plists AS (SELECT DISTINCT cid FROM probes),
-pcands AS (
-  SELECT a.vec_id FROM afinal a JOIN plists p ON a.cid = p.cid
-),
-codes AS (
-  SELECT vec_id, subspace, code FROM (
-    SELECT vec_id, subspace, code,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, subspace
-                              ORDER BY d, code) AS rk
-    FROM (
-      SELECT s.vec_id, s.subspace, c.code,
-             SUM((s.x - c.x) * (s.x - c.x)) AS d
-      FROM sv s
-      JOIN pcands pc ON s.vec_id = pc.vec_id
-      JOIN pc2 c ON s.subspace = c.subspace AND s.pos = c.pos
-      GROUP BY s.vec_id, s.subspace, c.code
-    )
-  ) WHERE rk = 1
-),
-dist_tables AS (
-  SELECT s.vec_id AS query_id, s.subspace, c.code,
-         SUM((s.x - c.x) * (s.x - c.x)) AS d
-  FROM sv s JOIN pc2 c ON s.subspace = c.subspace AND s.pos = c.pos
-  WHERE s.vec_id < 10
-  GROUP BY s.vec_id, s.subspace, c.code
-),
-sims AS (
-  SELECT t.query_id, cd.vec_id AS neighbor_id, round(SUM(t.d), 9) AS adc_dist
-  FROM codes cd JOIN dist_tables t
-    ON cd.subspace = t.subspace AND cd.code = t.code
-  GROUP BY t.query_id, cd.vec_id
-  HAVING t.query_id <> cd.vec_id
-)
-SELECT query_id, neighbor_id, adc_dist, rank FROM (
-  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY adc_dist, neighbor_id) AS INT) AS rank
-  FROM sims
-) WHERE rank <= 3
-""",
-)
-def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ, driver-replayable end to end: coarse probe prunes to the
-    nearest centroid lists, ADC scores only those candidates against PQ
-    codes.  The oracle replays BOTH deterministic training runs (IVF: 2
-    Lloyd rounds; PQ: per-subspace k-means, 2 rounds) over the quantized
-    vectors, the candidate pruning, the encoding of the pruned set, and
-    the integer-exact ADC ranking.  Memory-layer behavior stays pinned in
-    tests/test_quantization.py."""
-    from ..operators.quantization import pq_encode, pq_search, pq_train
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids, assignments = S.ivf_index(
-        emb, n_centroids=16, kmeans_iters=2, quantize=ANN_Q
-    )
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    # coarse probe: the queries' nprobe nearest LIST IDS (nprobe x |queries|
-    # rows — broadcast-tiny).  Candidate pruning happens on the assignments
-    # table, which is keyed by centroid_id, via a broadcast semi-join BEFORE
-    # anything touches the codes — the corpus side is never shuffled for
-    # pruning (the r2 version semi-joined full-corpus codes on vid, a
-    # big-side SortMergeJoin; same candidate set, wrong side shuffled).
-    probed_lists = (
-        S.ivf_probe_lists(centroids, queries_df, nprobe=4, quantize=ANN_Q)
-        .select("centroid_id").distinct()
-    )
-    cands = assignments.join(
-        F.broadcast(probed_lists), "centroid_id", "leftsemi"
-    )
-    cb = pq_train(emb, m=8, k=16, kmeans_iters=2, quantize=ANN_Q)
-    # encode only the pruned candidates: one groupBy over the survivors
-    codes = pq_encode(cands, cb, m=8, id_col="vid", vec_col="v",
-                      quantize=ANN_Q)
-    return pq_search(codes, cb, queries_df, topk=3, m=8, quantize=ANN_Q)
-
-
-
-
-@register(
-    "importance_resample",
-    oracle=f"""
-WITH w AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
-  FROM documents
-), s AS (
-  SELECT doc_id,
-         CAST(SUM(({DUCK_HASH.format("word")} % 17) - 8) AS BIGINT) AS score
-  FROM w GROUP BY doc_id
-), wt AS (
-  SELECT d.doc_id, d.lang,
-         CAST(LEAST(990000, GREATEST(10000, 500000 + s.score * 1000))
-              AS BIGINT) AS weight_ppm
-  FROM documents d JOIN s USING (doc_id)
-)
-SELECT doc_id, lang, weight_ppm
-FROM wt
-WHERE {DUCK_HASH.format("'resample:' || CAST(doc_id AS VARCHAR)")}
-        % 1000000 < weight_ppm
-""",
-)
-def importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-weighted importance resampling — the DCLM/FineWeb-style
-    curation move where each document's keep probability follows a model
-    score rather than a uniform coin.  The classifier score (the same
-    hashing-trick model quality_classifier ledgers, int64-exact) maps to an
-    integer keep weight in ppm, clamped to [1%, 99%] so no doc is
-    deterministically immortal or unsampleable; a doc survives iff the
-    salted hash of its id falls below its weight.  Entirely map-side: score,
-    weight, and verdict are projections — zero shuffle at any corpus size,
-    and re-runs / repartitioning cannot change the sample (hash, never
-    rand()).  Upsampling (weight > 1) composes by taking the hash mod k*1e6
-    and emitting floor + bernoulli-tail copies; the downsample path here is
-    the oracle-checked core."""
-    docs = load_table(spark, sf_dir, "documents")
-    score = T.linear_classifier_score(F.col("text"))
-    weight = F.least(
-        F.lit(990000),
-        F.greatest(F.lit(10000), F.lit(500000) + score * 1000),
-    ).cast("long")
-    keep_hash = spark_hash(
-        F.concat(F.lit("resample:"), F.col("doc_id").cast("string"))
-    ) % 1000000
-    return (
-        docs.select(
-            "doc_id", "lang", weight.alias("weight_ppm"),
-            keep_hash.alias("__h"),
-        )
-        .filter(F.col("__h") < F.col("weight_ppm"))
-        .drop("__h")
     )
 
 
@@ -1695,51 +989,4 @@ def zero_token_docs_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return toks.groupBy("doc_id").agg(
         F.count("tok").cast("long").alias("n_tokens"),
         (F.count("tok") == 0).alias("is_empty"),
-    )
-
-
-@register(
-    "lang_id_confusion",
-    oracle="""
-WITH g AS (
-  SELECT CASE WHEN CAST(len(list_filter(string_split(lower(text), ' '),
-              x -> list_contains(['the','a','of','and','to','in'], x)))
-              AS DOUBLE) / len(string_split(lower(text), ' ')) > 0.05
-         THEN 'en' ELSE 'und' END AS lang_guess,
-         lang AS lang_label
-  FROM documents
-)
-SELECT lang_label, lang_guess, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST((1000000 * COUNT(*)) //
-            SUM(COUNT(*)) OVER (PARTITION BY lang_label) AS BIGINT)
-         AS row_share_ppm
-FROM g GROUP BY lang_label, lang_guess
-""",
-)
-def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-evaluation primitive — the confusion matrix: the lang-id
-    heuristic's predictions crossed with the gold `lang` labels, counts
-    plus row-normalized shares in exact integer ppm (the diagonal share
-    IS per-class recall).  This is the eval table every classifier in
-    the curation stack reports against; computing it in-engine means the
-    10^12-doc eval never leaves the cluster.  Shape: one groupBy on the
-    (gold, predicted) pair — at most |labels|^2 keys, partial-combined
-    map-side — and the normalizing window runs over that bounded matrix.
-    The heuristic itself is the driver-green `lang_id` rule, so the
-    oracle replays prediction AND evaluation end to end."""
-    docs = load_table(spark, sf_dir, "documents")
-    g = T.with_lang_id(docs).select(
-        F.col("lang").alias("lang_label"), "lang_guess"
-    )
-    m = g.groupBy("lang_label", "lang_guess").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    return m.select(
-        "lang_label",
-        "lang_guess",
-        "n",
-        F.expr(
-            "CAST((1000000 * n) div"
-            " (sum(n) OVER (PARTITION BY lang_label)) AS BIGINT)"
-        ).alias("row_share_ppm"),
     )

@@ -1,9 +1,9 @@
-"""C1. Training-data pipeline queries: dedup, similarity, BPE, packing, probes.
+"""C1. Training-data pipeline queries: dedup, similarity, BPE, packing.
 
-Split out of plans/queries.py in round 6 — same registrations, same
-oracle pairing, same engine-parity rules (see the plans/queries.py
-module docstring); the @register calls execute when plans/queries.py
-imports this module.
+Only the queries the test suite checks by name stay registered here.
+Same engine-parity rules as every other registered query (see the
+plans/queries.py module docstring); the @register calls execute when
+plans/queries.py imports this module.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.tables import load_table
-from .registry import DUCK_HASH, MINHASH_PERMS, register
+from .registry import DUCK_HASH, register
 
 # ===========================================================================
 # C. training-data pipeline operators (dedup / similarity / text analysis)
@@ -21,44 +21,8 @@ from ..functions import text as T  # noqa: E402
 from ..operators import dedup as D  # noqa: E402
 from ..operators import similarity as S  # noqa: E402
 
-# DuckDB rendering of the shared shingle pipeline (word 3-grams, distinct,
-# reduced mod P) — documents always have >= 10 words so the short-text branch
-# of word_shingles never triggers at these SFs.
-_DUCK_SHINGLES = (
-    "list_distinct(list_transform(generate_series(1, len(w) - 2), "
-    "i -> (('0x' || substr(md5(array_to_string(w[i:i+2], ' ')), 1, 15))::bigint"
-    " % 2147483647)))"
-)
-
-_DUCK_SIG_TERMS = ", ".join(
-    f"list_min(list_transform(hs, h -> ({2 * i + 3} * h + {17 * i + 5}) % 2147483647))"
-    for i in range(MINHASH_PERMS)
-)
-
-_DUCK_SIGS_CTE = f"""
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-h AS (SELECT doc_id, {_DUCK_SHINGLES} AS hs FROM w),
-sigs AS (SELECT doc_id, [{_DUCK_SIG_TERMS}] AS sig FROM h),
-buckets AS (
-  SELECT doc_id, CAST(b AS INT) AS band,
-         ('0x' || substr(md5(array_to_string(
-             list_transform(sig[4*b+1:4*b+4], x -> CAST(x AS VARCHAR)), ',')),
-             1, 15))::bigint AS bucket
-  FROM sigs, generate_series(0, 3) t(b)
-)
-"""
-
-
-@register(
-    "dedup_exact",
-    oracle=f"""
-SELECT md5(text) AS content_hash,
-       MIN(doc_id) AS keeper, COUNT(*) - 1 AS n_dupes
-FROM documents GROUP BY 1
-""",
-)
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.exact_dedup(load_table(spark, sf_dir, "documents"))
+# DuckDB fragments shared with the headline dedup/cosine queries
+from .battery_headline import _DUCK_COS, _DUCK_SIGS_CTE  # noqa: E402
 
 
 @register(
@@ -99,33 +63,9 @@ def lsh_candidate_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.lsh_candidate_pairs(D.lsh_buckets(sigs))
 
 
-@register(
-    "ngram_jaccard_dedup",
-    oracle=_DUCK_SIGS_CTE + """
-, pairs AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM buckets l JOIN buckets r
-    ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-)
-SELECT p.a, p.b,
-       len(list_intersect(ha.hs, hb.hs)) AS n_common,
-       len(ha.hs) + len(hb.hs) - len(list_intersect(ha.hs, hb.hs)) AS n_union,
-       CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
-         / (len(ha.hs) + len(hb.hs) - len(list_intersect(ha.hs, hb.hs)))
-         AS jaccard
-FROM pairs p JOIN h ha ON p.a = ha.doc_id JOIN h hb ON p.b = hb.doc_id
-""",
-)
-def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return D.near_dup_pipeline(docs)
-
-
 # Recursive-CTE rendering of the verified near-dup component table,
-# ending in `comp(node, component)` — shared by `near_dup_components`
-# (driver-green since r4 with exactly this SQL inlined) and the two
-# survivor-policy queries below, so all three provably replay ONE graph
-# definition.
+# ending in `comp(node, component)` — the graph `leakage_safe_split`
+# assigns splits by.
 _DUCK_COMPONENTS_WITH = _DUCK_SIGS_CTE.replace(
     "WITH ", "WITH RECURSIVE ", 1
 ) + """
@@ -151,78 +91,6 @@ _DUCK_COMPONENTS_WITH = _DUCK_SIGS_CTE.replace(
   SELECT u AS node, least(u, min(v)) AS component FROM walk GROUP BY u
 )
 """
-
-
-@register(
-    "near_dup_components",
-    oracle=_DUCK_COMPONENTS_WITH + "SELECT node, component FROM comp",
-)
-def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the VERIFIED near-dup pair graph
-    (large-star/small-star min-label propagation, operators/dedup
-    ``connected_components``): (node, component-min) for every doc in a
-    duplicate cluster — the keep-one-per-component contract the curation
-    pipeline enforces.  The oracle replays the closure with a recursive CTE
-    (exact transitive reachability; feasible because it runs on the verified
-    EDGE list, never the corpus)."""
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(docs)
-    pairs = D.lsh_candidate_pairs(D.lsh_buckets(sigs))
-    verified = D.ngram_jaccard(docs, pairs).filter(F.col("jaccard") >= 0.8)
-    return D.connected_components(verified)
-
-
-@register(
-    "lsh_incremental_pairs",
-    oracle=_DUCK_SIGS_CTE + """
-SELECT DISTINCT least(l.doc_id, r.doc_id) AS a,
-       greatest(l.doc_id, r.doc_id) AS b
-FROM buckets l JOIN buckets r
-  ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id <> r.doc_id
-WHERE l.doc_id % 2 = 1
-""",
-)
-def lsh_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup (daily-crawl shape): candidates for a NEW batch
-    (odd doc ids) against the standing corpus index (even ids) — new x
-    corpus and new x new pairs only, never corpus x corpus, so daily cost
-    scales with the increment rather than re-pairing the whole corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    buckets = D.lsh_buckets(D.minhash_signatures(docs))
-    corpus_b = buckets.filter(F.col("doc_id") % 2 == 0)
-    new_b = buckets.filter(F.col("doc_id") % 2 == 1)
-    return D.lsh_incremental_candidate_pairs(new_b, corpus_b)
-
-
-@register(
-    "ngram_containment_dedup",
-    oracle=_DUCK_SIGS_CTE + """
-, pairs AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM buckets l JOIN buckets r
-    ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-)
-SELECT p.a, p.b,
-       len(list_intersect(ha.hs, hb.hs)) AS n_common,
-       CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE) / len(ha.hs)
-         AS containment_a_in_b,
-       CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE) / len(hb.hs)
-         AS containment_b_in_a
-FROM pairs p JOIN h ha ON p.a = ha.doc_id JOIN h hb ON p.b = hb.doc_id
-""",
-)
-def ngram_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric near-dup (doc-embedded-in-doc): containment = |A∩B|/|A|
-    over LSH candidates — symmetric Jaccard under-scores a small doc wrapped
-    in a larger one; training-data dedup wants both signals."""
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(docs)
-    # persist the candidate pairs: they feed the verify joins AND the
-    # candidate-id semi-join that prunes the shingle side (same shared-scan
-    # rule near_dup_pipeline documents — without it the LSH pipeline is
-    # recomputed three times)
-    pairs = D.lsh_candidate_pairs(D.lsh_buckets(sigs)).persist()
-    return D.ngram_containment(docs, pairs)
 
 
 _DUCK_SIMHASH_TERMS = " + ".join(
@@ -281,28 +149,6 @@ def simhash_hamming_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     block arithmetic, and the bit_count(xor) verify."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return D.simhash_hamming_pairs(D.simhash_signatures(docs))
-
-
-@register(
-    "doc_fingerprint",
-    oracle=f"""
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-h AS (SELECT doc_id, {_DUCK_SHINGLES} AS hs FROM w)
-SELECT doc_id,
-       array_to_string(list_transform((list_sort(hs))[1:4],
-                                      x -> CAST(x AS VARCHAR)), ',')
-         AS fingerprint
-FROM h
-""",
-)
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.array_join(
-            D.bottomk_fingerprint(F.col("text")).cast("array<string>"), ","
-        ).alias("fingerprint"),
-    )
 
 
 # shared winnowing CTE: positional 3-gram hashes -> packed rightmost-argmin
@@ -374,36 +220,6 @@ def winnowing_overlap_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic corpus has no mega-buckets)."""
     docs = load_table(spark, sf_dir, "documents")
     return D.winnowing_overlap_pairs(D.winnowing_fingerprints(docs))
-
-
-_DUCK_COS = """
-round(
-  list_sum(list_transform(generate_series(1, len(q.e)), i -> q.e[i] * v.e[i]))
-  / (sqrt(list_sum(list_transform(q.e, x -> x * x)))
-     * sqrt(list_sum(list_transform(v.e, x -> x * x)))), 6)
-"""
-
-
-@register(
-    "embedding_cosine_topk",
-    oracle=f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-q AS (SELECT * FROM v WHERE vec_id < 10),
-sims AS (
-  SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id, {_DUCK_COS} AS cos_sim
-  FROM q, v WHERE q.vec_id <> v.vec_id
-)
-SELECT query_id, neighbor_id, cos_sim, rank FROM (
-  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-  FROM sims
-) WHERE rank <= 3
-""",
-)
-def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return S.brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=3)
 
 
 @register(
@@ -550,35 +366,6 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "semantic_dedup_clusters",
-    oracle=_DUCK_NDUP_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
-    + f"""
-, verified AS (SELECT a, b FROM sims WHERE cos_sim >= {NDUP_THRESHOLD}),
-edges AS (
-  SELECT a AS u, b AS w FROM verified
-  UNION SELECT b, a FROM verified
-), walk AS (
-  SELECT u, w FROM edges
-  UNION
-  SELECT wk.u, e.w FROM walk wk JOIN edges e ON wk.w = e.u
-  WHERE e.w <> wk.u
-)
-SELECT u AS node, least(u, min(w)) AS component FROM walk GROUP BY u
-""",
-)
-def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic (embedding-space) duplicate CLUSTERS: the verified near-dup
-    pair graph from ``embedding_near_dup_pairs`` closed into connected
-    components (large-star/small-star), so semantic dedup can keep one doc
-    per cluster instead of greedily dropping pair-larger ids — same CC
-    operator the text-near-dup curation stage uses, same recursive-CTE
-    oracle shape, over the sign-LSH + exact-cosine edge list (never the
-    corpus)."""
-    verified = embedding_near_dup_pairs(spark, sf_dir).select("a", "b")
-    return D.connected_components(verified)
-
-
-@register(
     "lang_id",
     oracle="""
 SELECT doc_id,
@@ -594,395 +381,6 @@ def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return T.with_lang_id(docs).select(
         "doc_id", "lang_guess", F.col("lang").alias("lang_label")
-    )
-
-
-@register(
-    "quality_score",
-    oracle="""
-WITH t AS (
-  SELECT doc_id, text, string_split(text, ' ') AS w,
-         string_split(lower(text), ' ') AS lw
-  FROM documents
-), m AS (
-  SELECT doc_id,
-    CAST(len(list_filter(lw, x -> list_contains(['the','a','of','and','to','in'], x)))
-         AS DOUBLE) / len(lw) AS stop_ratio,
-    CAST(length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g'))
-         AS DOUBLE) / greatest(length(text), 1) AS punct,
-    CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) AS mwl
-  FROM t
-)
-SELECT doc_id, round(stop_ratio * 0.5 + (1.0 - punct) * 0.3
-       + (CASE WHEN mwl BETWEEN 3.0 AND 8.0 THEN 0.2 ELSE 0.0 END), 6) AS quality
-FROM m
-""",
-)
-def quality_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return T.with_quality_score(docs).select("doc_id", "quality")
-
-
-@register(
-    "quality_classifier",
-    oracle=f"""
-WITH w AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
-  FROM documents
-), s AS (
-  SELECT doc_id,
-         CAST(SUM(({DUCK_HASH.format("word")} % 17) - 8) AS BIGINT) AS score
-  FROM w GROUP BY doc_id
-)
-SELECT doc_id, score,
-       CASE WHEN score >= 0 THEN 'keep' ELSE 'cut' END AS verdict
-FROM s
-""",
-)
-def quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based quality filtering (functions/text.linear_classifier_score):
-    the fastText-shaped hashing-trick linear classifier of the CCNet /
-    GPT-3 recipes, as a STUB model (hash-derived integer weights) on the
-    real scale plumbing — the whole score is ONE map-side aggregate over
-    each doc's token array, pure JVM, zero shuffle, int64-exact in any
-    order, so the oracle replays it bit-for-bit via the shared md5 hash.
-    A learned model swaps the weight expression for a broadcast
-    weight-table join without changing the plan class."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        T.linear_classifier_score(F.col("text")).alias("score"),
-    ).withColumn(
-        "verdict",
-        F.when(F.col("score") >= 0, "keep").otherwise("cut"),
-    )
-
-
-@register(
-    "repetition_filters",
-    oracle="""
-WITH t AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
-), g AS (
-  SELECT doc_id, w,
-         list_transform(generate_series(1, greatest(len(w) - 1, 0)),
-                        i -> w[i] || ' ' || w[i + 1]) AS grams
-  FROM t
-)
-SELECT doc_id,
-       ROUND(1.0 - CAST(len(list_distinct(w)) AS DOUBLE)
-                   / greatest(len(w), 1), 6) AS dup_word_ratio,
-       ROUND(1.0 - CAST(list_sum(list_transform(list_distinct(grams),
-                                                x -> length(x))) AS DOUBLE)
-                   / greatest(list_sum(list_transform(grams,
-                                                      x -> length(x))), 1),
-             6) AS dup_bigram_ratio
-FROM g
-""",
-)
-def repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality filters: fraction of repeated word
-    occurrences and of characters covered by repeated bigrams — the standard
-    boilerplate/spam signals in training-data curation.  Pure JVM array ops,
-    exact integer counts divided in double."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.round(T.dup_word_ratio(F.col("text")), 6).alias("dup_word_ratio"),
-        F.round(T.dup_ngram_char_ratio(F.col("text"), 2), 6).alias(
-            "dup_bigram_ratio"
-        ),
-    )
-
-
-@register(
-    "boilerplate_strip",
-    oracle="""
-WITH d AS (
-  SELECT doc_id,
-         'home login menu' || chr(10)
-           || coalesce(array_to_string((string_split(text, ' '))[1:20], ' '), '')
-           || chr(10) || 'href:a href:b href:c related'
-           || chr(10)
-           -- coalesce: DuckDB array_to_string([]) is NULL, Spark's is ''
-           || coalesce(array_to_string((string_split(text, ' '))[21:40], ' '), '')
-           || chr(10) || 'copyright footer' AS page
-  FROM documents
-), b AS (
-  SELECT doc_id, list_filter(
-    string_split(page, chr(10)),
-    blk -> len(string_split(trim(blk), ' ')) >= 5
-       AND CAST(len(list_filter(string_split(trim(blk), ' '),
-                                w -> starts_with(w, 'href:'))) AS DOUBLE)
-           / len(string_split(trim(blk), ' ')) <= 0.5
-  ) AS kept
-  FROM d
-)
-SELECT doc_id, array_to_string(kept, chr(10)) AS content,
-       CAST(len(kept) AS INT) AS n_blocks
-FROM b
-""",
-)
-def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Main-content extraction (north-rule 'HTML boilerplate strip'):
-    readability-style block heuristics — too-short blocks (nav, footer) and
-    link-dense blocks (menus) dropped, content blocks kept in order.  Pages
-    synthesized deterministically (two content blocks wrapped in three
-    boilerplate blocks) so the DuckDB oracle replays the identical rules."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    nl = F.lit("\n")
-    page = F.concat(
-        F.lit("home login menu"), nl,
-        F.array_join(F.slice(words, 1, 20), " "), nl,
-        F.lit("href:a href:b href:c related"), nl,
-        F.array_join(F.slice(words, 21, 20), " "), nl,
-        F.lit("copyright footer"),
-    )
-    staged = docs.select("doc_id", T.strip_boilerplate(page).alias("content"))
-    return staged.select(
-        "doc_id",
-        "content",
-        F.size(F.split("content", "\n")).cast("int").alias("n_blocks"),
-    )
-
-
-def _pii_oracle_sql() -> str:
-    from ..functions.text import PII_EMAIL_RE, PII_IPV4_RE, PII_PHONE_RE
-
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         'contact user' || CAST(doc_id AS VARCHAR)
-           || '@mail.example.org at 10.' || CAST(doc_id % 256 AS VARCHAR)
-           || '.0.' || CAST(doc_id % 200 AS VARCHAR)
-           || ' or +1 (555) 01' || CAST(doc_id % 10 AS VARCHAR)
-           || '-2345 re: ' || text AS t
-  FROM documents WHERE doc_id < 200
-)
-SELECT doc_id,
-  regexp_replace(
-    regexp_replace(
-      regexp_replace(t, '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
-      '{PII_IPV4_RE}', '<IP>', 'g'),
-    '{PII_PHONE_RE}', '<PHONE>', 'g') AS redacted
-FROM d
-"""
-
-
-@register("pii_redaction", oracle=_pii_oracle_sql())
-def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub (functions/text.redact_pii): emails -> <EMAIL>, IPv4 ->
-    <IP>, phone-shaped runs -> <PHONE>, on text salted with synthetic PII
-    so every rule fires; the oracle replays the identical patterns."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    did = F.col("doc_id").cast("string")
-    t = F.concat(
-        F.lit("contact user"), did, F.lit("@mail.example.org at 10."),
-        (F.col("doc_id") % 256).cast("string"), F.lit(".0."),
-        (F.col("doc_id") % 200).cast("string"), F.lit(" or +1 (555) 01"),
-        (F.col("doc_id") % 10).cast("string"), F.lit("-2345 re: "),
-        F.col("text"),
-    )
-    return docs.select("doc_id", T.redact_pii(t).alias("redacted"))
-
-
-@register(
-    "curation_filter",
-    oracle="""
-WITH t AS (
-  SELECT doc_id, lang, text,
-         string_split(text, ' ') AS w,
-         string_split(lower(text), ' ') AS lw
-  FROM documents
-), m AS (
-  SELECT doc_id, lang,
-    len(w) AS n_words,
-    CAST(len(list_filter(lw, x -> list_contains(
-        ['the','a','of','and','to','in'], x))) AS DOUBLE) / len(lw)
-      AS stop_ratio,
-    1.0 - CAST(len(list_distinct(lw)) AS DOUBLE) / greatest(len(lw), 1)
-      AS dup_ratio
-  FROM t
-)
-SELECT doc_id, lang, CAST(n_words AS INT) AS n_words,
-       ROUND(stop_ratio, 6) AS stop_ratio, ROUND(dup_ratio, 6) AS dup_ratio,
-       (n_words BETWEEN 5 AND 100000
-        AND stop_ratio >= 0.01 AND dup_ratio <= 0.5) AS keep
-FROM m
-""",
-)
-def curation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed training-data curation decision (C4/Gopher shape): word
-    count band + stopword floor + repetition ceiling, evaluated in ONE
-    projection over one scan — at 100 TB the filter columns ride the same
-    pass that computes them, and the boolean partitions the corpus for a
-    split write.  Thresholds here are demonstrative; the point is the
-    compose-signals-then-decide plan shape."""
-    docs = load_table(spark, sf_dir, "documents")
-    lw = F.split(F.lower(F.col("text")), " ")
-    n_words = F.size(lw)
-    stop_ratio = (
-        F.size(F.filter(lw, lambda w: w.isin(*T.DEFAULT_STOPWORDS))).cast(
-            "double"
-        )
-        / n_words.cast("double")
-    )
-    dup_ratio = (
-        1.0
-        - F.size(F.array_distinct(lw)).cast("double")
-        / F.greatest(n_words, F.lit(1)).cast("double")
-    )
-    staged = docs.select(
-        "doc_id",
-        "lang",
-        n_words.alias("__n"),
-        stop_ratio.alias("__s"),
-        dup_ratio.alias("__d"),
-    )
-    return staged.select(
-        "doc_id",
-        "lang",
-        F.col("__n").cast("int").alias("n_words"),
-        F.round("__s", 6).alias("stop_ratio"),
-        F.round("__d", 6).alias("dup_ratio"),
-        (
-            F.col("__n").between(5, 100000)
-            & (F.col("__s") >= 0.01)
-            & (F.col("__d") <= 0.5)
-        ).alias("keep"),
-    )
-
-
-def _curation_survivors_oracle() -> str:
-    """Replay the ENTIRE curate() pipeline in DuckDB: quality gates -> PII
-    scrub -> exact dedup (min id per content hash) -> minhash/LSH candidate
-    pairs -> exact Jaccard verify -> connected components (recursive CTE)
-    keep-one-per-component -> deterministic split."""
-    from ..functions.text import PII_EMAIL_RE, PII_IPV4_RE, PII_PHONE_RE
-
-    lw = "string_split(lower(text), ' ')"
-    bucket = (
-        "('0x' || substr(md5(array_to_string("
-        "list_transform(sig[4*b+1:4*b+4], x -> CAST(x AS VARCHAR)), ',')),"
-        " 1, 15))::bigint"
-    )
-    jac = (
-        "CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)"
-        " / (len(ha.hs) + len(hb.hs) - len(list_intersect(ha.hs, hb.hs)))"
-    )
-    return f"""
-WITH RECURSIVE g1 AS (
-  SELECT doc_id, text,
-         len({lw}) AS nw,
-         CAST(len(list_filter({lw}, x -> list_contains(
-             ['the','a','of','and','to','in'], x))) AS DOUBLE) / len({lw})
-           AS stop_ratio,
-         1.0 - CAST(len(list_distinct({lw})) AS DOUBLE)
-             / greatest(len({lw}), 1) AS dup_ratio
-  FROM documents
-), gated AS (
-  SELECT doc_id, text FROM g1
-  WHERE nw BETWEEN 5 AND 100000 AND stop_ratio >= 0.01 AND dup_ratio <= 0.5
-), scrubbed AS (
-  SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(
-    text, '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
-          '{PII_IPV4_RE}', '<IP>', 'g'),
-          '{PII_PHONE_RE}', '<PHONE>', 'g') AS text
-  FROM gated
-), keep_exact AS (
-  SELECT MIN(doc_id) AS doc_id FROM scrubbed
-  GROUP BY md5(text)
-), exact AS (
-  SELECT s.doc_id, s.text FROM scrubbed s
-  JOIN keep_exact k ON s.doc_id = k.doc_id
-), w AS (SELECT doc_id, string_split(text, ' ') AS w FROM exact),
-h AS (SELECT doc_id, {_DUCK_SHINGLES} AS hs FROM w),
-sigs AS (SELECT doc_id, [{_DUCK_SIG_TERMS}] AS sig FROM h),
-buckets AS (
-  SELECT doc_id, CAST(b AS INT) AS band, {bucket} AS bucket
-  FROM sigs, generate_series(0, 3) t(b)
-), pairs AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM buckets l JOIN buckets r
-    ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-), verified AS (
-  SELECT p.a, p.b
-  FROM pairs p JOIN h ha ON p.a = ha.doc_id JOIN h hb ON p.b = hb.doc_id
-  WHERE {jac} >= 0.8
-), edges AS (
-  SELECT a AS u, b AS v2 FROM verified UNION SELECT b, a FROM verified
-), walk AS (
-  SELECT u, v2 FROM edges
-  UNION
-  SELECT wk.u, e.v2 FROM walk wk JOIN edges e ON wk.v2 = e.u
-  WHERE e.v2 <> wk.u
-), dupes AS (
-  SELECT u AS doc_id FROM walk GROUP BY u HAVING least(u, min(v2)) <> u
-), survivors AS (
-  SELECT doc_id FROM exact
-  WHERE doc_id NOT IN (SELECT doc_id FROM dupes)
-)
-SELECT doc_id,
-  CASE WHEN slot < 90 THEN 'train'
-       WHEN slot < 95 THEN 'val'
-       ELSE 'test' END AS split
-FROM (
-  SELECT doc_id,
-         {DUCK_HASH.format("'split:' || CAST(doc_id AS VARCHAR)")} % 100
-           AS slot
-  FROM survivors
-)
-"""
-
-
-@register("curation_survivors", oracle=_curation_survivors_oracle())
-def curation_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED curation pipeline end-to-end (plans/curation.curate):
-    quality gates -> PII scrub -> exact dedup -> LSH near-dup verify ->
-    connected-components keep-one-per-component -> deterministic split —
-    the oracle replays every stage including the CC closure (recursive
-    CTE), so the driver hash-checks the whole pipeline, not just its
-    pieces."""
-    from .curation import curate
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return curate(docs).select("doc_id", "split")
-
-
-@register(
-    "top_ngrams",
-    oracle="""
-WITH ws AS (SELECT string_split(text, ' ') AS w FROM documents),
-grams AS (
-  SELECT unnest(list_transform(
-    generate_series(1, len(w) - 2),
-    i -> array_to_string(w[i:i+2], ' ')
-  )) AS gram
-  FROM ws WHERE len(w) >= 3
-)
-SELECT gram, COUNT(*) AS n
-FROM grams GROUP BY gram
-ORDER BY n DESC, gram LIMIT 20
-""",
-)
-def top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level boilerplate mining: the top-20 most-repeated word
-    3-grams (occurrence counts, not per-doc distinct) — the discovery pass
-    that feeds a boilerplate strip list.  groupBy + orderBy/limit plans as
-    partial-agg + TakeOrderedAndProject: no global sort of the n-gram
-    table, each partition ships only its own top candidates."""
-    docs = load_table(spark, sf_dir, "documents")
-    grams = docs.filter(
-        F.size(F.split("text", " ")) >= 3
-    ).select(
-        F.explode(D.word_shingles(F.col("text"), 3)).alias("gram")
-    )
-    return (
-        grams.groupBy("gram")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.col("n").desc(), "gram")
-        .limit(20)
     )
 
 
@@ -1036,9 +434,9 @@ def _duck_bpe_with(n_merges: int) -> str:
     LEFT-TO-RIGHT NON-OVERLAPPING merge via gaps-and-islands (consecutive
     match starts form an island; keep even offsets — 'aaa' + (a,a) merges
     once), and a re-ranked rewrite.  All integer counts + string equality:
-    the replay is exact whatever the engine.  Shared by the
-    ``bpe_merges`` oracle (reads the per-round ``top{{r}}``s) and the
-    ``bpe_encode`` oracle (reads the final symbol table ``s{{N}}``)."""
+    the replay is exact whatever the engine.  The ``bpe_encode`` and
+    ``bpe_fertility_by_lang`` oracles read the final symbol table
+    ``s{{N}}``."""
     parts = ["""
 wc AS (
   SELECT w AS word, COUNT(*) AS n FROM (
@@ -1094,16 +492,6 @@ s{r + 1} AS MATERIALIZED (
     return "WITH " + ",".join(parts)
 
 
-def _duck_bpe_merges(n_merges: int) -> str:
-    """The learned merge-rule table: one row per round from the replay."""
-    finals = "\nUNION ALL ".join(
-        f"SELECT {r} AS rank, a AS lhs, b AS rhs, "
-        f"CAST(cnt AS BIGINT) AS cnt FROM top{r}"
-        for r in range(n_merges)
-    )
-    return _duck_bpe_with(n_merges) + finals + "\nORDER BY rank"
-
-
 def _duck_bpe_encode(n_merges: int) -> str:
     """Per-document tokenization under the learned vocabulary: each word
     type's final symbol sequence comes straight from the replay's
@@ -1134,25 +522,6 @@ GROUP BY d.doc_id"""
 
 
 BPE_MERGES = 6
-
-
-@register("bpe_merges", oracle=_duck_bpe_merges(BPE_MERGES))
-def bpe_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned BPE merge-rule table itself, driver-replayable: Spark
-    runs the distributed training loop (operators/bpe.bpe_train — word-type
-    collapse, per-round pair counts, greedy non-overlap rewrite, O(1)
-    driver rows per round) and the oracle re-derives every round's winning
-    pair and rewrite in pure SQL.  Complements ``bpe_pair_counts`` (the
-    round-1 discovery view) and the textbook differential in
-    tests/test_bpe.py."""
-    from ..operators import bpe as BP
-
-    docs = load_table(spark, sf_dir, "documents")
-    rules = BP.bpe_train(docs, n_merges=BPE_MERGES)
-    return spark.createDataFrame(
-        [(r, a, b, c) for r, a, b, c in rules],
-        "rank int, lhs string, rhs string, cnt bigint",
-    )
 
 
 @register("bpe_encode", oracle=_duck_bpe_encode(BPE_MERGES))
@@ -1238,37 +607,6 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "bpe_roundtrip",
-    oracle="""
-WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-words AS (
-  SELECT doc_id, unnest(w) AS word,
-         unnest(generate_series(1, len(w))) AS ord
-  FROM ws
-)
-SELECT doc_id, md5(string_agg(word, ' ' ORDER BY ord)) AS decoded_md5
-FROM words WHERE word <> '' GROUP BY doc_id
-""",
-)
-def bpe_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The detokenizer side (VERDICT r4 next #7): encode every document
-    with the learned vocabulary, then ``bpe_decode`` the token stream
-    back (operators/bpe.bpe_decode — merge-rank independent, the ``</w>``
-    marker carries the word boundary).  The driver-checked invariant is
-    decode(encode(text)) == normalized text: the oracle needs NO training
-    replay, just each doc's nonempty words re-joined — so a green row
-    hash-pins the entire encode+decode loop against plain tokenization."""
-    from ..operators import bpe as BP
-
-    docs = load_table(spark, sf_dir, "documents")
-    rules = BP.bpe_train(docs, n_merges=BPE_MERGES)
-    dec = BP.bpe_decode(BP.bpe_encode(docs, rules), out_col="decoded")
-    return dec.filter(F.col("decoded") != "").select(
-        "doc_id", F.md5("decoded").alias("decoded_md5")
-    )
-
-
 # r5 root-cause note (the r3/r4 driver-red on paragraph_dedup — and the
 # r4-reds on bpe_pair_counts / bpe_merges / shard_assembly): DuckDB promotes
 # integer SUM to HUGEINT (int128); a pandas/Arrow fetch renders that as
@@ -1282,8 +620,7 @@ def bpe_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generate_series words, GROUP BY (ord-1)/10 chunking with
 # string_agg(... ORDER BY ord), ROW_NUMBER first-occurrence ordered
 # (doc_id, pos) — the exact lexicographic struct-min the Spark side uses —
-# and string_agg(... ORDER BY pos) FILTER reassembly.  Kept as a module
-# constant so the r5 probe battery can wrap it (md5-compacted variants).
+# and string_agg(... ORDER BY pos) FILTER reassembly.
 _PARA_DEDUP_ORACLE = f"""
 WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 words AS (
@@ -1443,94 +780,6 @@ def cut_duplicate_passages_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "sequence_packing",
-    oracle=f"""
-WITH s AS (
-  SELECT doc_id,
-         {DUCK_HASH.format("CAST(doc_id AS VARCHAR)")} % 32 AS shard,
-         {DUCK_HASH.format("CAST(doc_id AS VARCHAR)")} AS h,
-         len(string_split(text, ' ')) AS n_tokens
-  FROM documents
-), o AS (
-  SELECT doc_id, shard, CAST(n_tokens AS BIGINT) AS n_tokens,
-         CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY h, doc_id
-                                  ROWS UNBOUNDED PRECEDING) - n_tokens
-              AS BIGINT) AS start_offset
-  FROM s
-)
-SELECT doc_id, shard, n_tokens, start_offset,
-       CAST(floor(start_offset / 512) AS BIGINT) AS bin_id
-FROM o
-""",
-)
-def sequence_packing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic training-sequence packing (operators/packing): shard
-    by the engine-agnostic doc hash, running token offsets per shard in
-    canonical order, bin = offset / seq_len — one shuffle, integer-exact,
-    replayed verbatim by the oracle's window."""
-    from ..operators.packing import pack_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pack_sequences(docs, seq_len=512, n_shards=32)
-
-
-@register(
-    "packing_efficiency",
-    oracle=f"""
-WITH s AS (
-  SELECT doc_id,
-         {DUCK_HASH.format("CAST(doc_id AS VARCHAR)")} % 32 AS shard,
-         len(string_split(text, ' ')) AS n_tokens
-  FROM documents
-), per AS (
-  SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-  FROM s GROUP BY shard
-)
-SELECT shard, n_docs, n_tokens,
-       CAST((n_tokens + 511) // 512 AS BIGINT) AS n_bins,
-       CAST(((n_tokens + 511) // 512) * 512 - n_tokens AS BIGINT)
-         AS waste_tokens,
-       CAST((1000000 * n_tokens) // (((n_tokens + 511) // 512) * 512)
-            AS BIGINT) AS fill_ppm
-FROM per
-""",
-)
-def packing_efficiency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The packing audit that rides with ``sequence_packing`` /
-    ``shard_assembly``: per shard, how many 512-token bins the contiguous
-    token stream fills, the padding tokens wasted in the final partial
-    bin, and the realized fill rate in exact ppm — the no-silent-caps
-    report a packing stage must publish (a skewed shard assignment or a
-    pathological doc-length mix shows up here as fill divergence across
-    shards before it costs a training run).  One partial-agg'd per-shard
-    sum; pure integer arithmetic mirrored by the oracle."""
-    from ..operators.packing import pack_sequences
-
-    idx = pack_sequences(
-        load_table(spark, sf_dir, "documents"), seq_len=512, n_shards=32
-    )
-    return (
-        idx.groupBy("shard")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .withColumn(
-            "n_bins", F.expr("(n_tokens + 511) div 512").cast("long")
-        )
-        .withColumn(
-            "waste_tokens",
-            (F.col("n_bins") * 512 - F.col("n_tokens")).cast("long"),
-        )
-        .withColumn(
-            "fill_ppm",
-            F.expr("(1000000 * n_tokens) div (n_bins * 512)").cast("long"),
-        )
-    )
-
-
-@register(
     "chunk_documents",
     oracle="""
 WITH t AS (
@@ -1599,334 +848,6 @@ def shard_assembly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return assemble_shards(docs, seq_len=512, n_shards=32)
-
-
-# --------------------------------------------------------------------------
-# r5 driver-divergence probe battery (VERDICT r4 "Next round" #1).
-#
-# The four r4 driver-red queries (bpe_pair_counts, bpe_merges,
-# shard_assembly, paragraph_dedup) were local-green at two scale factors
-# under the driver-identical gate, so the divergence is environmental, not
-# algorithmic.  The r5 root cause (found by typing every oracle's output
-# columns): all four — and ONLY those four — emitted a DuckDB HUGEINT
-# output column (integer SUM promotes to int128; a pandas/Arrow fetch turns
-# that into float64/decimal128 and the value hash diverges).  The fix is
-# CAST ... AS BIGINT on those outputs; these probes bisect each red
-# pipeline stage-by-stage anyway, so that IF any red row survives the cast
-# fix, the first red probe in CORRECTNESS_r05.json names the divergent
-# construct outright (tokenization vs char-split vs hashing vs chunk
-# content vs first-occurrence choice vs reassembly vs long-string compare
-# vs driver value normalization).  Every probe is green-expected, tiny,
-# and carries a fully-cast oracle.
-# --------------------------------------------------------------------------
-
-
-@register(
-    "probe_literal_specials",
-    oracle="""
-SELECT CAST(1 AS BIGINT) AS k,
-       '<|eod|>' AS sep,
-       'a|b,c d' AS mix,
-       chr(9) || 'tab' AS tabbed,
-       'q''s "x"' AS quoted
-""",
-)
-def probe_literal_specials(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-normalization control: one constant row whose strings carry
-    every character class the real outputs embed (the '<|eod|>' shard
-    separator, pipes/commas/spaces, a tab, quotes).  If THIS is red, the
-    driver's value normalization — not any engine — mangles specials."""
-    return spark.range(1).select(
-        F.lit(1).cast("long").alias("k"),
-        F.lit("<|eod|>").alias("sep"),
-        F.lit("a|b,c d").alias("mix"),
-        F.lit("\ttab").alias("tabbed"),
-        F.lit('q\'s "x"').alias("quoted"),
-    )
-
-
-@register(
-    "probe_corpus_sums",
-    oracle="""
-SELECT CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-       COUNT(*) AS n_docs
-FROM documents
-""",
-)
-def probe_corpus_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-sum arithmetic control (CAST AS BIGINT on the oracle side,
-    long on the Spark side): one row, no text.  Red here would mean even
-    cast integer aggregates diverge — i.e. the problem is arithmetic or
-    normalization, not strings."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.agg(
-        F.sum("n_chars").cast("long").alias("total_chars"),
-        F.count("*").alias("n_docs"),
-    )
-
-
-@register(
-    "probe_word_tokens",
-    oracle="""
-WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-words AS (
-  SELECT doc_id, unnest(w) AS word,
-         unnest(generate_series(1, len(w))) AS ord
-  FROM ws
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       CAST(SUM(CASE WHEN word = '' THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_empty
-FROM words GROUP BY doc_id
-""",
-)
-def probe_word_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage 1 of every red pipeline: whitespace tokenization parity,
-    including empty-token behavior (trailing/duplicate separators are the
-    classic split() version skew).  No text in the output."""
-    docs = load_table(spark, sf_dir, "documents")
-    ws = F.split(F.col("text"), " ")
-    return docs.select(
-        "doc_id",
-        F.size(ws).cast("long").alias("n_tokens"),
-        F.size(F.filter(ws, lambda w: w == F.lit(""))).cast("long")
-        .alias("n_empty"),
-    )
-
-
-@register(
-    "probe_char_split",
-    oracle="""
-WITH wc AS (
-  SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS n FROM (
-    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-  ) WHERE w <> '' GROUP BY w
-), top AS (
-  SELECT word, n FROM wc ORDER BY n DESC, word LIMIT 20
-), pos AS (
-  SELECT word, n, unnest(generate_series(1, length(word))) AS i FROM top
-)
-SELECT word, n, CAST(length(word) + 1 AS BIGINT) AS n_syms,
-       string_agg(substr(word, i, 1), '|' ORDER BY i) || '|</w>' AS syms
-FROM pos GROUP BY word, n
-""",
-)
-def probe_char_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage 2 of the BPE pipeline: the character split itself (Spark
-    ``split(word, '')`` vs oracle per-position ``substr``) on the 20 most
-    frequent words, symbols joined visibly.  Red here = the empty-pattern
-    regex split disagrees at the driver (code-unit vs code-point or
-    trailing-empty skew) and word_symbol_table must move to a
-    substring-based expansion."""
-    from ..operators import bpe as BP
-
-    docs = load_table(spark, sf_dir, "documents")
-    top = (
-        BP.word_symbol_table(docs)
-        .orderBy(F.col("n").desc(), "word")
-        .limit(20)
-    )
-    return top.select(
-        "word",
-        "n",
-        F.size("syms").cast("long").alias("n_syms"),
-        F.array_join("syms", "|").alias("syms"),
-    )
-
-
-@register(
-    "probe_chunk_hash",
-    oracle=f"""
-WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w
-            FROM documents WHERE doc_id % 7 = 0),
-words AS (
-  SELECT doc_id, unnest(w) AS word,
-         unnest(generate_series(1, len(w))) AS ord
-  FROM ws
-), chunks AS (
-  SELECT doc_id, CAST(floor((ord - 1) / 10.0) AS INT) AS pos,
-         string_agg(word, ' ' ORDER BY ord) AS chunk
-  FROM words GROUP BY doc_id, CAST(floor((ord - 1) / 10.0) AS INT)
-)
-SELECT doc_id, pos, md5(chunk) AS h FROM chunks
-""",
-)
-def probe_chunk_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage 2 of paragraph_dedup: chunk CONTENT parity, md5-compacted
-    (doc_id, pos, h) on a 1/7th doc sample — separates 'the chunk text
-    differs' from 'the aggregation construct differs'."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 7 == 0
-    )
-    return D.paragraph_chunks(docs).select("doc_id", "pos", "h")
-
-
-@register(
-    "probe_first_occurrence",
-    oracle=f"""
-WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-words AS (
-  SELECT doc_id, unnest(w) AS word,
-         unnest(generate_series(1, len(w))) AS ord
-  FROM ws
-), chunks AS (
-  SELECT doc_id, CAST(floor((ord - 1) / 10.0) AS INT) AS pos,
-         string_agg(word, ' ' ORDER BY ord) AS chunk
-  FROM words GROUP BY doc_id, CAST(floor((ord - 1) / 10.0) AS INT)
-), hh AS (
-  SELECT doc_id, pos, md5(chunk) AS h FROM chunks
-), rk AS (
-  SELECT doc_id, pos, h,
-         ROW_NUMBER() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
-  FROM hh
-)
-SELECT h, doc_id AS first_doc, pos AS first_pos FROM rk WHERE rn = 1
-""",
-)
-def probe_first_occurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage 3 of paragraph_dedup: the keep-first choice alone — Spark's
-    lexicographic min(struct(doc_id, pos)) vs the oracle's ROW_NUMBER
-    ordered (doc_id, pos).  No chunk text in the output."""
-    docs = load_table(spark, sf_dir, "documents")
-    chunks = D.paragraph_chunks(docs)
-    return (
-        chunks.groupBy("h")
-        .agg(F.min(F.struct("doc_id", "pos")).alias("f"))
-        .select(
-            "h",
-            F.col("f.doc_id").alias("first_doc"),
-            F.col("f.pos").alias("first_pos"),
-        )
-    )
-
-
-@register(
-    "probe_para_reassembly",
-    oracle=f"""
-SELECT doc_id, md5(text) AS text_md5, n_kept, n_total
-FROM ({_PARA_DEDUP_ORACLE})
-""",
-)
-def probe_para_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage 4 of paragraph_dedup: the FULL pipeline with the reassembled
-    text md5-compacted.  Red here with probe_chunk_hash green = the
-    ordered-reassembly construct (array_sort/collect_list vs string_agg
-    ORDER BY) diverges; green here with paragraph_dedup red = only the
-    verbatim long-string compare diverges at the driver."""
-    docs = load_table(spark, sf_dir, "documents")
-    out = D.paragraph_dedup(docs)
-    return out.select(
-        "doc_id", F.md5("text").alias("text_md5"), "n_kept", "n_total"
-    )
-
-
-@register(
-    "probe_packing_order",
-    oracle=f"""
-WITH s AS (
-  SELECT doc_id,
-         {DUCK_HASH.format("CAST(doc_id AS VARCHAR)")} % 32 AS shard,
-         {DUCK_HASH.format("CAST(doc_id AS VARCHAR)")} AS h,
-         len(string_split(text, ' ')) AS n_tokens
-  FROM documents
-), o AS (
-  SELECT doc_id, shard,
-         CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY h, doc_id
-                                  ROWS UNBOUNDED PRECEDING) - n_tokens
-              AS BIGINT) AS start_offset
-  FROM s
-)
-SELECT shard, CAST(floor(start_offset / 512) AS BIGINT) AS bin_id,
-       arg_min(doc_id, start_offset) AS first_doc,
-       arg_max(doc_id, start_offset) AS last_doc,
-       COUNT(*) AS n_docs
-FROM o GROUP BY shard, CAST(floor(start_offset / 512) AS BIGINT)
-""",
-)
-def probe_packing_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stages 1-3 of shard_assembly: shard hashing, canonical (h, doc_id)
-    ordering and bin arithmetic — everything EXCEPT the text payload.
-    Red here = the packing index itself diverges; green here with
-    shard_assembly red = only the concatenated payload does."""
-    from ..operators.packing import pack_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    idx = pack_sequences(docs, seq_len=512, n_shards=32)
-    return idx.groupBy("shard", "bin_id").agg(
-        F.min_by("doc_id", "start_offset").alias("first_doc"),
-        F.max_by("doc_id", "start_offset").alias("last_doc"),
-        F.count("*").alias("n_docs"),
-    )
-
-
-@register(
-    "probe_shard_payload_hash",
-    oracle=f"""
-SELECT shard, bin_id, md5(shard_text) AS payload_md5, n_docs, n_tokens
-FROM ({_SHARD_ASSEMBLY_ORACLE})
-""",
-)
-def probe_shard_payload_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage 4 of shard_assembly: the full payload, md5-compacted.  Green
-    here with shard_assembly red = the driver's verbatim compare of very
-    long strings is the divergence, not the assembly."""
-    from ..operators.packing import assemble_shards
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = assemble_shards(docs, seq_len=512, n_shards=32)
-    return out.select(
-        "shard",
-        "bin_id",
-        F.md5("shard_text").alias("payload_md5"),
-        "n_docs",
-        "n_tokens",
-    )
-
-
-
-
-@register(
-    "dedup_keep_best",
-    oracle=_DUCK_COMPONENTS_WITH + f"""
-, scored AS (
-  SELECT doc_id,
-         CAST(SUM(({DUCK_HASH.format("word")} % 17) - 8) AS BIGINT) AS score
-  FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
-        FROM documents) w
-  GROUP BY doc_id
-), members AS (
-  SELECT c.component, c.node, s.score,
-         ROW_NUMBER() OVER (PARTITION BY c.component
-                            ORDER BY s.score DESC, c.node ASC) AS rk
-  FROM comp c JOIN scored s ON c.node = s.doc_id
-)
-SELECT component,
-       MAX(CASE WHEN rk = 1 THEN node END) AS kept_doc,
-       MAX(CASE WHEN rk = 1 THEN score END) AS kept_score,
-       CAST(COUNT(*) AS BIGINT) AS n_members
-FROM members GROUP BY component
-""",
-)
-def dedup_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware near-dup survivor selection
-    (operators/dedup.keep_best_per_component): within each verified
-    near-dup component keep the member with the highest
-    hashing-trick classifier score (int64-exact, so the argmax is
-    engine-reproducible), ties to the smaller id — the CCNet-style
-    "drop the worse copy" policy, vs paragraph_dedup's first-occurrence
-    keep.  Graph = the same minhash->LSH->Jaccard>=0.8 pipeline the
-    driver-green near_dup_components row pins; the oracle replays the
-    shared recursive-CTE component table plus the classifier sum.
-    Scale shape: the window runs over component-member groups only
-    (bounded by the LSH giant-bucket caps), never the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(docs)
-    pairs = D.lsh_candidate_pairs(D.lsh_buckets(sigs))
-    verified = D.ngram_jaccard(docs, pairs).filter(F.col("jaccard") >= 0.8)
-    comps = D.connected_components(verified)
-    return D.keep_best_per_component(
-        docs, comps, T.linear_classifier_score(F.col("text"))
-    )
 
 
 @register(

@@ -1,17 +1,18 @@
-"""A. Flagship extraction queries: the kernel itself, oracle-checked end to end.
+"""Extraction queries: the kernel, its metrics, triples, TTL and the
+explorer path, each oracle-checked end to end.
 
-Split out of plans/queries.py in round 6 — same registrations, same
-oracle pairing, same engine-parity rules (see the plans/queries.py
-module docstring); the @register calls execute when plans/queries.py
-imports this module.
+Same engine-parity rules as every other registered query (see the
+plans/queries.py module docstring); the @register calls execute when
+plans/queries.py imports this module.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.hashing import hash60
 from ..sources.tables import load_table, synthesize_docs_from_testdata
-from .registry import DUCK_HASH, register, spark_hash
+from .registry import DUCK_HASH, register
 
 # ===========================================================================
 # A. flagship extraction (the kernel itself, oracle-checked end to end)
@@ -495,9 +496,8 @@ def extract_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "header_inventory",
-    # version-robust construct only (the r3 paragraph_dedup incident):
-    # top-3 examples via a ROW_NUMBER window + string_agg ORDER BY, not
-    # list_sort + list-slice
+    # version-robust construct only: top-3 examples via a ROW_NUMBER window
+    # + string_agg ORDER BY, not list_sort + list-slice
     oracle="""
 WITH hx AS (
   SELECT h.header, 'doc_' || CAST(d.doc_id AS VARCHAR) AS name
@@ -569,9 +569,9 @@ def _triples_df(
     out, _ = extract_pipeline(docs, num_partitions=32, prefilter=False, spread="coalesce")
     # emit_triples fans the extraction out into four consumers (tables,
     # cells, row triples, cell triples); without the persist the kernel
-    # stage re-executes once per consumer (4x MapInArrow in the audit —
-    # scripts/scale_audit.py).  Production writes the parse to a table and
-    # branches from it (write-then-branch); persist is the query-surface
+    # stage re-executes once per consumer (a plan audit counted 4
+    # MapInArrow nodes without it).  Production writes the parse to a table
+    # and branches from it (write-then-branch); persist is the query-surface
     # equivalent.
     out = out.persist()
     rules = spark.createDataFrame(
@@ -649,7 +649,7 @@ def emit_triples_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.slice(F.split("text", " "), 1, 6)).alias("entity")
         )
         .distinct()
-        .filter(spark_hash(F.col("entity")) % 4 == 0)
+        .filter(hash60(F.col("entity")) % 4 == 0)
     )
     return _triples_df(spark, sf_dir, entities=ents)
 
@@ -762,3 +762,179 @@ def ttl_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ttl_lines(_triples_df(spark, sf_dir))
 
 
+# ===========================================================================
+# explorer path (plans/explorer.py sinks and lookups)
+# ===========================================================================
+
+
+@register(
+    "settings_inventory",
+    oracle="""
+WITH d AS (
+  SELECT 'doc_' || CAST(doc_id AS VARCHAR) AS doc_id,
+         'Profile ' || lang AS section
+  FROM documents
+), sh AS (
+  SELECT section, h.header, doc_id
+  FROM d, (SELECT UNNEST(['Idx', 'Word']) AS header) h
+), rk AS (
+  SELECT section, header, doc_id,
+         ROW_NUMBER() OVER (PARTITION BY section, header
+                            ORDER BY doc_id) AS rn
+  FROM sh
+), ex AS (
+  SELECT section, header,
+         string_agg(doc_id, ',' ORDER BY doc_id) AS examples
+  FROM rk WHERE rn <= 3 GROUP BY section, header
+)
+SELECT rk.section, rk.header, COUNT(*) AS n_tables, ex.examples,
+       CASE WHEN rk.header = 'Word' THEN 'dbo:word' ELSE '' END AS property
+FROM rk JOIN ex ON rk.section = ex.section AND rk.header = ex.header
+GROUP BY rk.section, rk.header, ex.examples
+""",
+)
+def settings_inventory_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S6/A5/A6/O4/J4: the full pyDomainExplorer inventory path — sections x
+    headers with <=3 example pages and ontology-prefilled properties
+    (plans/explorer.py); 'Idx' has no ontology label, so its property is the
+    blank the user fills in."""
+    from .explorer import settings_inventory
+    from .extract import extract_pipeline
+
+    docs = synthesize_docs_from_testdata(spark, sf_dir)
+    out, _ = extract_pipeline(docs, num_partitions=32, prefilter=False, spread="coalesce")
+    # table_inventory joins the sections and headers branches of the same
+    # extraction — persist so the kernel stage runs once, not per branch
+    out = out.persist()
+    ontology = spark.createDataFrame(
+        [("word", "dbo:word"), ("unused", "dbo:unused")], ["label", "property"]
+    )
+    # serialize the examples array so the driver canonicalizer can hash it
+    return settings_inventory(out, ontology).withColumn(
+        "examples", F.array_join("examples", ",")
+    )
+
+
+@register(
+    "section_fuzzy_merge",
+    oracle="""
+WITH sections AS (
+  SELECT DISTINCT p_type AS section FROM part
+  UNION
+  SELECT DISTINCT split_part(p_type, ' ', 1) FROM part
+),
+pairs AS (
+  SELECT s.section, t.section AS candidate
+  FROM sections s JOIN sections t
+    ON s.section LIKE '%' || t.section || '%'
+)
+SELECT section, MIN(candidate ORDER BY length(candidate), candidate) AS group_key
+FROM pairs GROUP BY section
+""",
+)
+def section_fuzzy_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A6: the explorer's substring-based section merge ('College' absorbs
+    'College statistics', pyDomainExplorer.py:119-139) — rebuilt
+    order-independently as a self-join on substring containment with a
+    deterministic canonical key (shortest contained section).  The section
+    vocabulary is tiny (it is GROUPed output), so the self-join broadcasts."""
+    part = load_table(spark, sf_dir, "part")
+    sections = (
+        part.select(F.col("p_type").alias("section"))
+        .union(part.select(F.split("p_type", " ")[0].alias("section")))
+        .distinct()
+    )
+    cand = sections.select(F.col("section").alias("candidate"))
+    pairs = sections.join(
+        F.broadcast(cand), F.col("section").contains(F.col("candidate"))
+    )
+    return pairs.groupBy("section").agg(
+        F.expr(
+            "min_by(candidate, struct(length(candidate), candidate))"
+        ).alias("group_key")
+    )
+
+
+@register(
+    "ontology_label_probe",
+    oracle="""
+WITH ontology AS (
+  SELECT DISTINCT lower(n_name) AS label,
+         'dbo:' || replace(lower(n_name), ' ', '_') AS property
+  FROM nation
+)
+SELECT COALESCE(o.property, 'NO_PROPERTY') AS property, COUNT(*) AS n
+FROM customer c
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+LEFT JOIN ontology o ON lower(n.n_name) = o.label AND n.n_nationkey % 2 = 0
+GROUP BY 1
+""",
+)
+def ontology_label_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J4: the explorer's DBpedia-ontology label lookup
+    (pyDomainExplorer.py:206-230) as a broadcast left join against an
+    ontology(label -> property) table; misses become the settings-file
+    blanks the user fills in."""
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    ontology = nation.select(
+        F.lower("n_name").alias("label"),
+        F.concat(
+            F.lit("dbo:"), F.replace(F.lower("n_name"), F.lit(" "), F.lit("_"))
+        ).alias("property"),
+    ).distinct()
+    return (
+        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(
+            F.broadcast(ontology),
+            (F.lower("n_name") == F.col("label"))
+            & (F.col("n_nationkey") % 2 == 0),
+            "left",
+        )
+        .select(F.coalesce("property", F.lit("NO_PROPERTY")).alias("property"))
+        .groupBy("property")
+        .agg(F.count("*").alias("n"))
+    )
+
+
+@register(
+    "resource_list",
+    oracle="""
+WITH u AS (
+  SELECT CASE
+           WHEN p_partkey % 3 = 0
+             THEN 'http://dbpedia.org/resource/' || replace(p_name, ' ', '_')
+           WHEN p_partkey % 3 = 1
+             THEN 'http://dbpedia.org/ontology/' || replace(p_name, ' ', '_')
+           ELSE 'http://resourceful.example/' || replace(p_name, ' ', '_')
+         END AS uri
+  FROM part WHERE p_partkey < 300
+), parts AS (
+  SELECT uri, string_split(uri, '/') AS p FROM u WHERE contains(uri, 'resource')
+)
+SELECT p[list_position(p, 'resource') + 1] AS line
+FROM parts WHERE list_position(p, 'resource') > 0
+""",
+)
+def resource_list(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S7: the Selector's resource-list sink content (Selector.py:80-124) —
+    URIs with an exact 'resource' path segment reduced to the name after it;
+    'ontology' URIs and URIs merely CONTAINING 'resource' (ValueError ->
+    skipped in the reference) are dropped."""
+    from .explorer import resource_list_lines
+
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") < 300)
+    name = F.replace("p_name", F.lit(" "), F.lit("_"))
+    uris = p.select(
+        F.when(
+            F.col("p_partkey") % 3 == 0,
+            F.concat(F.lit("http://dbpedia.org/resource/"), name),
+        )
+        .when(
+            F.col("p_partkey") % 3 == 1,
+            F.concat(F.lit("http://dbpedia.org/ontology/"), name),
+        )
+        .otherwise(F.concat(F.lit("http://resourceful.example/"), name))
+        .alias("uri")
+    )
+    return resource_list_lines(uris)

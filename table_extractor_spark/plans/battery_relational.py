@@ -1,114 +1,21 @@
 """B. Core relational operator queries over the TPC-H-ish tables.
 
-Split out of plans/queries.py in round 6 — same registrations, same
-oracle pairing, same engine-parity rules (see the plans/queries.py
-module docstring); the @register calls execute when plans/queries.py
-imports this module.
+Only the queries the test suite checks by name stay registered here.
+Same engine-parity rules as every other registered query (see the
+plans/queries.py module docstring); the @register calls execute when
+plans/queries.py imports this module.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources.tables import load_table, synthesize_docs_from_testdata
-from .registry import DUCK_HASH, register
+from ..sources.tables import load_table
+from .registry import register
 
 # ===========================================================================
 # B. core relational operators over the TPC-H-ish tables
 # ===========================================================================
-
-
-@register(
-    "settings_inventory",
-    oracle="""
-WITH d AS (
-  SELECT 'doc_' || CAST(doc_id AS VARCHAR) AS doc_id,
-         'Profile ' || lang AS section
-  FROM documents
-), sh AS (
-  SELECT section, h.header, doc_id
-  FROM d, (SELECT UNNEST(['Idx', 'Word']) AS header) h
-), rk AS (
-  SELECT section, header, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY section, header
-                            ORDER BY doc_id) AS rn
-  FROM sh
-), ex AS (
-  SELECT section, header,
-         string_agg(doc_id, ',' ORDER BY doc_id) AS examples
-  FROM rk WHERE rn <= 3 GROUP BY section, header
-)
-SELECT rk.section, rk.header, COUNT(*) AS n_tables, ex.examples,
-       CASE WHEN rk.header = 'Word' THEN 'dbo:word' ELSE '' END AS property
-FROM rk JOIN ex ON rk.section = ex.section AND rk.header = ex.header
-GROUP BY rk.section, rk.header, ex.examples
-""",
-)
-def settings_inventory_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6/A5/A6/O4/J4: the full pyDomainExplorer inventory path — sections x
-    headers with <=3 example pages and ontology-prefilled properties
-    (plans/explorer.py); 'Idx' has no ontology label, so its property is the
-    blank the user fills in."""
-    from .explorer import settings_inventory
-    from .extract import extract_pipeline
-
-    docs = synthesize_docs_from_testdata(spark, sf_dir)
-    out, _ = extract_pipeline(docs, num_partitions=32, prefilter=False, spread="coalesce")
-    # table_inventory joins the sections and headers branches of the same
-    # extraction — persist so the kernel stage runs once, not per branch
-    out = out.persist()
-    ontology = spark.createDataFrame(
-        [("word", "dbo:word"), ("unused", "dbo:unused")], ["label", "property"]
-    )
-    # serialize the examples array so the driver canonicalizer can hash it
-    return settings_inventory(out, ontology).withColumn(
-        "examples", F.array_join("examples", ",")
-    )
-
-
-@register(
-    "q1_pricing_summary",
-    oracle="""
-SELECT l_returnflag, l_linestatus,
-       ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS sum_qty,
-       ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS sum_base_price,
-       ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-           * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS sum_disc_value,
-       COUNT(*) AS count_order,
-       ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-             / COUNT(*), 6) AS avg_qty
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""",
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship relational aggregate (TPC-H Q1 shape): map-side partial aggs,
-    two-key groupBy, decimal-exact sums (A1/A2 pattern at warehouse scale)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            # sums accumulate DECIMAL-exact; the returned columns are rounded
-            # doubles so Spark and DuckDB stringify identically for the hash
-            F.round(F.sum(dec("l_quantity")).cast("double"), 2).alias("sum_qty"),
-            F.round(F.sum(dec("l_extendedprice")).cast("double"), 2).alias(
-                "sum_base_price"
-            ),
-            F.round(
-                F.sum(dec("l_extendedprice") * dec("l_discount")).cast("double"), 2
-            ).alias("sum_disc_value"),
-            F.count("*").alias("count_order"),
-            F.round(
-                F.sum(dec("l_quantity")).cast("double") / F.count("*"), 6
-            ).alias("avg_qty"),
-        )
-    )
 
 
 @register(
@@ -341,61 +248,6 @@ def rollup_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "window_moving_avg",
-    oracle="""
-SELECT event_id, user_id,
-       ROUND(CAST(AVG(CAST(value AS DECIMAL(18,2)))
-         OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS DOUBLE), 6)
-         AS mavg
-FROM events
-""",
-)
-def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-frame moving average: a ROWS frame keeps the window operator
-    streaming (constant memory per partition) — never an unbounded RANGE
-    frame where a bounded one answers the question."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-3, Window.currentRow)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(
-            F.avg(F.col("value").cast("decimal(18,2)")).over(w).cast("double"),
-            6,
-        ).alias("mavg"),
-    )
-
-
-@register(
-    "percentile_summary",
-    oracle="""
-SELECT event_type,
-       ROUND(quantile_cont(CAST(value AS DOUBLE), 0.5), 6) AS p50,
-       ROUND(quantile_cont(CAST(value AS DOUBLE), 0.9), 6) AS p90,
-       ROUND(quantile_cont(CAST(value AS DOUBLE), 0.99), 6) AS p99
-FROM events GROUP BY event_type
-""",
-)
-def percentile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact linear-interpolation percentiles per group.  Exact percentile
-    needs the group's values sorted, so it is the right tool up to groups
-    that fit an executor; beyond that switch to approx_percentile (t-digest,
-    mergeable map-side) — pinned separately in pytest because its sketch is
-    engine-specific and can never hash-match a DuckDB oracle."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(CAST(value AS DOUBLE), 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(CAST(value AS DOUBLE), 0.9)"), 6).alias("p90"),
-        F.round(F.expr("percentile(CAST(value AS DOUBLE), 0.99)"), 6).alias("p99"),
-    )
-
-
-@register(
     "windowed_event_counts",
     oracle="""
 SELECT epoch_us(time_bucket(INTERVAL '10 minutes', ts)) AS window_start_us,
@@ -417,91 +269,6 @@ def windowed_event_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts", F.col("ts").cast("timestamp")
     )
     return windowed_event_counts(ev)
-
-
-@register(
-    "time_rollup_daily",
-    oracle="""
-SELECT epoch_us(time_bucket(INTERVAL '1 day', ts)) AS bucket_start_us,
-       event_type, COUNT(*) AS n,
-       ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS sum_value
-FROM events GROUP BY 1, 2
-""",
-)
-def time_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The continuous-aggregate rollup view (operators/rollup_maintenance)
-    computed in batch; the incremental-merge path (N increments == full
-    recompute, untouched partitions byte-stable) is pinned in
-    tests/test_rollup_maintenance.py."""
-    from ..operators.rollup_maintenance import rollup_increment
-
-    ev = load_table(spark, sf_dir, "events")
-    r = rollup_increment(ev, "1 day")
-    return r.select(
-        "bucket_start_us",
-        "event_type",
-        "n",
-        F.round(F.col("sum_value").cast("double"), 2).alias("sum_value"),
-    )
-
-
-@register(
-    "full_outer_reconciliation",
-    oracle="""
-WITH o AS (
-  SELECT o_orderkey AS k,
-         ROUND(CAST(o_totalprice AS DOUBLE), 2) AS total
-  FROM orders WHERE o_orderkey < 2000
-), l AS (
-  SELECT l_orderkey AS k,
-         ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2)
-           AS line_sum
-  FROM lineitem WHERE l_orderkey < 1500 GROUP BY l_orderkey
-)
-SELECT coalesce(o.k, l.k) AS orderkey, o.total, l.line_sum,
-       CASE WHEN o.k IS NULL THEN 'lines_without_order'
-            WHEN l.k IS NULL THEN 'order_without_lines'
-            ELSE 'both' END AS status
-FROM o FULL OUTER JOIN l ON o.k = l.k
-""",
-)
-def full_outer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source reconciliation (the warehouse orphan audit): FULL OUTER join
-    of two feeds with asymmetric slices, classifying every key as matched
-    or orphaned on either side.  Full outer cannot broadcast — it plans as
-    a sort-merge join on the key, which is the right shape here."""
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 2000)
-        .select(
-            F.col("o_orderkey").alias("ok"),
-            F.round(F.col("o_totalprice").cast("double"), 2).alias("total"),
-        )
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") < 1500)
-        .groupBy(F.col("l_orderkey").alias("lk"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast(
-                    "double"
-                ),
-                2,
-            ).alias("line_sum")
-        )
-    )
-    j = o.join(li, o.ok == li.lk, "full_outer")
-    return j.select(
-        F.coalesce("ok", "lk").alias("orderkey"),
-        "total",
-        "line_sum",
-        F.when(F.col("ok").isNull(), "lines_without_order")
-        .when(F.col("lk").isNull(), "order_without_lines")
-        .otherwise("both")
-        .alias("status"),
-    )
 
 
 @register(
@@ -698,248 +465,6 @@ def event_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "join_size_estimate",
-    oracle=f"""
-WITH k AS (SELECT CAST(user_id AS VARCHAR) AS key FROM events),
-cells AS (
-  SELECT t.r AS row,
-         ({DUCK_HASH.format("CAST(t.r AS VARCHAR) || '|' || k.key")} % 256)
-           AS cell,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM k, generate_series(0, 3) t(r)
-  GROUP BY 1, 2
-),
-per_row AS (
-  SELECT row, CAST(SUM(cnt * cnt) AS BIGINT) AS s FROM cells GROUP BY row
-),
-exact AS (
-  SELECT CAST(SUM(n * n) AS BIGINT) AS exact_join_rows FROM (
-    SELECT COUNT(*) AS n FROM events GROUP BY user_id
-  )
-)
-SELECT CAST(MIN(s) AS BIGINT) AS est_join_rows, exact_join_rows
-FROM per_row, exact GROUP BY exact_join_rows
-""",
-)
-def join_size_estimate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based join-size pre-flight (operators/sketches.
-    countmin_join_size): estimate |events self-join on user_id| — the
-    quadratic-blowup question behind every pair-generation stage — from
-    the count-min inner product (Cormode & Muthukrishnan 2005), paired
-    with the exact sum-of-squares for audit.  est >= exact always; the
-    whole answer comes from two d*w cell tables, never a key shuffle of
-    the event table.  Complements skew_report: that names the hot keys,
-    this prices the join they would produce."""
-    from ..operators import sketches as SK
-
-    ev = load_table(spark, sf_dir, "events")
-    keys = ev.select(F.col("user_id").cast("string").alias("key"))
-    est = SK.countmin_join_size(keys, keys)
-    exact = (
-        ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.sum(F.col("n") * F.col("n"))
-            .cast("long")
-            .alias("exact_join_rows")
-        )
-    )
-    return est.crossJoin(F.broadcast(exact))
-
-
-@register(
-    "event_rate_spikes",
-    oracle="""
-WITH b AS (
-  SELECT epoch_us(ts) // 3600000000 AS bucket,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1
-), r AS (
-  SELECT bucket, cnt,
-         ROW_NUMBER() OVER (ORDER BY cnt, bucket) AS rn,
-         COUNT(*) OVER () AS tot
-  FROM b
-), m AS (SELECT cnt AS med FROM r WHERE rn = (tot + 1) // 2)
-SELECT CAST(r.bucket AS BIGINT) AS bucket, r.cnt,
-       CAST(m.med AS BIGINT) AS med,
-       CAST(CASE WHEN 2 * r.cnt > 3 * m.med THEN 1 ELSE 0 END AS BIGINT)
-         AS is_spike
-FROM r, m
-""",
-)
-def event_rate_spikes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-rate anomaly report: hourly event counts flagged against the
-    EXACT low-median baseline (cnt > 1.5x median, all-integer compare —
-    2*cnt > 3*med — no float thresholds).  The crawler-ops question "did
-    an hour spike" answered deterministically: the hour bucket is integer
-    epoch-microsecond division (timestamp-parity convention), the median
-    is the rank-(n+1)/2 element of the BUCKET table — bounded by elapsed
-    hours, not events, so its single-partition rank window is bounded by
-    construction (same rule as skew_report's rank stage); the corpus-
-    sized work is one partial-agg'd groupBy."""
-    ev = load_table(spark, sf_dir, "events")
-    buckets = (
-        ev.select(
-            # floor-div (not div's truncate-toward-zero) so pre-1970
-            # timestamps bucket identically to DuckDB's `//`
-            F.expr(
-                "(unix_micros(cast(ts as timestamp))"
-                " - pmod(unix_micros(cast(ts as timestamp)), 3600000000))"
-                " div 3600000000"
-            ).alias("bucket")
-        )
-        .groupBy("bucket")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    w = Window.orderBy("cnt", "bucket")
-    ranked = buckets.withColumn(
-        "rn", F.row_number().over(w)
-    ).withColumn("tot", F.count("*").over(Window.partitionBy()))
-    med = (
-        ranked.filter(F.col("rn") == F.expr("(tot + 1) div 2"))
-        .select(F.col("cnt").cast("long").alias("med"))
-    )
-    return (
-        buckets.crossJoin(F.broadcast(med))
-        .withColumn(
-            "is_spike",
-            F.when(2 * F.col("cnt") > 3 * F.col("med"), 1)
-            .otherwise(0)
-            .cast("long"),
-        )
-        .select(
-            F.col("bucket").cast("long").alias("bucket"),
-            "cnt", "med", "is_spike",
-        )
-    )
-
-
-@register(
-    "curriculum_buckets",
-    oracle="""
-WITH h AS (
-  SELECT n_chars // 8 AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM documents GROUP BY 1
-), c AS (
-  SELECT bin, cnt, SUM(cnt) OVER (ORDER BY bin) AS cum,
-         SUM(cnt) OVER () AS n_total
-  FROM h
-), p AS (
-  SELECT unnest([100000, 200000, 300000, 400000, 500000,
-                 600000, 700000, 800000, 900000]) AS p_ppm
-), br AS (
-  SELECT p_ppm, MIN(bin) * 8 + 7 AS est_hi
-  FROM c, p
-  WHERE cum * 1000000 >= p_ppm * n_total
-  GROUP BY p_ppm
-), a AS (
-  SELECT d.doc_id, d.n_chars,
-         1 + (SELECT COUNT(*) FROM br WHERE br.est_hi < d.n_chars)
-           AS bucket
-  FROM documents d
-)
-SELECT CAST(bucket AS BIGINT) AS bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(MIN(n_chars) AS BIGINT) AS min_chars,
-       CAST(MAX(n_chars) AS BIGINT) AS max_chars
-FROM a GROUP BY bucket
-""",
-)
-def curriculum_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum bucketing WITHOUT a global sort: docs assigned to ~decile
-    length buckets by comparing n_chars to boundaries derived from the
-    bounded histogram sketch — the range-partitioner pattern (boundaries
-    from a summary, assignment map-side), where the naive NTILE form
-    would drag the whole corpus through one ordering partition.  The nine
-    decile boundaries broadcast as ONE array row; each doc's bucket is
-    1 + count(boundaries < n_chars) via a map-side array filter.  Bucket
-    populations are decile-approximate (bracket-rounded — the honest
-    sketch trade, bounded by bin_width); boundaries and assignment are
-    bit-deterministic, so the oracle replays histogram, brackets, and
-    every assignment."""
-    from ..operators.sketches import histogram_quantile_brackets, histogram_sketch
-
-    docs = load_table(spark, sf_dir, "documents")
-    hist = histogram_sketch(
-        docs.select(F.col("n_chars").alias("val")), bin_width=8
-    )
-    probs = [p * 100_000 for p in range(1, 10)]
-    bounds = (
-        histogram_quantile_brackets(hist, probs, bin_width=8)
-        .agg(F.array_sort(F.collect_list("est_hi")).alias("bs"))
-    )
-    return (
-        docs.crossJoin(F.broadcast(bounds))
-        .select(
-            (
-                1
-                + F.size(
-                    F.filter("bs", lambda b: b < F.col("n_chars"))
-                )
-            )
-            .cast("long")
-            .alias("bucket"),
-            "n_chars",
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.min("n_chars").cast("long").alias("min_chars"),
-            F.max("n_chars").cast("long").alias("max_chars"),
-        )
-    )
-
-
-@register(
-    "corpus_datasheet",
-    oracle="""
-SELECT 'n_docs' AS metric, CAST(COUNT(*) AS BIGINT) AS val FROM documents
-UNION ALL SELECT 'n_tokens',
-  CAST(SUM(len(string_split(text, ' '))) AS BIGINT) FROM documents
-UNION ALL SELECT 'n_langs',
-  CAST(COUNT(DISTINCT lang) AS BIGINT) FROM documents
-UNION ALL SELECT 'n_sources',
-  CAST(COUNT(DISTINCT source) AS BIGINT) FROM documents
-UNION ALL SELECT 'n_exact_dup_docs',
-  CAST(COUNT(*) - COUNT(DISTINCT text) AS BIGINT) FROM documents
-UNION ALL SELECT 'max_doc_tokens',
-  CAST(MAX(len(string_split(text, ' '))) AS BIGINT) FROM documents
-UNION ALL SELECT 'min_doc_tokens',
-  CAST(MIN(len(string_split(text, ' '))) AS BIGINT) FROM documents
-""",
-)
-def corpus_datasheet_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dataset-card stat block (Gebru et al. 2021, "Datasheets for
-    Datasets"): the headline numbers a corpus release publishes — doc and
-    token totals, language/source breadth, the exact-duplicate count, and
-    the doc-length envelope — as ONE single-scan aggregate row stacked
-    into (metric, val).  All counts exact int64 (the exact-dup figure
-    needs a distinct over text: an honest full-corpus distinct; at
-    10^12 docs swap in the HLL estimate from hll_distinct_estimate when
-    approximate is acceptable)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.col("text"), " "))
-    agg = docs.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(toks).cast("long").alias("n_tokens"),
-        F.countDistinct("lang").cast("long").alias("n_langs"),
-        F.countDistinct("source").cast("long").alias("n_sources"),
-        (F.count("*") - F.countDistinct("text"))
-        .cast("long")
-        .alias("n_exact_dup_docs"),
-        F.max(toks).cast("long").alias("max_doc_tokens"),
-        F.min(toks).cast("long").alias("min_doc_tokens"),
-    )
-    return agg.selectExpr(
-        "stack(7, "
-        "'n_docs', n_docs, 'n_tokens', n_tokens, 'n_langs', n_langs, "
-        "'n_sources', n_sources, 'n_exact_dup_docs', n_exact_dup_docs, "
-        "'max_doc_tokens', max_doc_tokens, 'min_doc_tokens', min_doc_tokens"
-        ") AS (metric, val)"
-    )
-
-
-@register(
     "cohort_retention",
     oracle="""
 WITH c AS (
@@ -980,236 +505,6 @@ def cohort_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "resource_count",
-    oracle="SELECT COUNT(DISTINCT o_custkey) AS n_customers, COUNT(*) AS n_orders FROM orders",
-)
-def resource_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: SPARQL count(distinct ?s) -> countDistinct."""
-    return load_table(spark, sf_dir, "orders").agg(
-        F.countDistinct("o_custkey").alias("n_customers"),
-        F.count("*").alias("n_orders"),
-    )
-
-
-@register(
-    "effectiveness_ratio",
-    oracle="""
-SELECT ROUND(CAST(SUM(CASE WHEN l_discount > 0 THEN 1 ELSE 0 END) AS DOUBLE)
-             / COUNT(*), 6) AS effectiveness
-FROM lineitem
-""",
-)
-def effectiveness_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: mapped/extractable ratio as a single agg (Utilities.py:445-449)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.round(
-            F.sum(F.when(F.col("l_discount") > 0, 1).otherwise(0)).cast("double")
-            / F.count("*"),
-            6,
-        ).alias("effectiveness")
-    )
-
-
-@register(
-    "min_rows_filter",
-    oracle="""
-SELECT o_custkey, COUNT(*) AS n FROM orders GROUP BY o_custkey HAVING COUNT(*) > 1
-""",
-)
-def min_rows_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2: n_rows > 1 gate (pyDomainExplorer.py:79-81) as HAVING."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-    )
-
-
-@register(
-    "totale_filter",
-    oracle="""
-SELECT event_type, COUNT(*) AS n FROM events
-WHERE event_type <> 'error' GROUP BY event_type
-""",
-)
-def totale_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4: drop marker rows (HtmlTableParser.py:783-800) as a NOT-filter."""
-    return (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") != "error")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@register(
-    "rule_lookup_cascade",
-    oracle="""
-WITH strict_rules AS (
-  SELECT n_nationkey AS key, 'nation:' || n_name AS property
-  FROM nation WHERE n_nationkey % 2 = 0
-), loose_rules AS (
-  SELECT r_regionkey AS key, 'region:' || r_name AS property FROM region
-)
-SELECT COALESCE(s.property, l.property, 'UNMAPPED') AS property,
-       COUNT(*) AS n_customers
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-LEFT JOIN strict_rules s ON c.c_nationkey = s.key
-LEFT JOIN loose_rules l ON n.n_regionkey = l.key
-GROUP BY 1
-""",
-)
-def rule_lookup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: the strict-then-loose mapping-rule cascade (Mapper.py:134-191) as
-    broadcast joins + coalesce — the Spark-native replacement for the
-    reference's per-cell dict probes.
-
-    The strict rule table is DERIVED from nation (same key, a filter and a
-    rename), so probing it as a second broadcast left join re-joined rows
-    the first join already held: the strict property is now computed
-    inline from the joined nation row (guide §2.4 — two operations keyed
-    the same way share one join), dropping one BroadcastExchange + one
-    BroadcastHashJoin from the plan (4 -> 3 joins measured in
-    plans/r07/rule_lookup_cascade_{before,after}.txt)."""
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    loose = region.select(
-        F.col("r_regionkey").alias("lkey"),
-        F.concat(F.lit("region:"), "r_name").alias("lprop"),
-    )
-    # strict rules = nation rows with even key: the first join's output
-    # already carries (n_nationkey, n_name), so the strict probe is a CASE
-    sprop = F.when(
-        F.col("n_nationkey") % 2 == 0, F.concat(F.lit("nation:"), "n_name")
-    )
-    return (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(loose), F.col("n_regionkey") == F.col("lkey"), "left")
-        .select(
-            F.coalesce(sprop, F.col("lprop"), F.lit("UNMAPPED")).alias("property")
-        )
-        .groupBy("property")
-        .agg(F.count("*").alias("n_customers"))
-    )
-
-
-@register(
-    "section_rule_gate",
-    oracle="""
-WITH section_rules AS (
-  SELECT UNNEST(['1-URGENT', '2-HIGH']) AS key,
-         UNNEST(['urgent', 'high']) AS property
-)
-SELECT r.property, COUNT(*) AS n FROM orders o
-JOIN section_rules r ON o.o_orderpriority = r.key
-GROUP BY r.property
-""",
-)
-def section_rule_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2: SECTION_ rule gate (Mapper.py:147-155) — unmapped sections drop the
-    whole table; here an inner broadcast join drops unmapped orders."""
-    orders = load_table(spark, sf_dir, "orders")
-    rules = spark.createDataFrame(
-        [("1-URGENT", "urgent"), ("2-HIGH", "high")], ["key", "property"]
-    )
-    return (
-        orders.join(F.broadcast(rules), orders.o_orderpriority == rules.key)
-        .groupBy("property")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@register(
-    "entity_probe_semi",
-    oracle="""
-SELECT c_nationkey, COUNT(*) AS n FROM customer
-WHERE c_nationkey IN (SELECT s_nationkey FROM supplier)
-GROUP BY c_nationkey
-""",
-)
-def entity_probe_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3: the resource-existence ASK probe (Mapper.py:216-237) as a broadcast
-    LEFT SEMI join against the known-entities table.  The probe side is
-    DISTINCT-ed before the hint (round-6 audit): the raw supplier
-    projection is SF-linear, but a semi join only needs the distinct key
-    set, which is bounded by the 25-row nation table — so the broadcast
-    is bounded by construction, not by luck."""
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    return (
-        customer.join(
-            F.broadcast(
-                supplier.select(
-                    F.col("s_nationkey").alias("c_nationkey")
-                ).distinct()
-            ),
-            on="c_nationkey",
-            how="leftsemi",
-        )
-        .groupBy("c_nationkey")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@register(
-    "rules_merge",
-    oracle="""
-WITH old_rules AS (
-  SELECT n_name AS key, 'old:' || CAST(n_nationkey AS VARCHAR) AS property,
-         0 AS version FROM nation
-), new_rules AS (
-  SELECT n_name AS key, 'new:' || CAST(n_nationkey AS VARCHAR) AS property,
-         1 AS version FROM nation WHERE n_nationkey % 3 = 0
-), unioned AS (
-  SELECT * FROM old_rules UNION ALL SELECT * FROM new_rules
-)
-SELECT key, arg_max(property, version) AS property FROM unioned GROUP BY key
-""",
-)
-def rules_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6/J7: old ∪ new rules, last-wins (MapperTools.py:130-147) via
-    unionByName + max_by on a version column."""
-    nation = load_table(spark, sf_dir, "nation")
-    old = nation.select(
-        F.col("n_name").alias("key"),
-        F.concat(F.lit("old:"), F.col("n_nationkey").cast("string")).alias("property"),
-        F.lit(0).alias("version"),
-    )
-    new = nation.filter(F.col("n_nationkey") % 3 == 0).select(
-        F.col("n_name").alias("key"),
-        F.concat(F.lit("new:"), F.col("n_nationkey").cast("string")).alias("property"),
-        F.lit(1).alias("version"),
-    )
-    return (
-        old.unionByName(new)
-        .groupBy("key")
-        .agg(F.expr("max_by(property, version)").alias("property"))
-    )
-
-
-@register(
-    "zip_join_positional",
-    oracle="""
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS words
-           FROM documents WHERE doc_id < 20)
-SELECT doc_id, CAST(t.i - 1 AS INT) AS pos, words[t.i] AS word
-FROM w, UNNEST(generate_series(1, len(words))) t(i)
-""",
-)
-def zip_join_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5: the header<->cell positional zip join (HtmlTableParser.py:914-963)
-    as posexplode — an index join, not a hash join."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
-    return docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word")
-    )
-
-
-@register(
     "reification_index",
     oracle="""
 SELECT l_orderkey, l_linenumber,
@@ -1225,288 +520,6 @@ def reification_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("l_orderkey").orderBy("l_linenumber")
     return li.select(
         "l_orderkey", "l_linenumber", F.row_number().over(w).alias("reif_index")
-    )
-
-
-@register(
-    "section_fill_down",
-    oracle="""
-SELECT event_id, user_id,
-       LAST_VALUE(CASE WHEN event_type = 'error' THEN event_id END IGNORE NULLS)
-         OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS last_error_event
-FROM events
-""",
-)
-def section_fill_down(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1: section context = forward-fill of the latest heading
-    (HtmlTableParser.py:220-268) — last_value(... ignore nulls) over rows
-    unbounded preceding."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    marker = F.when(F.col("event_type") == "error", F.col("event_id"))
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.last(marker, ignorenulls=True).over(w).alias("last_error_event"),
-    )
-
-
-@register(
-    "header_latch",
-    oracle="""
-SELECT event_id, user_id,
-       MAX(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-         OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS started_data
-FROM events
-""",
-)
-def header_latch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2: the started_data latch (HtmlTableParser.py:287-309) as a running
-    max over the partition."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.max(F.when(F.col("event_type") == "signup", 1).otherwise(0))
-        .over(w)
-        .alias("started_data"),
-    )
-
-
-@register(
-    "running_column_sums",
-    oracle="""
-SELECT event_id, user_id,
-       ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2)))
-         OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-         AS DOUBLE), 2) AS prior_sum
-FROM events
-""",
-)
-def running_column_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8/P5: per-column running sums of PRIOR rows (MapperTools.py:217-235)
-    — the summary-row filter's window shape."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        # the sum itself stays DECIMAL-exact; only the *returned* column is
-        # rendered as rounded double so both engines stringify identically
-        # ('136991.00' vs '136991.0' was the only r01 mismatch here)
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,2)")).over(w).cast("double"), 2
-        ).alias("prior_sum"),
-    )
-
-
-@register(
-    "summary_row_filter",
-    oracle="""
-WITH sums AS (
-  SELECT event_id, CAST(value AS DECIMAL(18,2)) AS v,
-         SUM(CAST(value AS DECIMAL(18,2)))
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prior_sum
-  FROM events
-)
-SELECT COUNT(*) AS n_summary_rows FROM sums WHERE v = prior_sum
-""",
-)
-def summary_row_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P5 analogue in pure SQL: rows equal to the running sum of prior rows."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    v = F.col("value").cast("decimal(18,2)")
-    return (
-        ev.select(v.alias("v"), F.sum(v).over(w).alias("prior_sum"))
-        .filter(F.col("v") == F.col("prior_sum"))
-        .agg(F.count("*").alias("n_summary_rows"))
-    )
-
-
-@register(
-    "distinct_header_inventory",
-    oracle="""
-SELECT event_type, MIN(user_id) AS first_user, COUNT(*) AS n
-FROM events GROUP BY event_type
-""",
-)
-def distinct_header_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5: distinct header inventory, first-seen example (pyDomainExplorer)."""
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.min("user_id").alias("first_user"), F.count("*").alias("n"))
-    )
-
-
-@register(
-    "section_grouping",
-    oracle="""
-WITH cnt AS (SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type),
-du AS (SELECT DISTINCT event_type, user_id FROM events),
-rk AS (
-  SELECT event_type, user_id,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY user_id) AS rn
-  FROM du
-), ex AS (
-  SELECT event_type, string_agg(user_id, ',' ORDER BY user_id) AS examples
-  FROM rk WHERE rn <= 3 GROUP BY event_type
-)
-SELECT c.event_type, c.n, ex.examples
-FROM cnt c JOIN ex ON c.event_type = ex.event_type
-""",
-)
-def section_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6/O4: section grouping with <=3 example pages
-    (pyDomainExplorer.py:84-158)."""
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.array_join(
-                F.slice(F.sort_array(F.collect_set("user_id")), 1, 3), ","
-            ).alias("examples"),
-        )
-    )
-
-
-@register(
-    "section_fuzzy_merge",
-    oracle="""
-WITH sections AS (
-  SELECT DISTINCT p_type AS section FROM part
-  UNION
-  SELECT DISTINCT split_part(p_type, ' ', 1) FROM part
-),
-pairs AS (
-  SELECT s.section, t.section AS candidate
-  FROM sections s JOIN sections t
-    ON s.section LIKE '%' || t.section || '%'
-)
-SELECT section, MIN(candidate ORDER BY length(candidate), candidate) AS group_key
-FROM pairs GROUP BY section
-""",
-)
-def section_fuzzy_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6: the explorer's substring-based section merge ('College' absorbs
-    'College statistics', pyDomainExplorer.py:119-139) — rebuilt
-    order-independently as a self-join on substring containment with a
-    deterministic canonical key (shortest contained section).  The section
-    vocabulary is tiny (it is GROUPed output), so the self-join broadcasts."""
-    part = load_table(spark, sf_dir, "part")
-    sections = (
-        part.select(F.col("p_type").alias("section"))
-        .union(part.select(F.split("p_type", " ")[0].alias("section")))
-        .distinct()
-    )
-    cand = sections.select(F.col("section").alias("candidate"))
-    pairs = sections.join(
-        F.broadcast(cand), F.col("section").contains(F.col("candidate"))
-    )
-    return pairs.groupBy("section").agg(
-        F.expr(
-            "min_by(candidate, struct(length(candidate), candidate))"
-        ).alias("group_key")
-    )
-
-
-@register(
-    "ontology_label_probe",
-    oracle="""
-WITH ontology AS (
-  SELECT DISTINCT lower(n_name) AS label,
-         'dbo:' || replace(lower(n_name), ' ', '_') AS property
-  FROM nation
-)
-SELECT COALESCE(o.property, 'NO_PROPERTY') AS property, COUNT(*) AS n
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-LEFT JOIN ontology o ON lower(n.n_name) = o.label AND n.n_nationkey % 2 = 0
-GROUP BY 1
-""",
-)
-def ontology_label_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: the explorer's DBpedia-ontology label lookup
-    (pyDomainExplorer.py:206-230) as a broadcast left join against an
-    ontology(label -> property) table; misses become the settings-file
-    blanks the user fills in."""
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    ontology = nation.select(
-        F.lower("n_name").alias("label"),
-        F.concat(
-            F.lit("dbo:"), F.replace(F.lower("n_name"), F.lit(" "), F.lit("_"))
-        ).alias("property"),
-    ).distinct()
-    return (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(
-            F.broadcast(ontology),
-            (F.lower("n_name") == F.col("label"))
-            & (F.col("n_nationkey") % 2 == 0),
-            "left",
-        )
-        .select(F.coalesce("property", F.lit("NO_PROPERTY")).alias("property"))
-        .groupBy("property")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@register(
-    "pivot_event_types",
-    oracle="""
-SELECT user_id,
-       ROUND(CAST(SUM(CASE WHEN event_type = 'click'
-                      THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE), 2)
-         AS click_value,
-       ROUND(CAST(SUM(CASE WHEN event_type = 'view'
-                      THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE), 2)
-         AS view_value,
-       ROUND(CAST(SUM(CASE WHEN event_type = 'error'
-                      THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE), 2)
-         AS error_value
-FROM events GROUP BY user_id
-""",
-)
-def pivot_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (wide aggregation): explicit pivot values keep the plan a single
-    groupBy with conditional aggregates — never let pivot() scan for distinct
-    keys at scale (that is an extra job over the full input)."""
-    ev = load_table(spark, sf_dir, "events")
-    dec = F.col("value").cast("decimal(18,2)")
-    piv = (
-        ev.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "error"])
-        .agg(F.sum(dec))
-    )
-    return piv.select(
-        "user_id",
-        F.round(F.col("click").cast("double"), 2).alias("click_value"),
-        F.round(F.col("view").cast("double"), 2).alias("view_value"),
-        F.round(F.col("error").cast("double"), 2).alias("error_value"),
     )
 
 
@@ -1533,127 +546,6 @@ def top_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
         .select("user_id", "event_id", "rk")
-    )
-
-
-@register(
-    "range_join_value_bands",
-    oracle="""
-WITH bands AS (
-  SELECT n_nationkey AS band_id,
-         CAST(n_nationkey * 40 AS DOUBLE) AS lo,
-         CAST(n_nationkey * 40 + 60 AS DOUBLE) AS hi
-  FROM nation
-)
-SELECT b.band_id, COUNT(*) AS n_events,
-       ROUND(CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS sum_value
-FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
-GROUP BY b.band_id
-""",
-)
-def range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join (operators/rangejoin): events matched into overlapping
-    value bands via domain bucketization — equi hash join on the bucket plus
-    an exact refine, instead of a nested-loop theta join."""
-    from ..operators.rangejoin import bucketed_range_join
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    bands = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("band_id"),
-        (F.col("n_nationkey") * 40).cast("double").alias("lo"),
-        (F.col("n_nationkey") * 40 + 60).cast("double").alias("hi"),
-    )
-    joined = bucketed_range_join(
-        ev, bands, point="value", lo="lo", hi="hi", bucket_width=50.0
-    )
-    return joined.groupBy("band_id").agg(
-        F.count("*").alias("n_events"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-        ).alias("sum_value"),
-    )
-
-
-@register(
-    "asof_join_latest_error",
-    oracle="""
-WITH lhs AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type <> 'error'
-), rhs AS (
-  SELECT user_id, ts, MAX(event_id) AS err_event
-  FROM events WHERE event_type = 'error' GROUP BY user_id, ts
-)
-SELECT l.user_id, l.event_id, epoch_us(l.ts) AS ts_us,
-       r.err_event AS right_err_event
-FROM lhs l ASOF LEFT JOIN rhs r
-  ON l.user_id = r.user_id AND l.ts >= r.ts
-""",
-)
-def asof_join_latest_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (operators/asof): each non-error event picks up the latest
-    at-or-before error event of the same user — union + ordered fill-down,
-    one shuffle, no Python; the oracle is DuckDB's native ASOF LEFT JOIN."""
-    from ..operators.asof import asof_join
-
-    ev = load_table(spark, sf_dir, "events")
-    lhs = ev.filter(F.col("event_type") != "error").select(
-        "user_id", "event_id", "ts"
-    )
-    rhs = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("err_event"))
-    )
-    joined = asof_join(lhs, rhs, on="ts", by="user_id", value_cols=["err_event"])
-    return joined.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "right_err_event",
-    )
-
-
-@register(
-    "asof_join_next_error",
-    oracle="""
-WITH lhs AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type <> 'error'
-), rhs AS (
-  SELECT user_id, ts, MAX(event_id) AS err_event
-  FROM events WHERE event_type = 'error' GROUP BY user_id, ts
-)
-SELECT l.user_id, l.event_id, epoch_us(l.ts) AS ts_us,
-       r.err_event AS right_err_event
-FROM lhs l ASOF LEFT JOIN rhs r
-  ON l.user_id = r.user_id AND l.ts <= r.ts
-""",
-)
-def asof_join_next_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of join: each non-error event picks up the EARLIEST
-    at-or-after error of the same user (alerting/root-cause direction) —
-    the mirror window of `asof_join_latest_error`, still one shuffle and no
-    Python; oracle is DuckDB ASOF LEFT JOIN with the <= inequality."""
-    from ..operators.asof import asof_join
-
-    ev = load_table(spark, sf_dir, "events")
-    lhs = ev.filter(F.col("event_type") != "error").select(
-        "user_id", "event_id", "ts"
-    )
-    rhs = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("err_event"))
-    )
-    joined = asof_join(
-        lhs, rhs, on="ts", by="user_id", value_cols=["err_event"],
-        direction="forward",
-    )
-    return joined.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "right_err_event",
     )
 
 
@@ -1708,735 +600,6 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.min("__us").alias("session_start_us"),
         F.max("__us").alias("session_end_us"),
-    )
-
-
-@register(
-    "order_preservation",
-    oracle="""
-SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem
-WHERE l_orderkey < 40 ORDER BY l_orderkey, l_linenumber
-""",
-)
-def order_preservation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O2: explicit order columns carried as data (order-as-schema)."""
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") < 40)
-        .select("l_orderkey", "l_linenumber", "l_returnflag")
-        .orderBy("l_orderkey", "l_linenumber")
-    )
-
-
-@register(
-    "scalar_text_cleanup",
-    oracle="""
-SELECT p_partkey,
-       regexp_replace(p_name || ' [12]', '\\[\\d+\\]', '', 'g') AS no_citation,
-       replace(p_name || CHR(160) || 'x', CHR(160), ' ') AS nbsp_to_space,
-       replace(p_name || CHR(160) || 'x', CHR(160), '') AS nbsp_deleted,
-       replace('it''s ' || p_name, '''', '.') AS quote_mangled,
-       replace(p_name || CHR(10) || 'y', CHR(10), '/') AS newline_data,
-       CASE WHEN p_name <> '' AND substr(p_name, 1, 1) = ' '
-            THEN substr(p_name, 2) ELSE p_name END AS lstrip_one
-FROM part WHERE p_partkey < 200
-""",
-)
-def scalar_text_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1-F8: the reference's string cleanups as built-in JVM functions
-    (citations, nbsp asymmetry, quote mangling, newline rules)."""
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") < 200)
-    nbsp = F.lit("\xa0")
-    return p.select(
-        "p_partkey",
-        F.regexp_replace(F.concat("p_name", F.lit(" [12]")), r"\[\d+\]", "").alias(
-            "no_citation"
-        ),
-        F.replace(F.concat("p_name", nbsp, F.lit("x")), nbsp, F.lit(" ")).alias(
-            "nbsp_to_space"
-        ),
-        F.replace(F.concat("p_name", nbsp, F.lit("x")), nbsp, F.lit("")).alias(
-            "nbsp_deleted"
-        ),
-        F.replace(F.concat(F.lit("it's "), "p_name"), F.lit("'"), F.lit(".")).alias(
-            "quote_mangled"
-        ),
-        F.replace(
-            F.concat("p_name", F.lit("\n"), F.lit("y")), F.lit("\n"), F.lit("/")
-        ).alias("newline_data"),
-        F.when(
-            (F.col("p_name") != "") & (F.substring("p_name", 1, 1) == " "),
-            F.expr("substring(p_name, 2)"),
-        )
-        .otherwise(F.col("p_name"))
-        .alias("lstrip_one"),
-    )
-
-
-def _py2_float_oracle_sql() -> str:
-    from ..functions.typing import PY2_FLOAT_RE
-
-    # the SAME regex string runs in both engines (Java regex / RE2)
-    return f"""
-WITH s AS (
-  SELECT l_orderkey, l_linenumber, l_returnflag,
-         CAST(l_quantity AS VARCHAR)
-           || CASE WHEN l_linenumber % 3 = 0 THEN 'D'
-                   WHEN l_linenumber % 3 = 1 THEN ''
-                   ELSE 'e2' END AS cell
-  FROM lineitem WHERE l_orderkey < 100
-)
-SELECT l_orderkey, l_linenumber, cell,
-       regexp_matches(cell, '{PY2_FLOAT_RE}') AS is_py2_float,
-       TRY_CAST(l_returnflag AS DOUBLE) AS flag_typed
-FROM s
-"""
-
-
-@register("float_typing", oracle=_py2_float_oracle_sql())
-def float_typing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F10: numeric typing via the py2 float() grammar (MapperTools.py:
-    183-195) as a shared-regex JVM predicate — NOT try_cast, whose grammar
-    differs (a 'D'-suffixed cell casts in Spark but raises in py2; the
-    crafted cells here pin that divergence on every third row)."""
-    from ..functions.typing import py2_float_matches
-
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
-    cell = F.concat(
-        F.col("l_quantity").cast("string"),
-        F.when(F.col("l_linenumber") % 3 == 0, F.lit("D"))
-        .when(F.col("l_linenumber") % 3 == 1, F.lit(""))
-        .otherwise(F.lit("e2")),
-    )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        cell.alias("cell"),
-        py2_float_matches(cell).alias("is_py2_float"),
-        F.col("l_returnflag").try_cast("double").alias("flag_typed"),
-    )
-
-
-@register(
-    "uri_tail_split",
-    oracle="""
-SELECT p_partkey,
-       split_part('http://dbpedia.org/resource/' || replace(p_name, ' ', '_'),
-                  '/', -1) AS resource_tail
-FROM part WHERE p_partkey < 200
-""",
-)
-def uri_tail_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F12: URI tail extraction (ExplorerTools.py:188-198) via
-    substring_index."""
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") < 200)
-    uri = F.concat(
-        F.lit("http://dbpedia.org/resource/"), F.replace("p_name", F.lit(" "), F.lit("_"))
-    )
-    return p.select(
-        "p_partkey", F.substring_index(uri, "/", -1).alias("resource_tail")
-    )
-
-
-@register(
-    "url_canonical_dedup",
-    oracle="""
-WITH u AS (
-  SELECT p_partkey,
-         'HTTP://Example' || CAST(p_partkey % 7 AS VARCHAR)
-           || '.COM/item/' || replace(p_name, ' ', '-')
-           || CASE WHEN p_partkey % 3 = 0 THEN '/?utm_source=x&id='
-                     || CAST(p_partkey % 50 AS VARCHAR)
-                   WHEN p_partkey % 3 = 1 THEN '?id='
-                     || CAST(p_partkey % 50 AS VARCHAR) || '#frag'
-                   ELSE '/' END AS url
-  FROM part WHERE p_partkey < 400
-), norm AS (
-  SELECT p_partkey,
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(
-                lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1))
-                  || url[length(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1)) + 1:],
-                '#.*$', ''),
-              '([?&])(utm_[a-z]+|fbclid|gclid|ref)=[^&#]*', '\\1'),
-            '\\?&+', '?'),
-          '&&+', '&'),
-        '[?&]$', ''),
-      '(://[^/?#]+/.+?)/(\\?|$)', '\\1\\2') AS canon
-  FROM u
-)
-SELECT canon, COUNT(*) AS n, MIN(p_partkey) AS keeper
-FROM norm GROUP BY canon
-""",
-)
-def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization dedup (functions/url.py): lowercase authority,
-    drop fragment + tracking params, strip the redundant trailing slash,
-    then group by the canonical form — the first dedup pass of every web
-    pipeline, all JVM-side; URLs synthesized deterministically from part so
-    the oracle replays the identical rule chain."""
-    from ..functions.url import normalize_url
-
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") < 400)
-    url = F.concat(
-        F.lit("HTTP://Example"),
-        (F.col("p_partkey") % 7).cast("string"),
-        F.lit(".COM/item/"),
-        F.replace("p_name", F.lit(" "), F.lit("-")),
-        F.when(
-            F.col("p_partkey") % 3 == 0,
-            F.concat(
-                F.lit("/?utm_source=x&id="),
-                (F.col("p_partkey") % 50).cast("string"),
-            ),
-        )
-        .when(
-            F.col("p_partkey") % 3 == 1,
-            F.concat(
-                F.lit("?id="),
-                (F.col("p_partkey") % 50).cast("string"),
-                F.lit("#frag"),
-            ),
-        )
-        .otherwise(F.lit("/")),
-    )
-    return (
-        p.select("p_partkey", normalize_url(url).alias("canon"))
-        .groupBy("canon")
-        .agg(F.count("*").alias("n"), F.min("p_partkey").alias("keeper"))
-    )
-
-
-@register(
-    "resource_list",
-    oracle="""
-WITH u AS (
-  SELECT CASE
-           WHEN p_partkey % 3 = 0
-             THEN 'http://dbpedia.org/resource/' || replace(p_name, ' ', '_')
-           WHEN p_partkey % 3 = 1
-             THEN 'http://dbpedia.org/ontology/' || replace(p_name, ' ', '_')
-           ELSE 'http://resourceful.example/' || replace(p_name, ' ', '_')
-         END AS uri
-  FROM part WHERE p_partkey < 300
-), parts AS (
-  SELECT uri, string_split(uri, '/') AS p FROM u WHERE contains(uri, 'resource')
-)
-SELECT p[list_position(p, 'resource') + 1] AS line
-FROM parts WHERE list_position(p, 'resource') > 0
-""",
-)
-def resource_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7: the Selector's resource-list sink content (Selector.py:80-124) —
-    URIs with an exact 'resource' path segment reduced to the name after it;
-    'ontology' URIs and URIs merely CONTAINING 'resource' (ValueError ->
-    skipped in the reference) are dropped."""
-    from .explorer import resource_list_lines
-
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") < 300)
-    name = F.replace("p_name", F.lit(" "), F.lit("_"))
-    uris = p.select(
-        F.when(
-            F.col("p_partkey") % 3 == 0,
-            F.concat(F.lit("http://dbpedia.org/resource/"), name),
-        )
-        .when(
-            F.col("p_partkey") % 3 == 1,
-            F.concat(F.lit("http://dbpedia.org/ontology/"), name),
-        )
-        .otherwise(F.concat(F.lit("http://resourceful.example/"), name))
-        .alias("uri")
-    )
-    return resource_list_lines(uris)
-
-
-
-
-@register(
-    "q4_order_priority",
-    oracle="""
-SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-GROUP BY o_orderpriority
-""",
-)
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape — the EXISTS-decorrelation plan class: orders in a
-    date window that had at least one returned line, counted by priority.
-    Spark expresses the EXISTS as a LEFT SEMI join against the pre-filtered
-    lineitem projection (2 columns of 11 reach the scan), so the probe side
-    never duplicates orders rows no matter how many lines match; the
-    decorrelated semi is exactly what Catalyst rewrites a correlated EXISTS
-    into, declared directly.  At 100 TB this is a key-shuffled semi between
-    two date/flag-pruned fact projections — no fact is materialized wide."""
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    returned = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey")
-    )
-    return (
-        orders.join(
-            returned, orders.o_orderkey == returned.l_orderkey, "left_semi"
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").cast("long").alias("order_count"))
-    )
-
-
-@register(
-    "q22_dormant_customers",
-    oracle="""
-WITH thr AS (
-  SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS total,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM customer WHERE c_acctbal > 0
-)
-SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-       ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS total_bal
-FROM customer, thr
-WHERE CAST(c_acctbal AS DECIMAL(18,2)) * thr.n > thr.total
-  AND NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= TIMESTAMP '1999-01-01')
-GROUP BY c_nationkey
-""",
-)
-def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape — scalar-subquery threshold + NOT-EXISTS
-    decorrelation: above-average-balance customers with no order since
-    1999 (dormant accounts), grouped by nation.  Two decorrelations in one plan: the scalar
-    AVG attaches as a one-row broadcast (the sanctioned 1-row BNLJ — no
-    driver round-trip, threshold computed where the data is), and the NOT
-    EXISTS is a LEFT ANTI join against the single-column orders projection.
-    The avg comparison is cross-multiplied into exact DECIMAL arithmetic
-    (bal * n > total) so no float threshold can flip a boundary row between
-    engines.  At 100 TB: one pruned pass for the threshold, one anti-join
-    shuffle on the customer key — the anti probe side (orders custkeys) is
-    the only wide shuffle, and AQE may broadcast the filtered customer side
-    when the threshold is selective."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp")
-        )
-        .select("o_custkey")
-    )
-    bal = F.col("c_acctbal").cast("decimal(18,2)")
-    thr = (
-        cust.filter(F.col("c_acctbal") > 0)
-        .agg(
-            F.sum(bal).alias("__total"),
-            F.count("*").cast("long").alias("__n"),
-        )
-    )
-    rich = cust.crossJoin(F.broadcast(thr)).filter(
-        bal * F.col("__n") > F.col("__total")
-    )
-    dormant = rich.join(
-        orders, rich.c_custkey == orders.o_custkey, "left_anti"
-    )
-    return dormant.groupBy("c_nationkey").agg(
-        F.count("*").cast("long").alias("n_cust"),
-        F.round(F.sum(bal).cast("double"), 2).alias("total_bal"),
-    )
-
-
-@register(
-    "salted_skew_join",
-    oracle="""
-WITH dim(event_type, category) AS (
-  VALUES ('click', 'engagement'), ('view', 'engagement'),
-         ('purchase', 'revenue'), ('signup', 'acquisition'),
-         ('error', 'reliability')
-)
-SELECT category, CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(MIN(event_id) AS BIGINT) AS first_event,
-       CAST(MAX(event_id) AS BIGINT) AS last_event
-FROM events JOIN dim USING (event_type)
-GROUP BY category
-""",
-)
-def salted_skew_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-mitigated dimension join (operators/skewjoin.salted_join): the
-    events fact joins its 5-value event_type dimension — the textbook hot
-    key: at 10^12 events a plain shuffle join puts ~2*10^11 'click' rows on
-    ONE reducer.  salted_join spreads each key over 8 deterministic salts
-    (hash of the unique event_id, never rand() — retries must re-salt
-    identically), replicating only the 5-row dim.  The oracle is the PLAIN
-    join: salting is physical, the answer provably identical (also pinned
-    row-level in tests/test_skewjoin.py)."""
-    from ..operators.skewjoin import salted_join
-
-    events = load_table(spark, sf_dir, "events")
-    dim = spark.createDataFrame(
-        [
-            ("click", "engagement"),
-            ("view", "engagement"),
-            ("purchase", "revenue"),
-            ("signup", "acquisition"),
-            ("error", "reliability"),
-        ],
-        "event_type string, category string",
-    )
-    joined = salted_join(
-        events, dim, on="event_type", row_key="event_id", n_salts=8
-    )
-    return joined.groupBy("category").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.min("event_id").cast("long").alias("first_event"),
-        F.max("event_id").cast("long").alias("last_event"),
-    )
-
-
-@register(
-    "scd2_dimension",
-    oracle="""
-WITH o AS (
-  SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
-         LAG(event_type) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-), c AS (
-  SELECT user_id, event_type, ts_us, event_id
-  FROM o WHERE prev IS NULL OR prev <> event_type
-)
-SELECT user_id, event_type AS state, ts_us AS valid_from_us,
-       LEAD(ts_us) OVER (
-         PARTITION BY user_id ORDER BY ts_us, event_id) AS valid_to_us,
-       CAST(LEAD(ts_us) OVER (
-         PARTITION BY user_id ORDER BY ts_us, event_id) IS NULL AS INT)
-         AS is_current
-FROM c
-""",
-)
-def scd2_dimension_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 slowly-changing dimension built from the event change log
-    (operators/scd.scd2_build): per-user state EPISODES with half-open
-    [valid_from, valid_to) validity intervals — consecutive repeats of the
-    same state collapse, the open episode is flagged current.  One shuffle
-    on the entity key serves both window passes; ties on ts break on the
-    unique event_id so retries cannot reorder same-timestamp events.
-    Timestamps compare as epoch micros per the engine-parity rules."""
-    from ..operators.scd import scd2_build
-
-    events = load_table(spark, sf_dir, "events")
-    dim = scd2_build(
-        events,
-        entity_col="user_id",
-        ts_col="ts",
-        state_col="event_type",
-        tiebreak="event_id",
-    )
-    # ntz -> instant cast is deterministic and unix_micros applies
-    return dim.select(
-        "user_id",
-        "state",
-        F.unix_micros(F.col("valid_from").cast("timestamp")).alias(
-            "valid_from_us"
-        ),
-        F.unix_micros(F.col("valid_to").cast("timestamp")).alias(
-            "valid_to_us"
-        ),
-        F.col("is_current").cast("int").alias("is_current"),
-    )
-
-
-@register(
-    "zorder_layout_audit",
-    oracle="""
-WITH base AS (
-  SELECT GREATEST(0, epoch_us(ts) - 1704067200000000) AS v,
-         user_id AS y
-  FROM events
-), nd AS (
-  SELECT CAST((v - (v % 3600000000)) / 3600000000 AS BIGINT) AS x, y
-  FROM base
-), keyed AS (
-  SELECT x, y, ((((x >> 0) & 1) << 0) + (((y >> 0) & 1) << 1) + (((x >> 1) & 1) << 2) + (((y >> 1) & 1) << 3) + (((x >> 2) & 1) << 4) + (((y >> 2) & 1) << 5) + (((x >> 3) & 1) << 6) + (((y >> 3) & 1) << 7) + (((x >> 4) & 1) << 8) + (((y >> 4) & 1) << 9) + (((x >> 5) & 1) << 10) + (((y >> 5) & 1) << 11) + (((x >> 6) & 1) << 12) + (((y >> 6) & 1) << 13) + (((x >> 7) & 1) << 14) + (((y >> 7) & 1) << 15) + (((x >> 8) & 1) << 16) + (((y >> 8) & 1) << 17) + (((x >> 9) & 1) << 18) + (((y >> 9) & 1) << 19) + (((x >> 10) & 1) << 20) + (((y >> 10) & 1) << 21) + (((x >> 11) & 1) << 22) + (((y >> 11) & 1) << 23) + (((x >> 12) & 1) << 24) + (((y >> 12) & 1) << 25) + (((x >> 13) & 1) << 26) + (((y >> 13) & 1) << 27) + (((x >> 14) & 1) << 28) + (((y >> 14) & 1) << 29) + (((x >> 15) & 1) << 30) + (((y >> 15) & 1) << 31)) AS zkey
-  FROM nd
-)
-SELECT zkey >> 12 AS file_id, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       MIN(x) AS min_hour, MAX(x) AS max_hour,
-       MIN(y) AS min_user, MAX(y) AS max_user
-FROM keyed GROUP BY file_id
-""",
-)
-def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) layout audit (operators/zorder): events keyed by the
-    bit-interleave of (hour-since-2024, user_id), bucketed into files by an
-    8-bit key prefix above bit 12, with the per-file min/max envelope per
-    dimension —
-    exactly the parquet-footer statistics a scan planner prunes with.  A
-    time-sorted layout prunes only time; the interleaved key's envelopes
-    stay narrow on BOTH axes (the Delta/Iceberg ZORDER BY rationale —
-    pinned quantitatively vs a single-column sort in tests/test_zorder.py).
-    Key and bucket are pure projections (zero shuffle); the audit is one
-    groupBy on <=256 file ids.  The interleave is plain shift/mask
-    arithmetic, replayed term-for-term by the oracle."""
-    from ..operators.zorder import layout_stats, zorder_key
-
-    events = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    v = F.greatest(F.lit(0).cast("long"), us - F.lit(1704067200000000))
-    hour = ((v - F.pmod(v, F.lit(3600000000))) / F.lit(3600000000)).cast(
-        "long"
-    )
-    keyed = events.select(
-        hour.alias("x"), F.col("user_id").alias("y")
-    ).withColumn("zkey", zorder_key("x", "y", bits=16))
-    # shift 12: file buckets span the USED key range (hour <= 10 bits,
-    # user <= 11 bits across the fixtures -> key < 2^24, <= ~300 files)
-    return layout_stats(
-        keyed, "zkey",
-        dims={"hour": "x", "user": "y"},
-        file_bits=8, total_bits=20,
-    )
-
-
-@register(
-    "scd2_point_in_time",
-    oracle="""
-WITH o AS (
-  SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
-         LAG(event_type) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-), c AS (
-  SELECT user_id, event_type, ts_us, event_id
-  FROM o WHERE prev IS NULL OR prev <> event_type
-), eps AS (
-  SELECT user_id, event_type AS state, ts_us AS valid_from_us,
-         LEAD(ts_us) OVER (
-           PARTITION BY user_id ORDER BY ts_us, event_id) AS valid_to_us
-  FROM c
-), eff AS (
-  SELECT * FROM eps
-  WHERE valid_to_us IS NULL OR valid_to_us > valid_from_us
-)
-SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, d.state
-FROM events e
-LEFT JOIN eff d
-  ON e.user_id = d.user_id
- AND epoch_us(e.ts) >= d.valid_from_us
- AND (d.valid_to_us IS NULL OR epoch_us(e.ts) < d.valid_to_us)
-""",
-)
-def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time enrichment against the SCD2 dimension — the warehouse
-    'fact joined to the dimension AS OF the event instant' query, composed
-    from two existing operators with no interval theta-join: since SCD2
-    episodes TILE each entity's timeline, the containing episode is exactly
-    the latest valid_from <= ts, i.e. a backward as-of join
-    (operators/asof.asof_join) of the fact to the episode-start table.
-    Zero-width episodes (two changes at one instant) hold at no instant and
-    are filtered before the join, which also makes (user, valid_from)
-    unique as the as-of contract requires.  The oracle is the honest
-    interval join against the replayed episode table — proving the as-of
-    rewrite IS the interval semantics.  Shape: both the dimension build and
-    the as-of are entity-key window passes — two shuffles end to end, no
-    range explosion, no BNLJ."""
-    from ..operators.asof import asof_join
-    from ..operators.scd import scd2_build
-
-    events = load_table(spark, sf_dir, "events")
-    dim = scd2_build(
-        events,
-        entity_col="user_id",
-        ts_col="ts",
-        state_col="event_type",
-        tiebreak="event_id",
-    )
-    eff = dim.filter(
-        F.col("valid_to").isNull()
-        | (F.col("valid_to") > F.col("valid_from"))
-    )
-    episodes = eff.select(
-        "user_id", F.col("valid_from").alias("ts"), "state"
-    )
-    enriched = asof_join(
-        events.select("event_id", "user_id", "ts"),
-        episodes,
-        on="ts",
-        by="user_id",
-        value_cols=["state"],
-    )
-    return enriched.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.col("right_state").alias("state"),
-    )
-
-
-@register(
-    "json_props_rollup",
-    oracle="""
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
-         AS sum_k,
-       CAST(MIN(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
-         AS min_k,
-       CAST(MAX(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
-         AS max_k,
-       CAST(COUNT(*) FILTER (WHERE json_extract(props, '$.k') IS NULL)
-            AS BIGINT) AS n_missing
-FROM events
-GROUP BY event_type
-""",
-)
-def json_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: the events table's JSON ``props`` column
-    parsed with a TYPED schema (``from_json`` — JVM-side Jackson inside
-    whole-stage codegen, the scale path) and rolled up per event type.
-    Typed parse beats per-row regex/string paths and beats schema-on-read
-    re-inference: at 10^12 rows the parse happens once per row map-side,
-    the aggregate is the only shuffle, and PERMISSIVE mode turns malformed
-    payloads into NULLs counted by ``n_missing`` instead of killing tasks
-    (malformed/missing-key/null parity pinned in
-    tests/test_json_extract.py; the oracle's fixture rows are all
-    well-formed so both engines agree on the clean path)."""
-    events = load_table(spark, sf_dir, "events")
-    k = F.from_json(F.col("props"), "k BIGINT").getField("k")
-    return (
-        events.select("event_type", k.alias("__k"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum("__k").cast("long").alias("sum_k"),
-            F.min("__k").cast("long").alias("min_k"),
-            F.max("__k").cast("long").alias("max_k"),
-            F.count_if(F.col("__k").isNull()).cast("long").alias("n_missing"),
-        )
-    )
-
-
-@register(
-    "bloom_reduced_urgent_revenue",
-    oracle="""
-SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_lines,
-       ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2)
-         AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE o_orderpriority = '1-URGENT'
-GROUP BY l_returnflag
-""",
-)
-def bloom_reduced_urgent_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runtime-filter / semi-join-reduction pattern, explicit and
-    oracle-checked (operators/skewjoin.bloom_reduced_join): lineitem joins
-    the urgent-orders subset, but the big side is prefiltered MAP-SIDE
-    through a one-broadcast-row Bloom sketch of the matching keys before it
-    ever shuffles.  Bloom has no false negatives (no match lost) and the
-    exact join drops the false positives, so the answer is EXACTLY the
-    plain join — which is what the oracle runs.  At 10^12 rows with two
-    fact-sized sides this turns 'shuffle all of lineitem' into 'shuffle
-    the ~20% whose orders qualify, plus the FP epsilon'.  Equality under
-    forced SMJ and the filter-below-exchange plan shape are pinned in
-    tests/test_skewjoin.py."""
-    from ..operators.skewjoin import bloom_reduced_join
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_extendedprice"
-    )
-    urgent = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    joined = bloom_reduced_join(
-        li, urgent, big_key="l_orderkey", small_key="o_orderkey"
-    )
-    return joined.groupBy("l_returnflag").agg(
-        F.count("*").cast("long").alias("n_lines"),
-        F.round(
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast(
-                "double"
-            ),
-            2,
-        ).alias("revenue"),
-    )
-
-
-@register(
-    "cube_event_stats",
-    oracle="""
-WITH e AS (
-  SELECT event_type, CAST(user_id % 4 AS BIGINT) AS user_bucket, user_id
-  FROM events
-)
-SELECT event_type, user_bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-FROM e
-GROUP BY CUBE (event_type, user_bucket)
-""",
-)
-def cube_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouping-sets lattice (GROUP BY CUBE): all four rollup combinations
-    of (event_type, user_bucket) in ONE pass — Catalyst's Expand operator
-    replicates each input row once per grouping set before a single
-    aggregate, so the lattice costs one shuffle, not four scans (the same
-    single-Expand rule the ROLLUP query pins).  NULL marks the rolled-up
-    level in both engines.  At scale prefer cube only over LOW-cardinality
-    dimension pairs: Expand multiplies shuffle rows by the number of
-    grouping sets."""
-    events = load_table(spark, sf_dir, "events")
-    e = events.select(
-        "event_type",
-        F.pmod(F.col("user_id"), F.lit(4)).cast("long").alias("user_bucket"),
-        "user_id",
-    )
-    return e.cube("event_type", "user_bucket").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-    )
-
-
-@register(
-    "entity_match_pairs",
-    oracle="""
-SELECT a.p_partkey AS a_id, b.p_partkey AS b_id,
-       CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
-FROM part a JOIN part b
-  ON a.p_brand = b.p_brand AND a.p_size = b.p_size
- AND a.p_partkey < b.p_partkey
-WHERE levenshtein(a.p_name, b.p_name) <= 4
-""",
-)
-def entity_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Record linkage (operators/linkage.blocked_match_pairs): fuzzy-match
-    candidate part pairs — blocked on (brand, size) so the all-pairs O(n^2)
-    collapses to sum-of-squared-block-sizes (a plain equi-self-join hash
-    join), then verified with Levenshtein <= 4 INSIDE the join projection.
-    Both engines ship the identical classical edit distance, so the oracle
-    replays the verify exactly.  At 10^12 records the guard matters more
-    than the join: `max_block_size` + the `oversized_blocks` audit (pinned
-    in tests/test_linkage.py) keep one degenerate block from re-creating
-    the quadratic blowup — the same cap contract as the LSH dedup path."""
-    from ..operators.linkage import blocked_match_pairs
-
-    part = load_table(spark, sf_dir, "part")
-    return blocked_match_pairs(
-        part,
-        id_col="p_partkey",
-        text_col="p_name",
-        block_cols=("p_brand", "p_size"),
-        max_distance=4,
     )
 
 
@@ -2857,8 +1020,7 @@ def range_frame_hourly_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by elapsed hours x types, not events — so the per-type window
     sort is bounded by construction; the corpus-sized work is one
     partial-agg'd groupBy.  The hour bucket is integer epoch-microsecond
-    floor division (timestamp-parity convention shared with
-    event_rate_spikes)."""
+    floor division (the battery's timestamp-parity convention)."""
     ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.select(
@@ -3168,164 +1330,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q7_nation_trade_volume",
-    oracle="""
-SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS ship_year,
-       ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                      * (1 - CAST(l.l_discount AS DECIMAL(18,2))))
-                  AS DOUBLE), 2) AS revenue
-FROM lineitem l
-JOIN orders o ON o.o_orderkey = l.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey
-JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-WHERE ((sn.n_name = 'NATION_18' AND cn.n_name = 'NATION_19')
-    OR (sn.n_name = 'NATION_19' AND cn.n_name = 'NATION_18'))
-  AND l.l_shipdate >= TIMESTAMP '1995-01-01'
-  AND l.l_shipdate < TIMESTAMP '1997-01-01'
-GROUP BY sn.n_name, cn.n_name, EXTRACT(year FROM l.l_shipdate)
-""",
-)
-def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape — bilateral trade volume: revenue shipped between
-    two specific nations (both directions kept separate) by ship year.
-    The interesting plan property is the DOUBLE role of the nation
-    dimension: it joins the fact twice under two aliases (supplier's
-    nation and customer's nation), each side pre-FILTERED to the two
-    relevant nations before the join, so the filters cascade: only lines
-    whose supplier sits in one of two nations survive the first probe,
-    and the either-direction predicate runs on two small dimension
-    columns, never as a cross filter over the wide fact.  Only the
-    NATION side carries a broadcast hint (25 rows, truly bounded); the
-    nation-pruned supplier and customer sides are 2/25 of SF-LINEAR
-    tables — the q5/q17 lesson says no forced hint, so AQE broadcasts
-    them at small SF and degrades to shuffle joins at the 100-TB target
-    instead of OOMing.  The final (nation, nation, year) aggregate's key
-    space is 2x2x|years|."""
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    # NATION_18/19 co-trade at EVERY fixture scale (including
-    # sf0.001), so neither gate scale factor is a vacuous 0-row check
-    nations = ("NATION_18", "NATION_19")
-    nat = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin(*nations)
-    )
-    supp = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                nat.select(
-                    F.col("n_nationkey").alias("sn_key"),
-                    F.col("n_name").alias("supp_nation"),
-                )
-            ),
-            F.col("s_nationkey") == F.col("sn_key"),
-        )
-        .select("s_suppkey", "supp_nation")
-    )
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(
-                nat.select(
-                    F.col("n_nationkey").alias("cn_key"),
-                    F.col("n_name").alias("cust_nation"),
-                )
-            ),
-            F.col("c_nationkey") == F.col("cn_key"),
-        )
-        .select("c_custkey", "cust_nation")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
-        .select(
-            "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount",
-            F.year("l_shipdate").cast("long").alias("ship_year"),
-        )
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    return (
-        li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .filter(
-            (
-                (F.col("supp_nation") == nations[0])
-                & (F.col("cust_nation") == nations[1])
-            )
-            | (
-                (F.col("supp_nation") == nations[1])
-                & (F.col("cust_nation") == nations[0])
-            )
-        )
-        .groupBy("supp_nation", "cust_nation", "ship_year")
-        .agg(
-            F.round(
-                F.sum(dec("l_extendedprice") * (1 - dec("l_discount"))).cast(
-                    "double"
-                ),
-                2,
-            ).alias("revenue")
-        )
-    )
-
-
-@register(
-    "q16_distinct_supplier_counts",
-    oracle="""
-SELECT p.p_brand, p.p_size,
-       CAST(COUNT(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE p.p_brand <> 'Brand#1'
-  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                          WHERE s_acctbal < 1000)
-GROUP BY p.p_brand, p.p_size
-""",
-)
-def q16_distinct_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape — supplier breadth per product segment with a
-    NOT-IN exclusion list: how many DISTINCT suppliers serve each
-    (brand, size) cell, excluding blacklisted (low-balance, < 1000 —
-    a floor that excludes real suppliers at EVERY fixture scale, so
-    neither gate leg tests the anti join vacuously) suppliers.  The NOT IN decorrelates to a LEFT ANTI join against the
-    exclusion subquery — safe here because s_suppkey is non-nullable;
-    with a nullable subquery column NOT IN becomes the classic
-    three-valued-logic trap (one NULL empties the whole result) and
-    Spark must plan a null-aware anti join instead, which is why this
-    engine's oracles keep NOT-IN subqueries on key columns only.  Scale:
-    the exclusion list is supplier-sized and broadcastable; the
-    part join carries no hint (SF-linear side, the q5/q17 rule); the
-    COUNT(DISTINCT) shuffles once on the (brand, size, suppkey) expanded
-    key — bounded by segments x suppliers, not line items."""
-    supp_bad = (
-        load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 1000)
-        .select("s_suppkey")
-    )
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_brand") != "Brand#1")
-        .select("p_partkey", "p_brand", "p_size")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey"
-    )
-    return (
-        li.join(supp_bad, li["l_suppkey"] == supp_bad["s_suppkey"], "left_anti")
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_size")
-        .agg(F.countDistinct("l_suppkey").cast("long").alias("supplier_cnt"))
-    )
-
-
-@register(
     "cumulative_unique_users",
     oracle="""
 WITH d AS (
@@ -3388,123 +1392,6 @@ def cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q10_returned_item_revenue",
-    oracle="""
-SELECT c.c_custkey, c.c_name,
-       ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                      * (1 - CAST(l.l_discount AS DECIMAL(18,2))))
-                  AS DOUBLE), 2) AS revenue,
-       n.n_name
-FROM lineitem l
-JOIN orders o ON o.o_orderkey = l.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN nation n ON n.n_nationkey = c.c_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= TIMESTAMP '1995-01-01'
-  AND o.o_orderdate < TIMESTAMP '1996-01-01'
-GROUP BY c.c_custkey, c.c_name, n.n_name
-ORDER BY revenue DESC, c.c_custkey
-LIMIT 20
-""",
-)
-def q10_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape — the returned-item loss report: top-20 customers
-    by revenue on RETURNED lines within a one-year order window.  Plan
-    shape: both fact filters (returnflag on lineitem, date on orders)
-    push to their scans before the key join, the customer/nation
-    dimensions attach afterward (nation hinted broadcast — 25 rows; the
-    customer side is SF-linear, no hint), and the top-20 is
-    TakeOrderedAndProject over the grouped result, never a full sort.
-    The deterministic tie-break (revenue desc, custkey) keeps the cut
-    line stable across engines."""
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
-        )
-        .select("o_orderkey", "o_custkey")
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-    nat = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.round(
-                F.sum(dec("l_extendedprice") * (1 - dec("l_discount"))).cast(
-                    "double"
-                ),
-                2,
-            ).alias("revenue")
-        )
-        .select("c_custkey", "c_name", "revenue", "n_name")
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
-    )
-
-
-@register(
-    "q12_priority_by_returnflag",
-    oracle="""
-SELECT l.l_returnflag,
-       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l.l_shipdate < TIMESTAMP '1997-01-01'
-GROUP BY l.l_returnflag
-""",
-)
-def q12_priority_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape — conditional pivot-in-aggregate: one pass splits
-    each group's count by a predicate (urgent vs not) using CASE inside
-    SUM, the idiom that replaces two scans (or a pivot job) with zero
-    extra shuffles — both conditional sums partial-aggregate map-side
-    under the same grouping key.  The fact-fact join keys on l_orderkey
-    after the date prune; nothing is broadcast-hinted (both sides
-    SF-linear)."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_returnflag")
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("long").alias(
-                "high_line_count"
-            ),
-            F.sum(F.when(~high, 1).otherwise(0)).cast("long").alias(
-                "low_line_count"
-            ),
-        )
-    )
-
-
-@register(
     "q19_or_of_ands_revenue",
     oracle="""
 SELECT ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
@@ -3558,96 +1445,6 @@ def q19_or_of_ands_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
             F.count("*").cast("long").alias("n_lines"),
         )
-    )
-
-
-@register(
-    "q8_market_share",
-    oracle="""
-WITH trade AS (
-  SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS order_year,
-         sn.n_name AS supp_nation,
-         CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                  * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) * 10000
-              AS BIGINT) AS rev_e4
-  FROM lineitem l
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-  JOIN region r ON r.r_regionkey = cn.n_regionkey
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-  WHERE r.r_name = 'AMERICA'
-  GROUP BY 1, 2
-)
-SELECT order_year,
-       CAST((1000000 * COALESCE(SUM(rev_e4)
-               FILTER (supp_nation = 'NATION_19'), 0))
-            // SUM(rev_e4) AS BIGINT) AS share_ppm
-FROM trade GROUP BY order_year
-""",
-)
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape — national market share: NATION_19's fraction of
-    supplier revenue into AMERICA-region customers, per order year, as exact
-    integer ppm.  The numerator/denominator trick: ONE aggregation pass
-    computes per-(year, supp_nation) revenue, then the share is a
-    conditional re-aggregate over that bounded table — never two corpus
-    scans.  Exactness: the revenue sum's decimal scale is FOUR
-    (price(2) x discount-complement(2)), so the int64 conversion
-    multiplies by 10^4 — the value is then integral by construction and
-    the cast is exact on BOTH engines, which matters because Spark's
-    decimal->long cast truncates while DuckDB's rounds: on a fractional
-    value (e.g. x100 of a scale-4 sum) the two engines hold different
-    integers and the ppm share is one boundary case from a hash
-    mismatch.  No float ratio ever forms.  The
-    nation dimension again serves twice (customer's region gate,
-    supplier's identity); region/nation broadcast, customer/supplier
-    SF-linear sides un-hinted (the q5/q17 rule)."""
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name") == "AMERICA"
-    )
-    cust_nat = nat.join(
-        F.broadcast(reg), nat["n_regionkey"] == reg["r_regionkey"]
-    ).select(F.col("n_nationkey").alias("cn_key"))
-    cust = load_table(spark, sf_dir, "customer").join(
-        F.broadcast(cust_nat), F.col("c_nationkey") == F.col("cn_key")
-    ).select("c_custkey")
-    supp = load_table(spark, sf_dir, "supplier").join(
-        F.broadcast(
-            nat.select(
-                F.col("n_nationkey").alias("sn_key"),
-                F.col("n_name").alias("supp_nation"),
-            )
-        ),
-        F.col("s_nationkey") == F.col("sn_key"),
-    ).select("s_suppkey", "supp_nation")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey",
-        F.year("o_orderdate").cast("long").alias("order_year"),
-    )
-    trade = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("order_year", "supp_nation")
-        .agg(
-            (
-                F.sum(dec("l_extendedprice") * (1 - dec("l_discount")))
-                * 10000
-            ).cast("long").alias("rev_e4")
-        )
-    )
-    return trade.groupBy("order_year").agg(
-        F.expr(
-            "CAST((1000000 * COALESCE(SUM(CASE WHEN supp_nation = 'NATION_19'"
-            " THEN rev_e4 END), 0)) div SUM(rev_e4) AS BIGINT)"
-        ).alias("share_ppm")
     )
 
 

@@ -40,7 +40,7 @@ from ..operators.dedup import (
     minhash_signatures,
     ngram_jaccard,
 )
-from ..plans.queries import spark_hash
+from .registry import spark_hash
 
 
 def curate(

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 from table_extractor_spark.plans import queries as Q
@@ -17,76 +16,23 @@ def test_queries_and_oracles_consistent():
     assert set(q) - set(o) == set()
 
 
-def _repo_file(name):
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), name
-    )
+def test_bench_headline_is_registered_and_windowed():
+    """bench.py times its HEADLINE queries through queries(); each must be
+    registered in ``__spark_entry__`` with an oracle.  The driver checks
+    the first 50 queries() entries, served in registration order, so every
+    headline query must sit inside that window."""
+    import bench
+    import __spark_entry__ as entry
 
-
-def test_r6_window_leads_with_queue_then_r3_stale():
-    """The driver checks at most the first 50 queries() entries; the r6
-    window (VERDICT r5 next #1/#3) must lead with the 11-query queue
-    (first driver rows ever), then the 37 rows whose latest green is the
-    r3 ledger, then two flagship extraction rows — exactly 50.  Behind
-    the window, r4-ledgered rows rotate before r5-fresh ones so the r7
-    window is already sequenced."""
-    names = list(Q.queries())
-    window = names[:50]
-    assert len(Q._R6_FRONT) == 50
-    assert list(window) == list(Q._R6_FRONT)
-    # the queue leads: 11 first-driver-row queries
-    assert list(window[:11]) == list(Q._R6_QUEUE)
-    r5 = {
-        k for k, v in json.load(
-            open(_repo_file("CORRECTNESS_r05.json"))
-        ).items()
-        if v.get("rows_match") and v.get("schema_match")
-        and v.get("hash_match") and not v.get("err")
-    }
-    assert r5 == set(Q._DRIVER_LEDGERED_R05)
-    for n in Q._R6_QUEUE:
-        assert n not in r5 and n not in Q._DRIVER_LEDGERED_R04, (
-            f"{n} already has a driver row; queue slot wasted"
-        )
-    # the r3-stale cohort: green in r3, absent from the r4 and r5 windows
-    r3 = set(json.load(open(_repo_file("CORRECTNESS_r03.json"))))
-    for n in Q._R3_STALE:
-        assert n in r3
-        assert n not in Q._DRIVER_LEDGERED_R04 and n not in r5, (
-            f"{n} is fresher than r3; it must not occupy a rotation slot"
-        )
-    # nothing r3-stale sits outside the window
-    all_stale = {
-        n for n in names
-        if n in r3 and n not in Q._DRIVER_LEDGERED_R04 and n not in r5
-    }
-    assert all_stale <= set(window), (
-        f"r3-stale rows outside the window: {sorted(all_stale - set(window))}"
-    )
-    # behind the window: r4 rows (stalest remaining) before r5-fresh rows
-    tail = names[50:]
-    seen_r5 = False
-    for n in tail:
-        if n in Q._DRIVER_LEDGERED_R05:
-            seen_r5 = True
-        else:
-            assert not seen_r5, (
-                f"{n} (r4-stale) ordered after an r5-fresh row"
-            )
-    # every registered query is ledgered somewhere, in the window, or an
-    # explicitly-declared r7-queue entry awaiting its first driver row
-    r4 = set(json.load(open(_repo_file("CORRECTNESS_r04.json"))))
-    known = (
-        set(Q._R6_FRONT) | r3 | r4 | r5 | set(Q._DRIVER_LEDGERED_R02)
-        | set(Q._R7_QUEUE)
-    )
-    missing = [n for n in names if n not in known]
-    assert missing == [], f"queries with no driver row ever: {missing}"
-    # queue entries must not already be ledgered and must sit OUTSIDE the
-    # window (their slot is round 7's, not a wasted r6 one)
-    for n in Q._R7_QUEUE:
-        assert n in names and n not in window
-        assert n not in r3 | r4 | r5 | set(Q._DRIVER_LEDGERED_R02)
+    q = entry.queries()
+    o = entry.oracle_sql()
+    for name in bench.HEADLINE:
+        assert name in q, f"{name} is not registered"
+        assert name in o, f"{name} has no oracle"
+    assert list(q) == [n for n, _, _ in Q._REGISTRY]
+    window = list(q)[:50]
+    outside = [n for n in bench.HEADLINE if n not in window]
+    assert outside == [], f"headline queries past the 50-entry window: {outside}"
 
 
 def test_no_hugeint_oracle_outputs():
