@@ -235,10 +235,11 @@ def lsh_oversized_buckets(
 
 def _candidate_ids(pairs: DataFrame, id_col: str) -> DataFrame:
     """Distinct ids appearing on either side of the candidate pair list —
-    the verify stage's working set.  In incremental / streaming use this is
-    increment-sized by construction (new x corpus candidates), so semi-
-    joining it into the text side BEFORE shingling keeps verify cost
-    O(|candidates|), not O(|corpus|).
+    the verify stage's working set.  In incremental use
+    (``lsh_incremental_candidate_pairs``) this is increment-sized by
+    construction (new x corpus candidates), so semi-joining it into the
+    text side BEFORE shingling keeps verify cost O(|candidates|), not
+    O(|corpus|).
 
     Deliberately NOT ``distinct()``-ed: the left-semi join dedupes by
     semantics anyway, and an aggregate here would just add a shuffle
@@ -250,30 +251,23 @@ def _candidate_ids(pairs: DataFrame, id_col: str) -> DataFrame:
 
 def ngram_jaccard(
     df: DataFrame, pairs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    k: int = 3, prune: bool = True,
+    k: int = 3,
 ) -> DataFrame:
     """Exact k-gram Jaccard for the given candidate pairs:
     (a, b, n_common, n_union, jaccard).  jaccard is an exact int/int division
     in double — engine-reproducible bit for bit.
 
-    With ``prune`` (the default), ``df`` is pruned to ids that actually
-    appear in ``pairs`` BEFORE the shingle arrays are computed — a
-    BROADCAST left-semi join, so the text side is never shuffled for the
-    prune.  Rows outside the candidate set can never reach the output (the
-    pair joins are inner); shingling them first would make the verify
-    stage scale with the corpus instead of with the candidate list — the
-    difference between a per-batch increment scan and a full-index scan in
-    the streaming shape.  The broadcast asserts the candidate ID SET fits
-    an executor (true by construction for incremental/streaming verify,
-    where candidates are increment x occupancy); callers verifying a
-    corpus-sized pair list — where the prune keeps nothing anyway — pass
-    ``prune=False``."""
-    sets_ = df
-    if prune:
-        sets_ = df.join(
-            F.broadcast(_candidate_ids(pairs, id_col)), id_col, "leftsemi"
-        )
-    sets_ = sets_.select(
+    ``df`` is pruned to ids that actually appear in ``pairs`` BEFORE the
+    shingle arrays are computed — a BROADCAST left-semi join, so the text
+    side is never shuffled for the prune.  Rows outside the candidate set
+    can never reach the output (the pair joins are inner); shingling them
+    first would make the verify stage scale with the corpus instead of
+    with the candidate list.  The broadcast assumes the candidate ID SET
+    (at most two ids per pair) fits an executor; bound a corpus-sized pair
+    list with ``lsh_candidate_pairs``'s ``max_bucket_size`` first."""
+    sets_ = df.join(
+        F.broadcast(_candidate_ids(pairs, id_col)), id_col, "leftsemi"
+    ).select(
         F.col(id_col).alias("sid"), shingle_hashes(F.col(text_col), k).alias("sh")
     )
     with_a = pairs.join(sets_.withColumnRenamed("sid", "a").withColumnRenamed("sh", "sha"), "a")
@@ -490,7 +484,7 @@ def near_dup_pipeline(
 
 def ngram_containment(
     df: DataFrame, pairs: DataFrame, text_col: str = "text",
-    id_col: str = "doc_id", k: int = 3, prune: bool = True,
+    id_col: str = "doc_id", k: int = 3,
 ) -> DataFrame:
     """Asymmetric containment for the given candidate pairs:
     ``containment(a in b) = |A ∩ B| / |A|`` — catches a document EMBEDDED
@@ -499,14 +493,11 @@ def ngram_containment(
     (a, b, n_common, containment_a_in_b, containment_b_in_a); exact int/int
     division in double, engine-reproducible bit for bit.  Joins only the
     candidate pairs, never the cross product; like ``ngram_jaccard`` the
-    text side is candidate-pruned before shingling (same ``prune``
-    broadcast contract)."""
-    sets_ = df
-    if prune:
-        sets_ = df.join(
-            F.broadcast(_candidate_ids(pairs, id_col)), id_col, "leftsemi"
-        )
-    sets_ = sets_.select(
+    text side is candidate-pruned before shingling (same broadcast
+    left-semi join)."""
+    sets_ = df.join(
+        F.broadcast(_candidate_ids(pairs, id_col)), id_col, "leftsemi"
+    ).select(
         F.col(id_col).alias("sid"), shingle_hashes(F.col(text_col), k).alias("sh")
     )
     with_a = pairs.join(

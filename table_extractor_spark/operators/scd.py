@@ -30,20 +30,13 @@ def scd2_build(
     ts_col: str,
     state_col: str,
     tiebreak: str,
-    keep_opener: bool = False,
 ) -> DataFrame:
     """(entity, state, valid_from, valid_to, is_current): SCD2 episodes.
 
     ``valid_from`` is the first event timestamp of the episode,
     ``valid_to`` the start of the NEXT episode (half-open intervals, so
     intervals tile each entity's timeline with no gaps or overlaps), null
-    for the current episode; ``is_current`` marks it.
-
-    ``keep_opener=True`` appends ``opener_<tiebreak>``: the tiebreak id of
-    the event that OPENED the episode — the streaming maintainer
-    (``streaming/scd2``) needs it to treat the dimension store as a
-    collapsed change log (episodes twinned on (entity, valid_from, state)
-    by same-instant flapping stay distinguishable only by this id)."""
+    for the current episode; ``is_current`` marks it."""
     order = [F.col(ts_col).asc(), F.col(tiebreak).asc()]
     w_ev = Window.partitionBy(entity_col).orderBy(*order)
     # an event opens a new episode iff it's the entity's first event or
@@ -56,15 +49,10 @@ def scd2_build(
         )
     )
     w_ep = Window.partitionBy(entity_col).orderBy(*order)
-    cols = [
+    return changes.withColumn("valid_to", F.lead(ts_col).over(w_ep)).select(
         F.col(entity_col),
         F.col(state_col).alias("state"),
         F.col(ts_col).alias("valid_from"),
         F.col("valid_to"),
         F.col("valid_to").isNull().alias("is_current"),
-    ]
-    if keep_opener:
-        cols.append(F.col(tiebreak).alias(f"opener_{tiebreak}"))
-    return changes.withColumn("valid_to", F.lead(ts_col).over(w_ep)).select(
-        *cols
     )

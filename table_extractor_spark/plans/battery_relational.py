@@ -248,30 +248,6 @@ def rollup_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "windowed_event_counts",
-    oracle="""
-SELECT epoch_us(time_bucket(INTERVAL '10 minutes', ts)) AS window_start_us,
-       epoch_us(time_bucket(INTERVAL '10 minutes', ts)
-                + INTERVAL '10 minutes') AS window_end_us,
-       event_type, COUNT(*) AS n,
-       ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
-FROM events GROUP BY 1, 2, 3
-""",
-)
-def windowed_event_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming windowed-aggregation operator (streaming/stateful.py)
-    run in batch mode — identical plan minus the watermark state; the
-    streaming form (watermark closes windows, late data dropped, restart
-    resumes) is pinned in tests/test_streaming_stateful.py."""
-    from ..streaming.stateful import windowed_event_counts
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    return windowed_event_counts(ev)
-
-
-@register(
     "heavy_hitters",
     oracle="""
 SELECT user_id, n, CAST(rk AS INT) AS rk FROM (
@@ -417,54 +393,6 @@ def supplier_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "event_funnel",
-    oracle="""
-WITH u0 AS (SELECT DISTINCT user_id FROM events),
-s1 AS (
-  SELECT user_id, MIN(ts) AS t FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-),
-s2 AS (
-  SELECT e.user_id, MIN(e.ts) AS t
-  FROM events e JOIN s1 ON e.user_id = s1.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY e.user_id
-),
-s3 AS (
-  SELECT e.user_id, MIN(e.ts) AS t
-  FROM events e JOIN s2 ON e.user_id = s2.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY e.user_id
-),
-tiers AS (
-      SELECT 0 AS i, '(all)' AS step, CAST(COUNT(*) AS BIGINT) AS n_users FROM u0
-  UNION ALL SELECT 1, 'view', CAST(COUNT(*) AS BIGINT) FROM s1
-  UNION ALL SELECT 2, 'click', CAST(COUNT(*) AS BIGINT) FROM s2
-  UNION ALL SELECT 3, 'purchase', CAST(COUNT(*) AS BIGINT) FROM s3
-)
-SELECT CAST(i AS BIGINT) AS step_idx, step, n_users,
-       CAST(CASE WHEN i > 0 AND lag(n_users) OVER (ORDER BY i) > 0
-                 THEN 1000000 * n_users
-                      // lag(n_users) OVER (ORDER BY i) END AS BIGINT)
-         AS conversion_ppm
-FROM tiers
-""",
-)
-def event_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential funnel analysis (operators/funnel.funnel_counts): users
-    surviving view -> click -> purchase under STRICT temporal ordering
-    (step k+1 counts only events strictly after the user's earliest
-    qualifying step-k event; same-instant ties do not advance).  One
-    filtered per-user aggregation per step, each joined to the shrinking
-    survivor table of the previous step on the user key — partitioning
-    reused across steps, no window over the raw event table; the k+1-row
-    report is the only bounded-window stage.  Integer ppm conversions,
-    replayed by chained CTEs."""
-    from ..operators.funnel import funnel_counts
-
-    ev = load_table(spark, sf_dir, "events")
-    return funnel_counts(ev, ["view", "click", "purchase"])
-
-
-@register(
     "cohort_retention",
     oracle="""
 WITH c AS (
@@ -546,60 +474,6 @@ def top_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
         .select("user_id", "event_id", "rk")
-    )
-
-
-@register(
-    "sessionization",
-    oracle="""
-WITH gaps AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                 IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-), sessions AS (
-  SELECT user_id, event_id, ts,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS session_no
-  FROM gaps
-)
-SELECT user_id, CAST(session_no AS INT) AS session_no,
-       COUNT(*) AS n_events,
-       epoch_us(MIN(ts)) AS session_start_us,
-       epoch_us(MAX(ts)) AS session_end_us
-FROM sessions GROUP BY user_id, session_no
-""",
-)
-def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (training-pipeline staple): lag + cumulative
-    sum of session-break flags, then per-session aggregates.  Timestamps are
-    compared as epoch microseconds (UTC session, see session.py)."""
-    ev = load_table(spark, sf_dir, "events")
-    # parquet stores timestamp_ntz; with the UTC session (session.py) the
-    # ntz -> instant cast is deterministic and unix_micros applies
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    ev = ev.withColumn("__us", us)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = ev.withColumn(
-        "new_session",
-        F.when(
-            F.lag("__us").over(w).isNull()
-            | (F.col("__us") - F.lag("__us").over(w) > 30 * 60 * 1_000_000),
-            1,
-        ).otherwise(0),
-    )
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sessions = gaps.withColumn(
-        "session_no", F.sum("new_session").over(wrun).cast("int")
-    )
-    return sessions.groupBy("user_id", "session_no").agg(
-        F.count("*").alias("n_events"),
-        F.min("__us").alias("session_start_us"),
-        F.max("__us").alias("session_end_us"),
     )
 
 

@@ -22,16 +22,10 @@ bookkeeping vs. a full-scan diff).
 from __future__ import annotations
 
 import time
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-def processed_manifest(spark: SparkSession, manifest_dir: str) -> Optional[DataFrame]:
-    try:
-        return spark.read.parquet(manifest_dir)
-    except Exception:
-        return None
+from ..streaming.checkpoint import _read_parquet_or_none
 
 
 def new_documents(
@@ -40,10 +34,14 @@ def new_documents(
 ) -> DataFrame:
     """Documents not yet recorded as processed (left anti join).
 
+    An absent or empty manifest directory means nothing is processed yet.
+    A corrupt or unreadable manifest raises: read as "nothing processed" it
+    would make the run quietly re-extract every document.
+
     The anti join shuffles on doc_id unless the manifest is small enough to
     broadcast — Catalyst/AQE picks; with Iceberg the join disappears entirely
     (file-level snapshot diff)."""
-    manifest = processed_manifest(spark, manifest_dir)
+    manifest = _read_parquet_or_none(spark, manifest_dir)
     if manifest is None:
         return docs
     seen = manifest.select(F.col(id_col)).distinct()

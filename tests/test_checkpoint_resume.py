@@ -166,3 +166,20 @@ def test_corrupt_lineage_raises_instead_of_reprocessing(spark, run):
         run.completed_buckets(spark)
     with pytest.raises(Exception, match="part-0.parquet"):
         run.lineage(spark)
+
+
+def test_corrupt_manifest_raises_instead_of_reprocessing(spark, tmp_path):
+    """Only an absent or data-less manifest directory means "nothing
+    processed"; a corrupt manifest file must surface, not read as an empty
+    manifest (which would make an incremental run quietly re-extract every
+    document)."""
+    manifest = str(tmp_path / "manifest")
+    docs = fixture_corpus_df(spark, copies=2)
+    n_docs = docs.count()
+    assert new_documents(spark, docs, manifest).count() == n_docs  # no dir yet
+    os.makedirs(manifest)
+    assert new_documents(spark, docs, manifest).count() == n_docs  # empty dir
+    with open(os.path.join(manifest, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="part-0.parquet"):
+        new_documents(spark, docs, manifest).count()

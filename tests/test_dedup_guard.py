@@ -413,3 +413,29 @@ def test_simhash_hamming_block_cap_bounds_and_is_observable(spark):
     capped = simhash_hamming_pairs(sigs, max_distance=3, max_block_size=10)
     pairs = {(r.a, r.b) for r in capped.collect()}
     assert pairs == {(100, 101)}
+
+
+def test_ngram_jaccard_verify_scan_is_candidate_pruned(spark):
+    """The verify stage's text-side scan must read O(candidates), not
+    O(corpus): ngram_jaccard semi-joins the candidate id set into the text
+    side BEFORE shingling (visible as a LeftSemi join in the optimized
+    plan), and its output only ever touches candidate ids."""
+    from table_extractor_spark.operators.dedup import (
+        ngram_containment,
+        ngram_jaccard,
+    )
+
+    docs = spark.createDataFrame(
+        [(f"doc_{i}", " ".join(f"w{i}_{j}" for j in range(20)))
+         for i in range(200)],
+        "doc_id string, text string",
+    )
+    pairs = spark.createDataFrame(
+        [("doc_1", "doc_2"), ("doc_1", "doc_3")], "a string, b string"
+    )
+    for fn in (ngram_jaccard, ngram_containment):
+        out = fn(docs, pairs)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LeftSemi" in plan, f"{fn.__name__} lost the candidate prune"
+        got = {r.a for r in out.collect()} | {r.b for r in out.collect()}
+        assert got <= {"doc_1", "doc_2", "doc_3"}

@@ -1,7 +1,8 @@
 """End-to-end packaged-job test: the REAL `spark-submit --py-files` path the
 north rule names — zip the package, submit `scripts/submit_job.py` from a
 cwd where the repo is NOT importable, and verify the checkpointed run's
-committed output matches the in-process pipeline, including a resume leg.
+committed output matches the in-process pipeline, including a resume leg
+and the ``--incremental-manifest`` record written once the run completes.
 
 Slow (two JVM launches); marked so `-m "not slow"` can skip it.
 """
@@ -66,19 +67,27 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
 
     inp = str(tmp_path / "docs")
     out = str(tmp_path / "run")
+    manifest = str(tmp_path / "manifest")
+    incremental = ("--incremental-manifest", manifest)
     docs = fixture_corpus_df(spark, copies=2)
     docs.write.parquet(inp)
 
     # leg 1: partial run (2 of 8 buckets per wave, stop after 1 wave)
-    _submit(pyzip, tmp_path, inp, out, "rsub", extra=("--max-waves", "1"))
+    _submit(pyzip, tmp_path, inp, out, "rsub",
+            extra=("--max-waves", "1", *incremental))
     run = CheckpointedRun(base_dir=out, run_id="rsub", num_buckets=8, salt=0,
                           wave_size=4)
     done_after_1 = run.completed_buckets(spark)
     assert len(done_after_1) == 4
+    # an unfinished run records nothing as processed
+    assert not os.path.exists(manifest)
 
     # leg 2: re-submit same output/run-id -> resumes, completes the rest
-    _submit(pyzip, tmp_path, inp, out, "rsub")
+    _submit(pyzip, tmp_path, inp, out, "rsub", extra=incremental)
     assert run.completed_buckets(spark) == list(range(8))
+    # the finished run recorded every input document exactly once
+    recorded = [r.doc_id for r in spark.read.parquet(manifest).collect()]
+    assert sorted(recorded) == sorted(r.doc_id for r in docs.collect())
 
     # committed output == in-process pipeline output, span for span
     def spans_by_doc(df):
