@@ -567,12 +567,11 @@ def _triples_df(
 
     docs = synthesize_docs_from_testdata(spark, sf_dir)
     out, _ = extract_pipeline(docs, num_partitions=32, prefilter=False, spread="coalesce")
-    # emit_triples fans the extraction out into four consumers (tables,
-    # cells, row triples, cell triples); without the persist the kernel
-    # stage re-executes once per consumer (a plan audit counted 4
-    # MapInArrow nodes without it).  Production writes the parse to a table
-    # and branches from it (write-then-branch); persist is the query-surface
-    # equivalent.
+    # emit_triples wants a materialized input: its range exchange on doc_id
+    # samples the input in a job of its own before the shuffle reads it
+    # again, so without the persist the kernel stage runs twice.  Production
+    # writes the parse to a table and reads that; persist is the
+    # query-surface equivalent.
     out = out.persist()
     rules = spark.createDataFrame(
         [
@@ -692,6 +691,7 @@ def emit_triples_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, media_anchors=True
     ).filter(F.col("doc_id").substr(F.lit(5), F.lit(10)).cast("int") < 300)
     out, _ = extract_pipeline(docs, num_partitions=16, prefilter=False, spread="coalesce")
+    # materialized input for emit_triples' range sample (see _triples_df)
     out = out.persist()
     rules = spark.createDataFrame(
         [
@@ -803,8 +803,9 @@ def settings_inventory_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = synthesize_docs_from_testdata(spark, sf_dir)
     out, _ = extract_pipeline(docs, num_partitions=32, prefilter=False, spread="coalesce")
-    # table_inventory joins the sections and headers branches of the same
-    # extraction — persist so the kernel stage runs once, not per branch
+    # settings_inventory reads its input once (a hash exchange, no range
+    # sample); the persist gives it the same materialized extraction the
+    # triple queries read, as production reads the parse from a table
     out = out.persist()
     ontology = spark.createDataFrame(
         [("word", "dbo:word"), ("unused", "dbo:unused")], ["label", "property"]

@@ -8,7 +8,9 @@ the user edits into mapping rules (WriteSettingsFile.py:36-104).
 Rebuilt Spark-first over the extraction output: the same parse kernel (run
 with full depth — headers are a prefix of the span sequence), then pure
 DataFrame aggregation.  At domain scale the inventory is tiny (it is GROUPed
-output), so the ontology join broadcasts.
+output), so the ontology join broadcasts.  ``settings_inventory`` reads its
+spans once and shuffles twice: on doc_id for the table windows, and for the
+(section, header) groupBy.
 """
 
 from __future__ import annotations
@@ -20,19 +22,25 @@ def table_inventory(out_spans: DataFrame) -> DataFrame:
     """(doc_id, table_idx, section, header) — one row per header occurrence.
 
     Reconstructs table membership from the ordered span sequence: a table's
-    spans start at its 'section' span (running count = W2-style latch)."""
+    spans start at its 'section' span (running count = W2-style latch), and
+    each header takes its table's section from a window over (doc_id,
+    table_idx).  Both windows ride one hash exchange on ``doc_id``; headers
+    before a doc's first section belong to no table and are dropped."""
+    kind = F.col("kind")
     w_doc = Window.partitionBy("doc_id").orderBy("order")
-    seg = out_spans.filter(F.col("kind").isin("section", "header")).withColumn(
-        "table_idx",
-        F.sum(F.when(F.col("kind") == "section", 1).otherwise(0)).over(w_doc),
+    w_tbl = Window.partitionBy("doc_id", "table_idx")
+    return (
+        out_spans.filter(kind.isin("section", "header"))
+        .withColumn(
+            "table_idx",
+            F.sum(F.when(kind == "section", 1).otherwise(0)).over(w_doc),
+        )
+        .withColumn(
+            "section", F.max(F.when(kind == "section", F.col("text"))).over(w_tbl)
+        )
+        .filter((kind == "header") & (F.col("table_idx") > 0))
+        .select("doc_id", "table_idx", "section", F.col("text").alias("header"))
     )
-    sections = seg.filter(F.col("kind") == "section").select(
-        "doc_id", "table_idx", F.col("text").alias("section")
-    )
-    headers = seg.filter(F.col("kind") == "header").select(
-        "doc_id", "table_idx", F.col("text").alias("header")
-    )
-    return sections.join(headers, ["doc_id", "table_idx"])
 
 
 def settings_inventory(

@@ -15,17 +15,26 @@ DataFrame transforms — window functions to reconstruct table/row/column
 structure from the ordered span sequence, broadcast joins for the rules:
 
 * table segmentation: running count of 'section' spans (W2-style latch);
+* per table: its section and ordered header list, as windows over
+  (doc_id, table_idx);
 * column index: position within the table's cell sequence modulo the
   table's header count (J5 positional zip, HtmlTableParser.py:944-951);
-* reification index: row_number over (doc, table, row) (A9);
+* reification index: dense_rank over the doc's gated (table, row) (A9);
 * rules: two broadcast LEFT joins + coalesce (strict `<section>_<header>`
-  first, bare `<header>` second), inner broadcast join for the section gate.
+  first, bare `<header>` second), inner broadcast join for the section gate;
+* row and cell triples from one frame: a row's first cell also emits the
+  row triple.
+
+Every step is a function of one document, so the spans are shuffled once:
+``emit_triples`` range-partitions them on doc_id, and every window
+partitions by (doc_id, ...) and reuses that distribution.  The triples keep
+it, so ``write_ttl``'s global (doc_id, t_order) sort is a sort inside each
+partition.  The rule and entity tables are broadcast; the only other
+shuffle is the entity table's ``distinct``.
 
 Assumes tables whose data cells are plain text spans (kind='cell'); link
 and media spans ride through as URI objects (media linkage per the north
-rule).  At 10^12 docs every join here is a broadcast — the only shuffles
-are the window partitions on doc_id, which reuse the pipeline's salted
-partitioning.
+rule).
 """
 
 from __future__ import annotations
@@ -67,48 +76,64 @@ def emit_triples(
     shortcut (Mapper.py:228-238) is a documented non-reproduced mechanic —
     the probe here is exact-match).  Typing precedence matches the
     reference: media-uri, then float, then resource probe, then string.
+
+    ``rules`` follows the reference's contract: it is the mapping-rules
+    dict as a frame, so keys are unique.  A frame that repeats a key fans
+    out — every triple whose gate or predicate reads that key is emitted
+    once per rule row carrying it (row triples included; they are not
+    deduplicated).
+
+    A table with cell spans but no header span maps to nothing: no row
+    triples, no cell triples, and it takes no reification index — the
+    kernel never emits such a table (the reference rejects it, E2
+    HtmlTableParser.py:205-211).
+
+    ``out_spans`` should be a materialized table (a parquet read or a
+    persisted frame): the range exchange on ``doc_id`` samples its input
+    in a job of its own before the shuffle reads it again.  The triples
+    come out range-partitioned on ``doc_id``, which is the order
+    ``write_ttl`` needs, so the TTL's global sort adds no exchange.
     """
-    w_doc = Window.partitionBy("doc_id").orderBy("order")
+    kind = F.col("kind")
+    # every step below is a function of one document: the range exchange is
+    # the plan's only shuffle of the spans, and each window partitions by
+    # (doc_id, ...) so it reuses that distribution.  Link and media spans
+    # carry nothing the triples read (a cell has its media_ref).
+    spans = out_spans.filter(kind.isin("section", "header", "cell"))
+    spans = spans.repartitionByRange("doc_id")
 
     # table segmentation: which section-table does each span belong to
-    seg = out_spans.withColumn(
-        "table_idx",
-        F.sum(F.when(F.col("kind") == "section", 1).otherwise(0)).over(w_doc),
+    w_doc = Window.partitionBy("doc_id").orderBy("order")
+    seg = spans.withColumn(
+        "table_idx", F.sum(F.when(kind == "section", 1).otherwise(0)).over(w_doc)
     )
 
-    # per-table header list (ordered) and section text
+    # per table: its section text, its ordered header list, and each cell's
+    # position in the table's cell sequence (one Window, one sort)
     w_tbl = Window.partitionBy("doc_id", "table_idx").orderBy("order")
-    tables = (
-        seg.filter(F.col("kind").isin("section", "header"))
-        .groupBy("doc_id", "table_idx")
-        .agg(
-            F.max(F.when(F.col("kind") == "section", F.col("text"))).alias(
-                "section"
-            ),
-            F.expr(
-                "sort_array(collect_list(CASE WHEN kind = 'header' "
-                "THEN struct(order, text) END))"
-            ).alias("hdrs"),
-        )
-        .select(
-            "doc_id",
-            "table_idx",
-            "section",
-            F.expr("transform(hdrs, h -> h.text)").alias("headers"),
+    w_tbl_all = w_tbl.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    w_tbl_upto = w_tbl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    hdrs = F.sort_array(
+        F.collect_list(F.when(kind == "header", F.struct("order", "text"))).over(
+            w_tbl_all
         )
     )
-
-    # cells with column index = position mod header count (J5)
     cells = (
-        seg.filter(F.col("kind") == "cell")
-        .withColumn("cell_seq", F.row_number().over(w_tbl) - 1)
-        .join(tables, ["doc_id", "table_idx"])
-        .withColumn("n_headers", F.greatest(F.size("headers"), F.lit(1)))
+        seg.withColumn(
+            "section", F.max(F.when(kind == "section", F.col("text"))).over(w_tbl_all)
+        )
+        .withColumn("headers", F.transform(hdrs, lambda h: h.getField("text")))
+        .withColumn(
+            "cell_seq",
+            (F.count(F.when(kind == "cell", 1)).over(w_tbl_upto) - 1).cast("int"),
+        )
+        .withColumn("n_headers", F.size("headers"))
+        # headerless tables map to nothing (see the docstring)
+        .filter((kind == "cell") & (F.col("n_headers") > 0))
+        # column index = position mod header count (J5)
         .withColumn("row_idx", (F.col("cell_seq") / F.col("n_headers")).cast("int"))
         .withColumn("col_idx", F.col("cell_seq") % F.col("n_headers"))
-        .withColumn(
-            "header", F.element_at("headers", F.col("col_idx").cast("int") + 1)
-        )
+        .withColumn("header", F.element_at("headers", F.col("col_idx") + 1))
     )
 
     # J2: section gate — inner broadcast join drops unmapped tables
@@ -122,14 +147,27 @@ def emit_triples(
 
     # reification index: monotone row counter across a doc's MAPPED tables
     # (A9) — dense_rank directly on the gated cells (each distinct (table,
-    # row) gets the next counter value), riding the doc_id window partition
-    # already paid for.  Computed AFTER the J2 gate because the reference's
-    # map() never runs for an unmapped section, so gated tables consume no
-    # reification indices (Mapper.py:92-98; pinned by the randomized batch
-    # differential).  The r01 distinct+row_number+re-join did the same
-    # numbering with an avoidable extra shuffle and join.
+    # row) gets the next counter value).  Computed AFTER the J2 gate because
+    # the reference's map() never runs for an unmapped section, so gated
+    # tables consume no reification indices (Mapper.py:92-98; pinned by the
+    # randomized batch differential).
     w_rows = Window.partitionBy("doc_id").orderBy("table_idx", "row_idx")
     cells = cells.withColumn("reif", F.dense_rank().over(w_rows))
+
+    # row and cell triples from the same frame: a row's first cell also
+    # carries its row triple (Mapper.py:97-101), so every gated row gets one
+    # whether or not any of its cells map
+    cells = cells.withColumn(
+        "is_row",
+        F.explode(
+            F.when(F.col("col_idx") == 0, F.array(F.lit(True), F.lit(False)))
+            .otherwise(F.array(F.lit(False)))
+        ),
+    )
+    is_row = F.col("is_row")
+    # a row triple's predicate is its section's property: null keys keep
+    # it out of the header-rule and entity joins
+    cell_header = F.when(~is_row, F.col("header"))
 
     # J1: strict `<section>_<header>` then loose `<header>` cascade
     strict = rules.select(
@@ -141,63 +179,60 @@ def emit_triples(
     cells = (
         cells.join(
             F.broadcast(strict),
-            F.concat_ws("_", "section", "header") == F.col("__stkey"),
+            F.concat("section", F.lit("_"), cell_header) == F.col("__stkey"),
             "left",
         )
-        .join(F.broadcast(loose), F.col("header") == F.col("__lokey"), "left")
+        .join(F.broadcast(loose), cell_header == F.col("__lokey"), "left")
         .withColumn("prop", F.coalesce("strict_prop", "loose_prop"))
     )
 
-    subject_row = F.concat_ws("__", "doc_id", F.col("reif").cast("string"))
-
-    # row triples: one per (doc, reified row) (Mapper.py:97-101)
-    row_triples = (
-        cells.select("doc_id", "section_prop", F.col("reif"), subject_row.alias("obj"))
-        .distinct()
-        .select(
-            "doc_id",
-            F.col("doc_id").alias("subject"),
-            F.col("section_prop").alias("predicate"),
-            F.col("obj").alias("object"),
-            F.lit("resource").alias("object_kind"),
-            (F.col("reif") * 1000).alias("t_order"),
-        )
+    # row triples pass; cell triples are mapped, non-empty cells, typed via
+    # the py2 float() grammar (F10, MapperTools.py:183-195) — NOT try_cast,
+    # whose grammar differs (e.g. '1.5D' casts in Spark, raises in py2).  The
+    # reference's xsd:int branch (Mapper.py:204-205) is unreachable for
+    # string cells — every string py2 int() accepts, py2 float() accepts
+    # first — so no 'int' kind exists here (documented rather than ported
+    # as dead code).
+    mapped = cells.filter(
+        is_row | (F.col("prop").isNotNull() & (F.col("text") != "-"))
     )
-
-    # cell triples: mapped, non-empty cells; typed via the py2 float()
-    # grammar (F10, MapperTools.py:183-195) — NOT try_cast, whose grammar
-    # differs (e.g. '1.5D' casts in Spark, raises in py2).  The reference's
-    # xsd:int branch (Mapper.py:204-205) is unreachable for string cells —
-    # every string py2 int() accepts, py2 float() accepts first — so no
-    # 'int' kind exists here (documented rather than ported as dead code).
-    mapped = cells.filter(F.col("prop").isNotNull() & (F.col("text") != "-"))
     if entities is not None:
         ent = entities.select(F.col("entity").alias("__ent")).distinct()
-        mapped = mapped.withColumn("__adj", adjust_resource(F.col("text"))).join(
-            F.broadcast(ent), F.col("__adj") == F.col("__ent"), "left"
-        )
+        mapped = mapped.withColumn(
+            "__adj", F.when(~is_row, adjust_resource(F.col("text")))
+        ).join(F.broadcast(ent), F.col("__adj") == F.col("__ent"), "left")
         probe_hit = F.col("__ent").isNotNull()
+        probe_obj = F.col("__adj")
     else:
         probe_hit = F.lit(False)
+        probe_obj = F.col("text")
 
-    cell_triples = mapped.select(
+    subject_row = F.concat_ws("__", "doc_id", F.col("reif").cast("string"))
+    is_media = F.col("media_ref") != ""
+    is_float = py2_float_matches(F.col("text"))
+    return mapped.select(
         "doc_id",
-        subject_row.alias("subject"),
-        F.col("prop").alias("predicate"),
-        F.when(F.col("media_ref") != "", F.col("media_ref"))
-        .when(py2_float_matches(F.col("text")), F.col("text"))
-        .when(probe_hit, F.col("__adj") if entities is not None else F.col("text"))
+        F.when(is_row, F.col("doc_id")).otherwise(subject_row).alias("subject"),
+        F.when(is_row, F.col("section_prop"))
+        .otherwise(F.col("prop"))
+        .alias("predicate"),
+        F.when(is_row, subject_row)
+        .when(is_media, F.col("media_ref"))
+        .when(is_float, F.col("text"))
+        .when(probe_hit, probe_obj)
         .otherwise(F.col("text"))
         .alias("object"),
-        F.when(F.col("media_ref") != "", F.lit("uri"))
-        .when(py2_float_matches(F.col("text")), F.lit("float"))
+        F.when(is_row, F.lit("resource"))
+        .when(is_media, F.lit("uri"))
+        .when(is_float, F.lit("float"))
         .when(probe_hit, F.lit("resource"))
         .otherwise(F.lit("string"))
         .alias("object_kind"),
-        (F.col("reif") * 1000 + F.col("col_idx") + 1).alias("t_order"),
+        (
+            F.col("reif") * 1000
+            + F.when(is_row, 0).otherwise(F.col("col_idx") + 1)
+        ).alias("t_order"),
     )
-
-    return row_triples.unionByName(cell_triples)
 
 
 def _ttl_escape_literal(c: Column) -> Column:
@@ -288,32 +323,39 @@ def ttl_lines(
     )
 
 
+def ttl_file_lines(
+    triples: DataFrame,
+    base_uri: str = "http://dbpedia.org/resource/",
+    partitions: int | None = None,
+) -> DataFrame:
+    """The TTL file's content: one ``line`` column in GLOBAL (doc_id,
+    t_order) order across partitions, which ``write_ttl`` writes.
+
+    A global ``orderBy`` needs its input range-partitioned on a prefix of
+    the sort keys.  ``emit_triples`` output already is (on ``doc_id``), so
+    the order costs only a sort inside each partition; any other input gets
+    a range exchange, whose boundaries come from Spark's reservoir sample of
+    the sort keys, so skew in doc sizes balances across files.
+    ``partitions`` fixes the file count with an explicit range exchange
+    that the sort then reuses."""
+    lines = ttl_lines(triples, base_uri)
+    if partitions is not None:
+        lines = lines.repartitionByRange(partitions, "doc_id", "t_order")
+    return lines.orderBy("doc_id", "t_order").select("line")
+
+
 def write_ttl(
     triples: DataFrame,
     path: str,
     base_uri: str = "http://dbpedia.org/resource/",
     partitions: int | None = None,
 ) -> None:
-    """S5 sink with GLOBAL (doc_id, t_order) order across the output files.
-
-    ``repartitionByRange`` + ``sortWithinPartitions``: file i's lines all
-    precede file i+1's, and lines are sorted inside each file — the
-    distributed equivalent of the reference's single ordered .ttl
-    (Analyzer.py:198-245) without the single-partition ``orderBy`` sink
-    that would funnel 10^12 rows through one task.  Range boundaries come
-    from Spark's reservoir sample of the sort keys, so skew in doc sizes
-    balances across files."""
-    lines = ttl_lines(triples, base_uri)
-    if partitions is not None:
-        ranged = lines.repartitionByRange(partitions, "doc_id", "t_order")
-    else:
-        ranged = lines.repartitionByRange("doc_id", "t_order")
-    (
-        ranged.sortWithinPartitions("doc_id", "t_order")
-        .select("line")
-        .write.mode("overwrite")
-        .text(path)
-    )
+    """S5 sink with GLOBAL (doc_id, t_order) order across the output files:
+    file i's lines all precede file i+1's, and lines are sorted inside each
+    file — the distributed equivalent of the reference's single ordered
+    .ttl (Analyzer.py:198-245) without the single-partition sink that would
+    funnel 10^12 rows through one task (see ``ttl_file_lines``)."""
+    ttl_file_lines(triples, base_uri, partitions).write.mode("overwrite").text(path)
 
 
 def linearize_tables(

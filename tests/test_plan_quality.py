@@ -4,6 +4,8 @@ broadcast, JVM-only expressions outside the kernel (no accidental Python)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -226,9 +228,10 @@ def test_near_dup_pairs_has_no_cross_product(spark):
 
 def test_emit_triples_reification_has_no_rejoin(spark):
     """A9 reification is a dense_rank on the cells' own doc window, and the
-    four consumers of the extraction share ONE persisted kernel stage — the
-    r01 plan paid 52 Exchanges and 4 kernel re-executions; now 5 and 1.
-    Budget-pin both with small headroom."""
+    chain reads ONE persisted kernel stage — the r01 plan paid 52 Exchanges
+    and 4 kernel re-executions.  Now 3 and 1: the extraction's two (input
+    spread, salted doc partitioning) and the chain's one range exchange on
+    doc_id."""
     import re
     from table_extractor_spark.plans import queries as Q
 
@@ -239,9 +242,72 @@ def test_emit_triples_reification_has_no_rejoin(spark):
     plan = formatted(Q.queries()["emit_triples"](spark, SF))
     nodes = re.findall(r"^\((\d+)\) ([A-Za-z]+)", plan, re.M)
     kinds = [k for _, k in nodes]
-    assert kinds.count("Exchange") <= 8, plan
+    assert kinds.count("Exchange") <= 3, plan
     assert kinds.count("MapInArrow") == 1, plan
     assert "SortMergeJoin" not in plan
+
+
+def _shuffle_exchanges(df) -> list:
+    """The partitioning of every shuffle exchange in ``df``'s physical plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"\bExchange (\w+partitioning\([^,)]*)", plan)
+
+
+def _parquet_scans(plan: str) -> int:
+    return len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M))
+
+
+def _spans_scan(spark, tmp_path):
+    path = str(tmp_path / "spans")
+    spark.createDataFrame(
+        [
+            ("d1", "section", "S", "", 0),
+            ("d1", "header", "H", "", 1),
+            ("d1", "cell", "x", "", 2),
+            ("d2", "section", "S", "", 0),
+            ("d2", "header", "H", "", 1),
+            ("d2", "cell", "1.5", "", 2),
+        ],
+        "doc_id string, kind string, text string, media_ref string, order int",
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_ttl_chain_shuffles_spans_once(spark, tmp_path):
+    """write_ttl(emit_triples(<parquet scan>)): the spans are scanned once and
+    shuffled once, by a range exchange on doc_id that every per-document
+    window and the TTL's global sort reuse — no hash exchange on doc_id, no
+    second range exchange.  The only other shuffle is the entity distinct."""
+    from table_extractor_spark.plans.triples import emit_triples, ttl_file_lines
+
+    spans = _spans_scan(spark, tmp_path)
+    rules = spark.createDataFrame(
+        [("SECTION_S", "p"), ("H", "h")], "key string, property string"
+    )
+    ents = spark.createDataFrame([("x",)], "entity string")
+    lines = ttl_file_lines(emit_triples(spans, rules, ents))
+    plan = formatted(lines)
+    assert _parquet_scans(plan) == 1, plan
+    exchanges = _shuffle_exchanges(lines)
+    assert sorted(e.split("#")[0] for e in exchanges) == [
+        "hashpartitioning(__ent",
+        "rangepartitioning(doc_id",
+    ], exchanges
+
+
+def test_settings_inventory_two_shuffles(spark, tmp_path):
+    """settings_inventory: one hash exchange on doc_id for both table windows
+    and one for groupBy(section, header); the section is a window, not a
+    sections-headers join."""
+    from table_extractor_spark.plans.explorer import settings_inventory
+
+    spans = _spans_scan(spark, tmp_path)
+    onto = spark.createDataFrame([("h", "dbo:h")], "label string, property string")
+    inv = settings_inventory(spans, onto)
+    assert _parquet_scans(formatted(inv)) == 1
+    exchanges = _shuffle_exchanges(inv)
+    assert len(exchanges) <= 2, exchanges
+    assert "SortMergeJoin" not in formatted(inv)
 
 
 def test_ttl_lines_escape_turtle(spark):
