@@ -13,9 +13,9 @@ Extra keys reported alongside the driver contract:
 * ``docs`` — corpus size the throughput was measured over;
 * ``cpus`` — parallelism used.
 
-Scaling-efficiency evidence across two parallelism levels (the north rule's
-N vs 4N criterion, sandboxed as local[8] vs local[32]) is produced by
-``scripts/bench_scaling.py`` and recorded in ``BENCH.md``.
+This harness is the driver contract only; performance claims, including
+scaling efficiency (``spark.scaling_eff_1to4``), come from ``perfbench/``
+(``python3 perfbench/run.py --workload W --seed N --seconds 12 --trace 1``).
 """
 
 from __future__ import annotations

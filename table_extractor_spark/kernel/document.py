@@ -25,7 +25,6 @@ independent unit of work — embarrassingly parallel.
 from __future__ import annotations
 
 import re
-from dataclasses import asdict  # noqa: F401  (public re-export compat)
 from typing import Iterable, List, Optional, Tuple
 
 from .grid import (

@@ -11,7 +11,7 @@ flag every training document that shares one.  Shapes for 100 TB:
   before the per-doc aggregation;
 * hashes reuse the engine-wide ``shingle_hashes`` arithmetic
   (md5-prefix mod MINHASH_P), so a SQL oracle replays them bit-for-bit
-  and the same sketches feed dedup and decontamination;
+  and the same signatures feed dedup and decontamination;
 * the report is per-doc (collision count + flag), never a filtered copy
   of the corpus — callers anti-join on it, keeping the decision auditable
   (no-silent-drops, same policy as the LSH giant-bucket guard).

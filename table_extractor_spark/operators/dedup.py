@@ -4,7 +4,7 @@ All hashing is the engine-agnostic H(s) (md5-prefix bigint) so results are
 reproducible anywhere and cross-checkable against a SQL oracle.  Every
 operator is expressed shuffle-consciously:
 
-* signatures / sketches are PER-ROW higher-order functions (zero shuffle,
+* signatures are PER-ROW higher-order functions (zero shuffle,
   whole-stage codegen) — never explode+groupBy when aggregate() can do it;
 * candidate generation (LSH banding) shuffles once on (band, bucket);
 * exact verification joins only the candidate pairs, never the cross product.
@@ -830,7 +830,7 @@ def winnowing_fingerprints(
     — public method, independent implementation): (doc_id, pos, fp), the
     rightmost-minimum shingle hash of every ``window`` consecutive k-gram
     hashes, deduplicated.  Unlike global bottom-k/minhash
-    sketches, winnowing guarantees a fingerprint inside EVERY window-length
+    signatures, winnowing guarantees a fingerprint inside EVERY window-length
     region, so two docs sharing any sufficiently long passage share a
     fingerprint at a known position — the partial-overlap primitive
     (``duplicate_passages`` finds exact runs; winnowing survives edits

@@ -1,4 +1,4 @@
-"""C2. Training-data pipeline queries: mixing, sampling, retrieval, sketches, ANN.
+"""C2. Training-data pipeline queries: mixing, sampling, retrieval, ANN.
 
 Only the queries the test suite checks by name stay registered here.
 Same engine-parity rules as every other registered query (see the
@@ -393,201 +393,6 @@ def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k is TakeOrderedAndProject — never a global sort."""
     docs = load_table(spark, sf_dir, "documents")
     return T.bm25_topk(docs, ["spark", "merge", "vector", "customer"])
-
-
-@register(
-    "bloom_dedup_prefilter",
-    oracle="""
-WITH ids AS (SELECT doc_id FROM documents),
-mem AS (SELECT doc_id FROM ids WHERE doc_id % 3 <> 0),
-mbits AS (
-  SELECT DISTINCT
-         (('0x' || substr(md5(CAST(t.h AS VARCHAR) || '|'
-                              || CAST(mem.doc_id AS VARCHAR)), 1, 15))::BIGINT
-          % 1024) AS bit
-  FROM mem, generate_series(0, 2) t(h)
-),
-pbits AS (
-  SELECT ids.doc_id,
-         (('0x' || substr(md5(CAST(t.h AS VARCHAR) || '|'
-                              || CAST(ids.doc_id AS VARCHAR)), 1, 15))::BIGINT
-          % 1024) AS bit
-  FROM ids, generate_series(0, 2) t(h)
-)
-SELECT p.doc_id,
-       CAST(MIN(CASE WHEN mb.bit IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-         AS bloom_hit,
-       CAST(CASE WHEN p.doc_id % 3 <> 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS exact_member
-FROM pbits p LEFT JOIN mbits mb ON p.bit = mb.bit
-GROUP BY p.doc_id
-""",
-)
-def bloom_dedup_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter standing-corpus membership screen (operators/
-    sketches.bloom_bits/bloom_probe, Bloom CACM 1970): the doc ids with
-    doc_id % 3 != 0 play the already-ingested corpus; every doc id plays
-    the incoming batch.  The set-bit table is <= 1024 rows no matter how
-    many members, broadcasts, and each probe resolves map-side —
-    bloom_hit = 0 PROVES novelty (skip the standing-index join),
-    bloom_hit = 1 routes to the exact path; exact_member ships alongside
-    so the driver hash pins both the no-false-negative invariant and the
-    exact false-positive tail at these parameters."""
-    from ..operators import sketches as SK
-
-    ids = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.col("doc_id").cast("string").alias("key")
-    )
-    bloom = SK.bloom_bits(
-        ids.filter(F.col("doc_id") % 3 != 0), bits=1024, hashes=3
-    )
-    # the probe side stays shuffle-free: one broadcast bit array, verdict
-    # computed map-side, exact_member derived in the same projection
-    return SK.bloom_probe(bloom, ids, bits=1024, hashes=3).select(
-        "doc_id",
-        "bloom_hit",
-        (F.col("doc_id") % 3 != 0).cast("long").alias("exact_member"),
-    )
-
-
-@register(
-    "frequent_trigrams_screen",
-    oracle="""
-WITH dd AS (SELECT string_split(lower(text), ' ') AS w FROM documents),
-pos AS (
-  SELECT w, unnest(generate_series(1, len(w) - 2)) AS i
-  FROM dd WHERE len(w) >= 3
-),
-g AS (SELECT w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS key FROM pos),
-cells AS (
-  SELECT t.r AS row,
-         (('0x' || substr(md5(CAST(t.r AS VARCHAR) || '|' || g.key),
-                          1, 15))::BIGINT % 4096) AS cell,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM g, generate_series(0, 3) t(r)
-  GROUP BY 1, 2
-),
-dk AS (SELECT DISTINCT key FROM g),
-est AS (
-  SELECT dk.key, CAST(MIN(c.cnt) AS BIGINT) AS est_cnt
-  FROM dk CROSS JOIN generate_series(0, 3) t(r)
-  JOIN cells c
-    ON c.row = t.r
-   AND c.cell = (('0x' || substr(md5(CAST(t.r AS VARCHAR) || '|' || dk.key),
-                                 1, 15))::BIGINT % 4096)
-  GROUP BY dk.key
-),
-cand AS (SELECT * FROM est WHERE est_cnt >= 5),
-exact AS (
-  SELECT g.key, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM g JOIN cand ON g.key = cand.key
-  GROUP BY g.key
-)
-SELECT cand.key, cand.est_cnt, exact.cnt
-FROM cand JOIN exact ON cand.key = exact.key
-WHERE exact.cnt >= 5
-""",
-)
-def frequent_trigrams_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-screened heavy hitters (operators/sketches.
-    countmin_heavy_hitters) over word trigrams: the sketch collapses to
-    one broadcast map row, every occurrence computes its own estimate
-    map-side and is filtered BEFORE any shuffle (est >= true ALWAYS, so
-    no true hitter can be dropped), and the exact groupBy that follows
-    runs only on surviving occurrences, removing collision noise —
-    exact, provably complete hot-gram mining whose only corpus-keyed
-    shuffle is over candidate occurrences.  The oracle replays sketch,
-    screen, and exact pass."""
-    from ..operators import sketches as SK
-
-    docs = load_table(spark, sf_dir, "documents")
-    grams = (
-        docs.select(F.split(F.lower(F.col("text")), " ").alias("w"))
-        .filter(F.size("w") >= 3)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(w) - 3), "
-                    "i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
-                )
-            ).alias("key")
-        )
-    )
-    return SK.countmin_heavy_hitters(grams, threshold=5)
-
-
-@register(
-    "doc_length_quantile_sketch",
-    oracle="""
-WITH tc AS (
-  SELECT doc_id,
-         CAST(len(list_filter(string_split(lower(text), ' '),
-                              w -> w <> '')) AS BIGINT) AS n
-  FROM documents
-),
-hist AS (SELECT n // 8 AS bin, COUNT(*) AS cnt FROM tc GROUP BY 1),
-cum AS (
-  SELECT bin, SUM(cnt) OVER (ORDER BY bin) AS cum,
-         SUM(cnt) OVER () AS n_total
-  FROM hist
-),
-probs AS (
-  SELECT * FROM (VALUES (250000), (500000), (750000), (990000)) p(p_ppm)
-),
-br AS (
-  SELECT p.p_ppm, MIN(c.bin) AS qbin
-  FROM probs p JOIN cum c ON c.cum * 1000000 >= p.p_ppm * c.n_total
-  GROUP BY p.p_ppm
-),
-vc AS (SELECT n, COUNT(*) AS cnt FROM tc GROUP BY n),
-vcum AS (
-  SELECT n, SUM(cnt) OVER (ORDER BY n) AS cum,
-         SUM(cnt) OVER () AS n_total
-  FROM vc
-),
-ex AS (
-  SELECT p.p_ppm, MIN(v.n) AS exact_q
-  FROM probs p JOIN vcum v ON v.cum * 1000000 >= p.p_ppm * v.n_total
-  GROUP BY p.p_ppm
-)
-SELECT CAST(br.p_ppm AS BIGINT) AS p_ppm,
-       CAST(br.qbin * 8 AS BIGINT) AS est_lo,
-       CAST(br.qbin * 8 + 7 AS BIGINT) AS est_hi,
-       CAST(ex.exact_q AS BIGINT) AS exact_q
-FROM br JOIN ex ON br.p_ppm = ex.p_ppm
-""",
-)
-def doc_length_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram quantile brackets (operators/sketches.
-    histogram_sketch/histogram_quantile_brackets) over per-doc token
-    counts: one bounded-key groupBy (range/8 bins regardless of corpus
-    size, map-side partial combine) replaces the full-sort exact
-    percentile at 100 TB, and the selected bin HARD-brackets the true
-    quantile.  The exact quantile rides along via the same operator at
-    bin_width = 1 (bins = distinct values — still bounded for length-
-    capped docs), so the driver hash pins bracket containment."""
-    from ..operators import sketches as SK
-
-    probs = (250_000, 500_000, 750_000, 990_000)
-    docs = load_table(spark, sf_dir, "documents")
-    tc = docs.select(
-        F.size(
-            F.filter(
-                F.split(F.lower(F.col("text")), " "), lambda w: w != ""
-            )
-        )
-        .cast("long")
-        .alias("n")
-    )
-    br = SK.histogram_quantile_brackets(
-        SK.histogram_sketch(tc, val_col="n", bin_width=8), probs, bin_width=8
-    )
-    ex = SK.histogram_quantile_brackets(
-        SK.histogram_sketch(tc, val_col="n", bin_width=1), probs, bin_width=1
-    ).select("p_ppm", F.col("est_lo").alias("exact_q"))
-    return br.join(F.broadcast(ex), "p_ppm").select(
-        "p_ppm", "est_lo", "est_hi", "exact_q"
-    )
 
 
 # --- driver-checkable ANN oracles ------------------------------------------

@@ -309,10 +309,9 @@ def extract_pipeline(
     prefilter it is meant to be; when ``spans`` is an unmaterialized
     synthesis EXPRESSION, Catalyst pushes the filter below the projection
     and duplicates the whole synthesis tree into the filter condition
-    (measured ~1 s per run on the sf1.0 extract battery — plan (2) in
-    plans/r07/extract_synthetic_before.txt).  Callers whose corpus embeds
-    a table in every document by construction (all synthesize_* corpora)
-    should pass ``prefilter=False``.
+    (measured ~1 s per run on the sf1.0 extract battery).  Callers whose
+    corpus embeds a table in every document by construction (all
+    synthesize_* corpora) should pass ``prefilter=False``.
 
     ``spread``: ``"shuffle"`` (default) is the salted repartition — the
     only safe choice for arbitrary inputs (file-scan split counts LIE about

@@ -55,6 +55,55 @@ def adjust_resource(c: Column) -> Column:
     return F.replace(out, F.lit(" "), F.lit("_"))
 
 
+def _table_cells(spans: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The cell spans of ``spans`` with the table structure rebuilt from each
+    document's ordered span sequence:
+
+    * ``table_idx``: running count of 'section' spans (W2-style latch), so a
+      doc's spans before its first section form table 0;
+    * ``section`` and the ordered ``headers`` of the cell's table;
+    * ``row_idx``, ``col_idx`` and ``header``: the cell's position in its
+      table's cell sequence, divided by and modulo the table's header count
+      (J5 positional zip, HtmlTableParser.py:944-951).
+
+    Cells of a table with no header span are dropped.  Every window
+    partitions by ``id_col`` first, so all of them share one distribution on
+    the document: the caller's, if it already partitioned on ``id_col``,
+    else one hash exchange."""
+    kind = F.col("kind")
+    w_doc = Window.partitionBy(id_col).orderBy("order")
+    seg = spans.withColumn(
+        "table_idx", F.sum(F.when(kind == "section", 1).otherwise(0)).over(w_doc)
+    )
+
+    # per table: its section text, its ordered header list, and each cell's
+    # position in the table's cell sequence (one Window, one sort)
+    w_tbl = Window.partitionBy(id_col, "table_idx").orderBy("order")
+    w_tbl_all = w_tbl.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    w_tbl_upto = w_tbl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    hdrs = F.sort_array(
+        F.collect_list(F.when(kind == "header", F.struct("order", "text"))).over(
+            w_tbl_all
+        )
+    )
+    return (
+        seg.withColumn(
+            "section", F.max(F.when(kind == "section", F.col("text"))).over(w_tbl_all)
+        )
+        .withColumn("headers", F.transform(hdrs, lambda h: h.getField("text")))
+        .withColumn(
+            "cell_seq",
+            (F.count(F.when(kind == "cell", 1)).over(w_tbl_upto) - 1).cast("int"),
+        )
+        .withColumn("n_headers", F.size("headers"))
+        .filter((kind == "cell") & (F.col("n_headers") > 0))
+        # column index = position mod header count (J5)
+        .withColumn("row_idx", (F.col("cell_seq") / F.col("n_headers")).cast("int"))
+        .withColumn("col_idx", F.col("cell_seq") % F.col("n_headers"))
+        .withColumn("header", F.element_at("headers", F.col("col_idx") + 1))
+    )
+
+
 def emit_triples(
     out_spans: DataFrame, rules: DataFrame, entities: DataFrame = None
 ) -> DataFrame:
@@ -102,39 +151,7 @@ def emit_triples(
     spans = out_spans.filter(kind.isin("section", "header", "cell"))
     spans = spans.repartitionByRange("doc_id")
 
-    # table segmentation: which section-table does each span belong to
-    w_doc = Window.partitionBy("doc_id").orderBy("order")
-    seg = spans.withColumn(
-        "table_idx", F.sum(F.when(kind == "section", 1).otherwise(0)).over(w_doc)
-    )
-
-    # per table: its section text, its ordered header list, and each cell's
-    # position in the table's cell sequence (one Window, one sort)
-    w_tbl = Window.partitionBy("doc_id", "table_idx").orderBy("order")
-    w_tbl_all = w_tbl.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    w_tbl_upto = w_tbl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hdrs = F.sort_array(
-        F.collect_list(F.when(kind == "header", F.struct("order", "text"))).over(
-            w_tbl_all
-        )
-    )
-    cells = (
-        seg.withColumn(
-            "section", F.max(F.when(kind == "section", F.col("text"))).over(w_tbl_all)
-        )
-        .withColumn("headers", F.transform(hdrs, lambda h: h.getField("text")))
-        .withColumn(
-            "cell_seq",
-            (F.count(F.when(kind == "cell", 1)).over(w_tbl_upto) - 1).cast("int"),
-        )
-        .withColumn("n_headers", F.size("headers"))
-        # headerless tables map to nothing (see the docstring)
-        .filter((kind == "cell") & (F.col("n_headers") > 0))
-        # column index = position mod header count (J5)
-        .withColumn("row_idx", (F.col("cell_seq") / F.col("n_headers")).cast("int"))
-        .withColumn("col_idx", F.col("cell_seq") % F.col("n_headers"))
-        .withColumn("header", F.element_at("headers", F.col("col_idx") + 1))
-    )
+    cells = _table_cells(spans)
 
     # J2: section gate — inner broadcast join drops unmapped tables
     sect_rules = rules.select(
@@ -371,55 +388,25 @@ def linearize_tables(
     joined in table order): the step that turns this engine's extraction
     output into corpus documents.
 
-    The header↔cell pairing is the positional zip of the reference's
-    Mapper (J5 — cell k of a row pairs with header k; reference
-    Mapper.py row/cell iteration), done at the DataFrame layer: headers
-    collect per doc into one broadcast-sized array column, cells index
-    themselves with a per-doc ROW_NUMBER, and (row, col) = divmod(idx,
-    n_headers).  Spans must be ONE table per document (the synthetic
-    corpus's shape; multi-table docs need a table-id column to segment
-    on — the kernel keeps tables contiguous in ``order`` but the flat
-    span schema carries no table boundary).
+    Tables, their headers and each cell's (row, column) come from the same
+    segmentation as ``emit_triples`` (``_table_cells``): a 'section' span
+    opens a table, and cell k of a row pairs with header k (J5).  Rows join
+    in (table, row) order.
 
     Returns (doc_id, n_rows, linearized) with the full text — md5-compact
     it at the query surface if the consumer only needs an identity.
 
-    Shape: one per-doc window over cells + two co-partitioned groupBys on
-    the doc id (Catalyst reuses the hash partitioning), headers joined
-    broadcast-style per doc; no Python, no global sort.
+    Shape: the segmentation windows and both groupBys share one hash
+    exchange on the doc id; no join, no broadcast, no Python.
     """
-    hdrs = (
-        spans.filter(F.col("kind") == "header")
-        .groupBy(id_col)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("order", "text"))),
-                lambda s: s.getField("text"),
-            ).alias("__headers")
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy("order")
-    cells = (
-        spans.filter(F.col("kind") == "cell")
-        .withColumn("__idx", F.row_number().over(w) - 1)
-        .join(hdrs, id_col)
-        .withColumn("__n_h", F.size("__headers"))
-        .withColumn("__row", F.expr("__idx div __n_h"))
-        .withColumn("__col", F.expr("__idx % __n_h"))
-        .withColumn(
-            "__pair",
-            F.concat(
-                F.element_at("__headers", F.col("__col").cast("int") + 1),
-                F.lit(kv_sep),
-                F.col("text"),
-            ),
-        )
-    )
-    rows = cells.groupBy(id_col, "__row").agg(
+    kind = F.col("kind")
+    cells = _table_cells(spans.filter(kind.isin("section", "header", "cell")), id_col)
+    pair = F.concat(F.col("header"), F.lit(kv_sep), F.col("text"))
+    rows = cells.groupBy(id_col, "table_idx", "row_idx").agg(
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("__col", "__pair"))),
-                lambda s: s.getField("__pair"),
+                F.array_sort(F.collect_list(F.struct("col_idx", pair.alias("p")))),
+                lambda s: s.getField("p"),
             ),
             col_sep,
         ).alias("__row_text")
@@ -428,7 +415,9 @@ def linearize_tables(
         F.count("*").cast("long").alias("n_rows"),
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("__row", "__row_text"))),
+                F.array_sort(
+                    F.collect_list(F.struct("table_idx", "row_idx", "__row_text"))
+                ),
                 lambda s: s.getField("__row_text"),
             ),
             row_sep,

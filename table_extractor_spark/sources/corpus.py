@@ -229,10 +229,6 @@ def fixture_documents() -> List[Tuple[str, List[dict]]]:
     return docs
 
 
-def fixture_doc_ids() -> List[str]:
-    return [d for d, _ in fixture_documents()]
-
-
 def replicate(
     docs: List[Tuple[str, List[dict]]], copies: int
 ) -> List[Tuple[str, List[dict]]]:

@@ -16,21 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .corpus import corpus_rows
 
-TPCH_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TPCH_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
 
 
 def fixture_corpus_df(spark: SparkSession, copies: int = 1) -> DataFrame:

@@ -243,9 +243,10 @@ def test_hostile_corpus_never_kills_tasks(spark):
 
 
 def test_linearize_tables_pairs_headers_positionally(spark):
-    """3-column table, order-scrambled input rows: the per-doc zip must
+    """3-column table, order-scrambled input rows: the per-table zip must
     reassemble 'H1: a | H2: b | H3: c' lines in table order regardless of
-    partitioning or input order."""
+    partitioning or input order, and a doc's second table pairs its cells
+    with its own headers."""
     from table_extractor_spark.plans.triples import linearize_tables
 
     rows = [
@@ -263,6 +264,17 @@ def test_linearize_tables_pairs_headers_positionally(spark):
         ("d2", "header", "V", "", 2),
         ("d2", "cell", "k1", "", 3),
         ("d2", "cell", "v1", "", 4),
+        # two tables in one doc: each 'section' span opens a table with its
+        # own headers, so the zip restarts per table
+        ("d3", "section", "Career", "", 1),
+        ("d3", "header", "Team", "", 2),
+        ("d3", "header", "Goals", "", 3),
+        ("d3", "cell", "Alpha", "", 4),
+        ("d3", "cell", "12", "", 5),
+        ("d3", "section", "Honours", "", 6),
+        ("d3", "header", "Title", "", 7),
+        ("d3", "cell", "Cup", "", 8),
+        ("d3", "cell", "League", "", 9),
     ]
     import random
 
@@ -280,3 +292,4 @@ def test_linearize_tables_pairs_headers_positionally(spark):
         "Name: ana | Role: gk | Team: red\nName: bo | Role: st | Team: blue",
     )
     assert got["d2"] == (1, "K: k1 | V: v1")
+    assert got["d3"] == (3, "Team: Alpha | Goals: 12\nTitle: Cup\nTitle: League")

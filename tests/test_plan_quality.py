@@ -310,6 +310,22 @@ def test_settings_inventory_two_shuffles(spark, tmp_path):
     assert "SortMergeJoin" not in formatted(inv)
 
 
+def test_linearize_tables_shuffles_spans_once(spark, tmp_path):
+    """linearize_tables(<parquet scan>): the spans are scanned once, and the
+    table-segmentation windows and both groupBys share one hash exchange on
+    doc_id — no per-doc header join, so no second scan and no broadcast."""
+    from table_extractor_spark.plans.triples import linearize_tables
+
+    lin = linearize_tables(_spans_scan(spark, tmp_path))
+    plan = formatted(lin)
+    assert _parquet_scans(plan) == 1, plan
+    exchanges = _shuffle_exchanges(lin)
+    assert [e.split("#")[0] for e in exchanges] == [
+        "hashpartitioning(doc_id",
+    ], exchanges
+    assert "BroadcastExchange" not in plan, plan
+
+
 def test_ttl_lines_escape_turtle(spark):
     """F-grammar: literals ECHAR-escaped, URI terms percent-encoded — raw
     wiki text (quotes, backslashes, newlines) must serialize to VALID
@@ -549,47 +565,6 @@ def test_round5_queries_plan_shape(spark):
     assert "Join" not in plan, plan
     assert "InPandas" not in plan and "EvalPython" not in plan, plan
     plan = formatted(q["winnowing_overlap_pairs"](spark, SF))
-    assert "CartesianProduct" not in plan, plan
-    assert "InPandas" not in plan and "EvalPython" not in plan, plan
-
-
-def test_sketch_queries_plan_shape(spark):
-    """Sketch queries stay scale-right: the bloom probe side is
-    shuffle-FREE (one broadcast bit-array row, verdict map-side — the
-    only exchanges belong to the tiny bloom build), the probe scan is
-    column-pruned to doc_id, and the histogram quantile query's only
-    corpus-keyed operation is the bounded-bin aggregation (no joins on
-    corpus keys, no Python anywhere)."""
-    from table_extractor_spark.plans import queries as Q
-
-    q = Q.queries()
-    plan = formatted(q["bloom_dedup_prefilter"](spark, SF))
-    # probe resolution is a broadcast nested-loop against ONE row, never
-    # a per-key join: no hash/merge join may appear
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    # the only exchanges are the bloom build's (one single-partition
-    # shuffle + one broadcast); the probe side contributes none
-    import re
-
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 1, plan
-    assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) <= 1, plan
-    assert "ReadSchema: struct<doc_id:bigint>" in plan, plan
-    assert "InPandas" not in plan and "EvalPython" not in plan, plan
-
-    plan = formatted(q["doc_length_quantile_sketch"](spark, SF))
-    assert "CartesianProduct" not in plan, plan
-    assert "partial_count" in plan, plan
-    assert "InPandas" not in plan and "EvalPython" not in plan, plan
-
-    # heavy-hitter screen: the sketch is ONE broadcast map row and every
-    # occurrence screens itself map-side before any shuffle — no per-key
-    # join of any kind, no big-big join
-    plan = formatted(q["frequent_trigrams_screen"](spark, SF))
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "InPandas" not in plan and "EvalPython" not in plan, plan
 
