@@ -218,10 +218,9 @@ def ivf_probe_lists(
     """(query_id, qv, qn, centroid_id): each query's ``nprobe`` nearest lists.
 
     nprobe x |queries| rows — broadcast-tiny by construction.  This is the
-    coarse-quantizer output shared by ``ivf_search`` and IVF-PQ candidate
-    pruning: anything keyed by ``centroid_id`` (assignments, clustered PQ
-    codes) can be list-pruned with a broadcast join against this frame
-    BEFORE any shuffle of the big side.
+    coarse-quantizer output ``ivf_search`` probes with: anything keyed by
+    ``centroid_id`` (the assignments) can be list-pruned with a broadcast
+    join against this frame BEFORE any shuffle of the big side.
 
     With ``quantize``, list selection scores the integer-valued query copy
     against the (integer-valued) trained centroids — probe choice is a

@@ -11,9 +11,10 @@ Design (SURVEY §7.3.5 — idempotent under task retry AND driver restart):
   ``pmod(hash(doc_id, salt), num_buckets)`` the pipeline already shuffles on
   (operators/repartition.bucket_expr).  Every doc maps to a stable bucket,
   so completion bookkeeping is O(num_buckets), not O(docs).
-* The run executes in **waves** of buckets.  Each wave is one Spark job:
-  filter to the wave's buckets -> extract -> write spans + metrics
-  partitioned by bucket -> append one lineage row per bucket.
+* The run executes in **waves** of buckets.  Each wave parses once:
+  filter to the wave's buckets -> extract (persisted) -> write spans +
+  metrics partitioned by bucket -> collect per-bucket stats from the
+  persisted parse -> append one lineage row per bucket.
 * Output writes use **dynamic partition overwrite** keyed by bucket, so a
   wave that crashed mid-write is simply rewritten on resume — partition
   replacement makes the pair (write outputs, then record lineage) idempotent:
@@ -35,14 +36,26 @@ from typing import List, Optional, Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.repartition import bucket_expr
-from ..plans.extract import METRIC_FIELDS
+from ..plans.extract import METRIC_FIELDS, OUT_COLUMNS, PARSED_SCHEMA
 from ..sources.writers import dynamic_partition_overwrite
 
-LINEAGE_COLS = (
-    "run_id", "bucket", "n_docs", "n_spans", "wall_sec", "committed_at",
-) + METRIC_FIELDS
+# one row per committed bucket; lineage dirs are append-only across runs
+# and code versions, so names, order, types and nullability stay fixed
+LINEAGE_SCHEMA = (
+    "run_id string not null, bucket int, n_docs long not null, "
+    "n_spans long not null, wall_sec double not null, "
+    "committed_at int not null, "
+    + ", ".join(f"{f} long not null" for f in METRIC_FIELDS)
+)
+
+# the span output as written: declared, not inferred, so a committed run
+# whose buckets hold no spans (table-less docs) reads back as zero rows
+OUT_SCHEMA = StructType([PARSED_SCHEMA[c] for c in OUT_COLUMNS]).add(
+    "bucket", "integer"
+)
 
 # the only read failures that mean "nothing written here yet": an absent
 # directory, or one with no data files (an all-empty wave)
@@ -124,16 +137,17 @@ class CheckpointedRun:
         """One wave: extract the wave's buckets, overwrite their output
         partitions, then append lineage rows (commit point)."""
         from ..operators.repartition import salted_repartition
-        from ..plans.extract import OUT_COLUMNS, parse_stage
+        from ..plans.extract import parse_stage
 
         t0 = time.monotonic()
         bexpr = bucket_expr(self.num_buckets, self.salt)
         wave_docs = docs.withColumn("bucket", bexpr).filter(
             F.col("bucket").isin(*[int(b) for b in wave])
         )
-        # the span writes and the metrics writes are two separate jobs, so
-        # persist the SHARED parse output before branching — otherwise the
-        # kernel runs twice per wave (write-then-branch, SURVEY §7.3.5)
+        # the span write, the metrics write and the lineage stats are three
+        # separate actions, so persist the SHARED parse output before
+        # branching — otherwise the kernel runs once per action
+        # (write-then-branch, SURVEY §7.3.5)
         spread = salted_repartition(
             wave_docs.select("doc_id", "spans"),
             num_partitions=len(wave),
@@ -152,6 +166,17 @@ class CheckpointedRun:
         try:
             dynamic_partition_overwrite(out, self.out_dir, "bucket")
             dynamic_partition_overwrite(metrics, self.metrics_dir, "bucket")
+            # lineage stats (metrics rows are the docs, the rest the spans),
+            # collected while the parse is still persisted
+            is_doc = F.col("kind").isNull()
+            stats = {
+                r["bucket"]: r
+                for r in parsed.groupBy("bucket").agg(
+                    F.count(F.when(is_doc, 1)).alias("n_docs"),
+                    F.count(F.when(~is_doc, 1)).alias("n_spans"),
+                    *[F.sum(f).alias(f) for f in METRIC_FIELDS],
+                ).collect()
+            }
         finally:
             parsed.unpersist()
 
@@ -159,54 +184,19 @@ class CheckpointedRun:
         # One row per bucket IN THE WAVE — including empty buckets (a bucket
         # no doc hashes to must still be marked complete, or resume would
         # reprocess it forever).
-        wave_df = spark.createDataFrame(
-            [(int(b),) for b in wave], "bucket int"
-        )
-        def _agg_or_none(path, aggs):
-            # an all-empty wave may leave a parquet dir with no data files
-            df = _read_parquet_or_none(spark, path)
-            if df is None:
-                return None
-            return (
-                df.filter(F.col("bucket").isin(*[int(b) for b in wave]))
-                .groupBy("bucket")
-                .agg(*aggs)
+        wall = round(time.monotonic() - t0, 3)
+        committed_at = int(time.time())
+        zero = dict.fromkeys(("n_docs", "n_spans", *METRIC_FIELDS), 0)
+        rows = []
+        for b in wave:
+            st = stats.get(b, zero)
+            rows.append(
+                (self.run_id, int(b), st["n_docs"], st["n_spans"], wall,
+                 committed_at, *[st[f] for f in METRIC_FIELDS])
             )
-
-        stats = _agg_or_none(
-            self.metrics_dir,
-            [F.count("*").alias("n_docs")]
-            + [F.sum(f).alias(f) for f in METRIC_FIELDS],
+        spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("append").parquet(
+            self.lineage_dir
         )
-        if stats is None:
-            stats = spark.createDataFrame(
-                [],
-                "bucket int, n_docs long, "
-                + ", ".join(f"{f} long" for f in METRIC_FIELDS),
-            )
-        spans_per_bucket = _agg_or_none(
-            self.out_dir, [F.count("*").alias("n_spans")]
-        )
-        if spans_per_bucket is None:
-            spans_per_bucket = spark.createDataFrame(
-                [], "bucket int, n_spans long"
-            )
-        wall = time.monotonic() - t0
-        lineage_rows = (
-            wave_df.join(stats, "bucket", "left")
-            .join(spans_per_bucket, "bucket", "left")
-            .na.fill(0, ["n_docs", "n_spans", *METRIC_FIELDS])
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                "bucket",
-                "n_docs",
-                "n_spans",
-                F.lit(round(wall, 3)).alias("wall_sec"),
-                F.lit(int(time.time())).alias("committed_at"),
-                *METRIC_FIELDS,
-            )
-        )
-        lineage_rows.write.mode("append").parquet(self.lineage_dir)
 
     def run(
         self,
@@ -245,7 +235,7 @@ class CheckpointedRun:
     def read_output(self, spark: SparkSession) -> DataFrame:
         """Committed output only: anti-join uncommitted buckets away, so a
         crash between data write and lineage append is invisible to readers."""
-        out = spark.read.parquet(self.out_dir)
+        out = spark.read.schema(OUT_SCHEMA).parquet(self.out_dir)
         lin = spark.read.parquet(self.lineage_dir).filter(
             F.col("run_id") == self.run_id
         )

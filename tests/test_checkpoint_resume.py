@@ -100,6 +100,78 @@ def test_uncommitted_bucket_invisible_to_readers(spark, run, tmp_path):
     assert out.filter(F.col("doc_id") == "ghost").count() == 0
 
 
+def test_crash_between_data_write_and_lineage_append(spark, run, monkeypatch):
+    """A real crash at the commit point: the wave's span and metrics
+    partitions are written, then the lineage append fails.  The wave stays
+    uncommitted and invisible, and the next run() rewrites it once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from table_extractor_spark.operators.repartition import bucket_expr
+
+    docs = fixture_corpus_df(spark, copies=2)
+    first = run.run(spark, docs, max_waves=1)["processed_now"]
+
+    real_parquet = DataFrameWriter.parquet
+    crashes = []
+
+    def crash_once_on_lineage(self, path, *args, **kwargs):
+        if path == run.lineage_dir and not crashes:
+            crashes.append(path)
+            raise RuntimeError("injected crash before the lineage append")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_once_on_lineage)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run.run(spark, docs)
+    crashed = [b for b in range(run.num_buckets) if b not in first][: run.wave_size]
+
+    assert run.completed_buckets(spark) == sorted(first)
+    written = spark.read.parquet(run.out_dir).filter(F.col("bucket").isin(*crashed))
+    assert written.count() > 0  # the data write did happen before the crash
+    crashed_docs = {
+        r.doc_id
+        for r in docs.filter(
+            bucket_expr(run.num_buckets, run.salt).isin(*crashed)
+        ).collect()
+    }
+    assert crashed_docs
+    assert not crashed_docs & set(spans_by_doc(run.read_output(spark)))
+
+    resumed = run.run(spark, docs)
+    assert resumed["remaining"] == []
+    assert sorted(resumed["processed_now"]) == sorted(
+        set(range(run.num_buckets)) - set(first)
+    )
+    expected, _ = extract_pipeline(docs, num_partitions=4)
+    assert spans_by_doc(run.read_output(spark)) == spans_by_doc(expected)
+    per_bucket = (
+        run.lineage(spark).filter(F.col("run_id") == run.run_id)
+        .groupBy("bucket").count().collect()
+    )
+    assert sorted(r["bucket"] for r in per_bucket) == list(range(run.num_buckets))
+    assert all(r["count"] == 1 for r in per_bucket)
+
+
+def test_tableless_run_reads_back_empty(spark, tmp_path):
+    """A committed run whose docs hold no tables has span partitions with
+    no data files; reading it back gives zero rows, not a schema error."""
+    from table_extractor_spark.plans.extract import INPUT_SCHEMA
+
+    prose = [{"kind": "text", "text": "just prose", "media_ref": None, "offset": 0}]
+    docs = spark.createDataFrame(
+        [{"doc_id": f"p{i}", "spans": prose} for i in range(2)], INPUT_SCHEMA
+    )
+    run = CheckpointedRun(
+        base_dir=str(tmp_path / "ckpt"), run_id="prose", num_buckets=4, wave_size=2
+    )
+    assert run.run(spark, docs)["remaining"] == []
+    report = run.metrics_report(spark).collect()[0]
+    assert (report["docs"], report["spans"]) == (2, 0)
+    out = run.read_output(spark)
+    assert out.columns == ["doc_id", "kind", "text", "media_ref", "order"]
+    assert out.count() == 0
+
+
 def test_incremental_manifest_anti_join(spark, tmp_path):
     manifest = str(tmp_path / "manifest")
     docs = fixture_corpus_df(spark, copies=2)

@@ -493,51 +493,6 @@ def test_round4_queries_plan_shape(spark):
     assert "InPandas" not in plan and "EvalPython" not in plan
 
 
-def test_bucketed_tables_join_without_exchange(spark):
-    """Tables bucketed on the same key with the same bucket count must join
-    with ZERO Exchange — the pre-shuffled layout that turns the recurring
-    docs x verdicts / codes x assignments joins into local bucket reads at
-    warehouse scale (sources/bucketed.py)."""
-    from pyspark.sql import functions as F
-
-    from table_extractor_spark.sources.bucketed import (
-        read_table,
-        write_bucketed,
-    )
-    from table_extractor_spark.sources.tables import load_table
-
-    orders = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cust = load_table(spark, SF, "customer").select(
-        "c_custkey", "c_name"
-    ).withColumnRenamed("c_custkey", "o_custkey")
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the test proves BUCKETING (not broadcast)
-        # removed the shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(orders, "t_orders_bkt", "o_custkey", n_buckets=4)
-        write_bucketed(cust, "t_cust_bkt", "o_custkey", n_buckets=4)
-        joined = read_table(spark, "t_orders_bkt").join(
-            read_table(spark, "t_cust_bkt"), "o_custkey"
-        )
-        plan = formatted(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        # and the answer is right (sanity vs the plain join)
-        expect = orders.join(cust, "o_custkey").count()
-        assert joined.count() == expect
-        # control: the SAME join on plain (unbucketed) tables shuffles
-        plain = formatted(orders.join(cust, "o_custkey"))
-        assert "Exchange" in plain, plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_orders_bkt")
-        spark.sql("DROP TABLE IF EXISTS t_cust_bkt")
-
-
 def test_round5_queries_plan_shape(spark):
     """r5 additions stay scale-right: fuzzy decontamination never
     self-joins the corpus bucket table (every bench-derived side is
@@ -686,44 +641,6 @@ def test_q19_or_of_ands_stays_equi_join(spark):
 # --------------------------------------------------------------------------
 # round-7 optimization pins
 # --------------------------------------------------------------------------
-
-
-def test_linkage_cap_broadcasts_oversized_anti_not_undercap_semi(spark):
-    """The block-size guard must broadcast the OVERSIZED block list (bounded
-    by the number of hot blocks) as a LEFT ANTI join — never the under-cap
-    list, whose key set is corpus-linear (r6 verdict scale-killer #1)."""
-    import inspect
-
-    from table_extractor_spark.operators import linkage as L
-
-    src = inspect.getsource(L.blocked_match_pairs)
-    assert "left_anti" in src and "left_semi" not in src, src
-    from table_extractor_spark.sources.tables import load_table
-
-    recs = load_table(spark, SF, "part").selectExpr(
-        "p_partkey AS id", "p_name AS txt", "p_brand"
-    )
-    capped = L.blocked_match_pairs(
-        recs, "id", "txt", ["p_brand"], 3, max_block_size=50
-    )
-    plan = formatted(capped)
-    assert "LeftAnti" in plan, plan
-    assert "BroadcastExchange" in plan, plan
-    # results must equal the uncapped pipeline minus oversized blocks
-    # (semantic pin: anti-join inversion is a pure plan change)
-    uncapped = L.blocked_match_pairs(recs, "id", "txt", ["p_brand"], 3)
-    over = L.oversized_blocks(recs, ["p_brand"], 50)
-    over_ids = (
-        recs.join(over.select("p_brand"), ["p_brand"], "left_semi")
-        .select("id")
-    )
-    expected = (
-        uncapped.join(over_ids.withColumnRenamed("id", "a_id"), "a_id", "left_anti")
-        .join(over_ids.withColumnRenamed("id", "b_id"), "b_id", "left_anti")
-    )
-    assert sorted(map(tuple, capped.collect())) == sorted(
-        (r.a_id, r.b_id, r.dist) for r in expected.collect()
-    )
 
 
 def test_heavy_hitters_limits_before_rank(spark):
