@@ -4,8 +4,7 @@ Turns an append-only stream of (entity, ts, state...) change events into
 the classic SCD2 validity-interval table: one row per state EPISODE with
 ``valid_from``/``valid_to`` timestamps and an ``is_current`` flag —
 consecutive events that repeat the same state collapse into one episode.
-This is the dimension shape every warehouse join-at-time query (and the
-as-of join in ``operators/asof.py``) consumes.
+This is the dimension shape every warehouse join-at-time query consumes.
 
 Scale shape: two window passes, both partitioned by the entity key — one
 shuffle total (the second window reuses the first's partitioning since
