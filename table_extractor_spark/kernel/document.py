@@ -29,13 +29,12 @@ from typing import Iterable, List, Optional, Tuple
 
 from .grid import (
     Metrics,
-    extract_value_from_cell,
     filter_summary_rows,
     fold_accents_bytes_only,
     parse_table,
     strip_ascii_punctuation,
 )
-from .htmlmini import find_elements, parse_fragment
+from .htmlmini import parse_fragment
 from .pyfloat import value_to_str
 
 # the exact class attributes the reference's three XPath queries select, in the
@@ -178,21 +177,27 @@ def extract_document_cols(
         # lower() on a miss is a full-string allocation for nothing
         if in_kinds[i] != "text" or not s_text or not _TABLE_HINT.search(s_text):
             continue
-        s = {"offset": in_offsets[i] or 0, "text": s_text}
+        offset = in_offsets[i] or 0
         for start, markup in _find_table_regions(s_text):
-            try:
-                root = parse_fragment(markup)
-            except Exception:
-                metrics.kernel_errors += 1
+            # a wikitable's class value is spelled out in the markup, or
+            # hidden behind an entity; a region with neither (an infobox,
+            # a navbox) cannot yield a candidate, so it is not parsed
+            if "wikitable" not in markup and "&" not in markup:
                 continue
             # all table elements in the region, document order — like the
             # reference's XPath ``//table[@class=...]`` this includes tables
             # NESTED inside another table's cells (:98-103)
-            for sub, table in enumerate(find_elements(root, "table")):
+            tables: list = []
+            try:
+                parse_fragment(markup, tables)
+            except Exception:
+                metrics.kernel_errors += 1
+                continue
+            for sub, table in enumerate(tables):
                 cls = table.attrib.get("class", "")
                 if cls in WIKITABLE_CLASSES:
                     rank = WIKITABLE_CLASSES.index(cls)
-                    candidates.append((rank, s["offset"], (start, sub), table))
+                    candidates.append((rank, offset, (start, sub), table))
 
     # reference find_wiki_tables order: grouped by class, doc order within
     candidates.sort(key=lambda c: (c[0], c[1], c[2]))
@@ -222,11 +227,12 @@ def extract_document_cols(
             texts.append(header["th"])
             refs.append("")
 
-        rows = filter_summary_rows(tab.data_refined, metrics)
-        for row in rows:
-            metrics.triples_row += 1  # the per-row reification triple (A9)
-            for cell in row.values():
-                value = extract_value_from_cell(cell)
+        # the filter drops rows from data_refined and values alike, so the
+        # two still line up for the emit loop
+        rows = filter_summary_rows(tab.data_refined, metrics, tab.values)
+        metrics.triples_row += len(rows)  # the per-row reification triple (A9)
+        for row, values in zip(rows, tab.values):
+            for cell, value in zip(row.values(), values):
                 if value == "-":  # empty-cell marker (P6, Mapper.py:104-106)
                     continue
                 if len(cell) > 1:
@@ -234,7 +240,7 @@ def extract_document_cols(
                         kinds.append("link")
                         texts.append(value_to_str(link_value))
                         refs.append("")
-                media = getattr(cell, "media", None)
+                media = cell.media
                 kinds.append("cell")
                 texts.append(value)
                 if media:

@@ -27,10 +27,10 @@ from __future__ import annotations
 import re
 import unicodedata
 from dataclasses import dataclass, field
-from typing import List, Optional
+from typing import List, Optional, Sequence, Tuple
 
 from .htmlmini import Element
-from .pyfloat import parser_is_float, py2_is_float, py2_is_int, value_to_str
+from .pyfloat import parser_is_float, py2_is_float, str_is_float
 
 _CITATION_RE = re.compile(r"\[\d+\]")
 # ASCII punctuation, as Python 2 ``string.punctuation`` (used via str.translate
@@ -65,14 +65,30 @@ class Cell(list):
     the emitter can attach ``media_ref`` without disturbing the (quirky)
     positional join.
 
-    ``media`` ([(caption, media_ref), ...]) is a LAZY slot: most cells carry
-    no media, so the slot stays unset and readers use
-    ``getattr(cell, "media", ())`` — profiling showed the per-cell empty-list
-    allocation (2 Cells per data cell on the hot path) was measurable at
-    reference document weight.  Writers assign the list only when non-empty.
+    ``media`` ([(caption, media_ref), ...]) is empty for a plain Cell: a
+    class attribute, so the many cells without media allocate nothing for it
+    and readers need no ``getattr`` default.  A cell that has media is a
+    ``MediaCell``, whose slot holds them.
     """
 
+    __slots__ = ()
+    media: Sequence[tuple] = ()
+
+
+class MediaCell(Cell):
+    """A Cell whose raw cell held media links (``media``, never empty)."""
+
     __slots__ = ("media",)
+
+
+class TextCell(Cell):
+    """A raw cell built from a ``<td>`` with no attributes and one text node.
+
+    ``typed`` holds the Cell that ``resolve_data_type`` would build from it,
+    typed once at extraction; such a cell has no anchors, no media and no
+    colspan, so nothing between extraction and typing can change it."""
+
+    __slots__ = ("typed",)
 
 
 def fold_accents_bytes_only(text: str, *, is_bytes_origin: bool) -> str:
@@ -116,6 +132,9 @@ class TableParse:
     vertical: bool = False
     headers_refined: List[dict] = field(default_factory=list)
     data_refined: List[dict] = field(default_factory=list)  # header -> Cell
+    # per data_refined row, the extract_value_from_cell of each cell in the
+    # row's dict order: computed once for the summary filter and the emitter
+    values: List[list] = field(default_factory=list)
 
 
 # --------------------------------------------------------------------------
@@ -375,38 +394,65 @@ def _find_td_text(cell: Element) -> Optional[dict]:
     return None
 
 
-def extract_data(table: Element, tab: TableParse) -> None:
+def extract_data(table: Element, tab: TableParse) -> Tuple[bool, bool]:
     """Raw cell extraction (reference :617-672).
 
     Rows with at least one <td> are data rows; ALL element children are
     iterated (so in vertical tables the <th> text becomes a data cell too).
     Empty cells are marked ``[{'td': '-'}]``.
+
+    Returns ``(has_totale, has_colspan)``: whether some cell text is exactly
+    'Totale' and whether some cell dict carries a colspan.  Without them
+    ``delete_useless_rows`` and ``expand_colspan`` change nothing, so
+    ``refine_data`` skips their walks.
     """
-    tab.data = []  # type: ignore[attr-defined]
-    for row in table.iterchildren():
+    tab.data = data = []  # type: ignore[attr-defined]
+    totale = colspan = False
+    for row in table.children:
+        if row.__class__ is not Element:
+            continue
+        cells = row.children
         # hot path: membership test without findall's throwaway list (the
         # any() short-circuits at the first <td> — usually the first child)
-        if not any(
-            c.__class__ is Element and c.tag == "td" for c in row.children
-        ):
+        if not any(c.__class__ is Element and c.tag == "td" for c in cells):
             continue
         data_row = []
-        for cell in row.iterchildren():
-            data_cell = Cell()
+        for cell in cells:
+            if cell.__class__ is not Element:
+                continue
+            kids = cell.children
+            if not cell.attrib and len(kids) == 1 and kids[0].__class__ is str:
+                # most cells: one text node and no attributes, so no anchors
+                # and no media — build the raw cell and its typed form at once
+                text = kids[0].replace("\xa0", " ").replace("\n", "/")
+                if text == "Totale":
+                    totale = True
+                data_cell = TextCell(({"td": text},))
+                data_cell.typed = Cell((float(text) if str_is_float(text) else text,))
+                data_row.append(data_cell)
+                continue
             anchors, media = _find_anchors(cell)
             if media:
+                data_cell = MediaCell()
                 data_cell.media = media
+            else:
+                data_cell = Cell()
             for anc in anchors:
                 if anc:
                     data_cell.append(anc)
             td = _find_td_text(cell)
             if td:
-                td["td"] = td["td"].replace("\n", "/")
+                text = td["td"] = td["td"].replace("\n", "/")
+                if text == "Totale":
+                    totale = True
+                if "colspan" in td:
+                    colspan = True
                 data_cell.append(td)
             if not data_cell:
                 data_cell.append({"td": "-"})
             data_row.append(data_cell)
-        tab.data.append(data_row)  # type: ignore[attr-defined]
+        data.append(data_row)
+    return totale, colspan
 
 
 def delete_useless_rows(tab: TableParse, tag: str = "Totale") -> None:
@@ -440,10 +486,15 @@ def resolve_data_type(tab: TableParse) -> None:
     for row in tab.data:    # type: ignore[attr-defined]
         temp_row = []
         for cell in row:
-            temp_cell = Cell()
-            media = getattr(cell, "media", None)
+            if cell.__class__ is TextCell:
+                temp_row.append(cell.typed)
+                continue
+            media = cell.media
             if media:
+                temp_cell = MediaCell()
                 temp_cell.media = list(media)
+            else:
+                temp_cell = Cell()
             for element in cell:
                 # None as the no-match placeholder: same falsy/==0.0 gate
                 # as the reference's [], without a list alloc per element
@@ -477,32 +528,40 @@ def join_data_and_headers(tab: TableParse) -> None:
     headers = getattr(tab, "headers", None)
     if not headers:
         return
-    number_of_headers = len(headers[0])
+    names = [header["th"] for header in headers[0]]
+    number_of_headers = len(names)
+    if not number_of_headers:
+        return  # every cell's header lookup would raise and be skipped
     for row in tab.data_filtered:  # type: ignore[attr-defined]
         index = 0
         for data in row:
-            try:
-                header = headers[0][index]["th"]
-                temp_row[header] = data
-                index += 1
-                if index == number_of_headers:
-                    tab.data_refined.append(temp_row)
-                    temp_row = {}
-                    index = 0
-            except Exception:
-                continue
+            temp_row[names[index]] = data
+            index += 1
+            if index == number_of_headers:
+                tab.data_refined.append(temp_row)
+                temp_row = {}
+                index = 0
         if temp_row:
             tab.data_refined.append(temp_row)  # same object; not reset (quirk)
 
 
-def refine_data(tab: TableParse, metrics: "Metrics | None" = None) -> None:
+def refine_data(
+    tab: TableParse,
+    metrics: "Metrics | None" = None,
+    has_totale: bool = True,
+    has_colspan: bool = True,
+) -> None:
     """Reference ``refine_data`` (:757-781): any exception aborts, leaving
     ``data_refined`` as-is (usually empty -> E3) — same swallow as the
     reference, but COUNTED into ``kernel_errors`` so a real parse bug is
-    visible in the metrics table instead of vanishing at 10^12-doc scale."""
+    visible in the metrics table instead of vanishing at 10^12-doc scale.
+    ``has_totale``/``has_colspan`` (from ``extract_data``) False skip a stage
+    that would change nothing."""
     try:
-        delete_useless_rows(tab, "Totale")
-        expand_colspan(tab.data, metrics)  # type: ignore[attr-defined]
+        if has_totale:
+            delete_useless_rows(tab, "Totale")
+        if has_colspan:
+            expand_colspan(tab.data, metrics)  # type: ignore[attr-defined]
         resolve_data_type(tab)
         join_data_and_headers(tab)
         # encode_data (:602-615) is a no-op in the reference (rebinds loop var)
@@ -549,8 +608,8 @@ def extract_value_from_cell(cell):
     """Reference ``extract_value_from_cell`` (MapperTools.py:312-330).
 
     Flattened from the original value/result two-step (the ``len<=1``
-    branch always re-indexes the cell list itself) — called twice per data
-    cell on the hot path, so the saved call + isinstance were measurable."""
+    branch always re-indexes the cell list itself).  ``parse_table`` calls
+    it once per refined cell, into ``TableParse.values``."""
     if len(cell) > 1:
         result = cell[-1]
         if isinstance(result, list):
@@ -562,7 +621,9 @@ def extract_value_from_cell(cell):
     return str(result)
 
 
-def filter_summary_rows(table_data: List[dict], metrics: Metrics) -> List[dict]:
+def filter_summary_rows(
+    table_data: List[dict], metrics: Metrics, values: Optional[List[list]] = None
+) -> List[dict]:
     """Career-summary row filter (reference ``filter_table_data``,
     MapperTools.py:211-254; enabled by settings.APPLY_FILTER_TO_TABLE_DATA).
 
@@ -572,18 +633,30 @@ def filter_summary_rows(table_data: List[dict], metrics: Metrics) -> List[dict]:
     Replicates the iterate-while-deleting cursor semantics (a deletion skips
     the following row's `row` binding but not its index — observable only when
     a deleted row isn't last; fixtures pin the last-row case).
+
+    ``values`` is each row's cell values (``TableParse.values``), computed
+    here when not given; a deleted row is deleted from it too, so on return
+    it still lines up with the returned rows.
     """
+    if values is None:
+        values = [
+            [extract_value_from_cell(c) for c in row.values()] for row in table_data
+        ]
     table_dict: dict = {}
     i = 0
     p = 0
     while p < len(table_data):
         row = table_data[p]
+        row_values = values[p]
         p += 1
         summarized = 0
         deleted = False
-        for cell, cell_value in row.items():
-            value = extract_value_from_cell(cell_value)
-            if py2_is_float(value) or py2_is_int(value):
+        for cell, value in zip(row, row_values):
+            # reference: is_float(value) or is_int(value).  Values are str,
+            # and a str int() accepts float() accepts too (same digit and
+            # space normalisation, and a digit run is a float literal), so
+            # the memoized float test alone decides
+            if str_is_float(value):
                 fval = float(value)
                 if cell in table_dict:
                     summed_value = float(table_dict[cell])
@@ -608,10 +681,11 @@ def filter_summary_rows(table_data: List[dict], metrics: Metrics) -> List[dict]:
                 ):
                     deleted = True
         if deleted:
-            for key in table_data[i]:
-                if extract_value_from_cell(table_data[i][key]) != "-":
+            for value in values[i]:
+                if value != "-":
                     metrics.data_extracted_to_map -= 1
             del table_data[i]
+            del values[i]
             i -= 1
         i += 1
     return table_data
@@ -637,18 +711,23 @@ def parse_table(table: Element, metrics: Metrics) -> TableParse:
         metrics.no_headers += 1
         return tab
     refine_headers(tab, metrics)
-    extract_data(table, tab)
-    refine_data(tab, metrics)
+    has_totale, has_colspan = extract_data(table, tab)
+    refine_data(tab, metrics, has_totale, has_colspan)
     if not tab.data_refined:
         tab.error = "E3"
         metrics.no_data += 1
         return tab
-    # count like Table.count_data_cells_and_rows (Table.py:34-52): non-'-' cells
+    # one walk over the refined cells: count like
+    # Table.count_data_cells_and_rows (Table.py:34-52), non-'-' FIRST values,
+    # and record each cell's value for the summary filter and the emitter
     cells = 0
     for row in tab.data_refined:
-        for cell_value in row.values():
-            if cell_value[0] != "-":
+        row_values = []
+        for cell in row.values():
+            if cell[0] != "-":
                 cells += 1
+            row_values.append(extract_value_from_cell(cell))
+        tab.values.append(row_values)
     metrics.data_extracted += cells
     metrics.data_extracted_to_map += cells
     metrics.rows_extracted += len(tab.data_refined)

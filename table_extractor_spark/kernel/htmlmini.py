@@ -18,6 +18,16 @@ re-implement only the lxml behaviors the reference observes:
 * ``element.attrib``        -> attribute dict (first occurrence wins)
 
 Entities are decoded like lxml does (``&nbsp;`` -> ``\xa0``) via ``html.unescape``.
+
+The tokenizer is one ``re.split`` whose first alternative is a *fused cell
+token*: a plain lowercase ``<td>text</td>`` or ``<th>text</th>`` with no
+attributes and no ``<`` in the text.  Most cells of a wiki table have that
+shape, and the token builds in one step the ``Element`` that the general
+open/text/close path would build (the implicit td/th closes and ``&``
+unescaping included), so the tree is the same either way.  Anything else
+(attributes, markup inside, a mismatched close) takes the general tag
+alternative.  ``parse_fragment`` can also hand back the ``table`` elements
+as it creates them, in document order, so the caller needs no tree walk.
 """
 
 from __future__ import annotations
@@ -42,7 +52,10 @@ _IMPLICIT_CLOSERS = {
     "p": ("p",),
 }
 
-_TAG_RE = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9]*)((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)(/?)>")
+_TAG_RE = re.compile(
+    r"<(t[dh])>([^<]*)</\1>"  # fused cell token: (tag, text)
+    r"|<(/?)([a-zA-Z][a-zA-Z0-9]*)((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)(/?)>"
+)
 _ATTR_RE = re.compile(
     r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*(\"([^\"]*)\"|'([^']*)'|([^\s\"'>]+)))?"
 )
@@ -112,12 +125,16 @@ def _parse_attrs(raw: str) -> dict:
     return attrs
 
 
-def parse_fragment(markup: str) -> Element:
+def parse_fragment(markup: str, tables: Optional[list] = None) -> Element:
     """Parse an HTML fragment into a tree rooted at a synthetic ``<#root>``.
 
     Tolerant tag-soup parsing: unknown close tags pop up the stack to the
     nearest matching open element (discarded if none), unclosed elements are
     implicitly closed per ``_IMPLICIT_CLOSERS`` or when an ancestor closes.
+
+    When ``tables`` is a list, every ``table`` element is appended to it as
+    it is created: document (preorder) order, nested tables included, the
+    same list a ``//table`` walk of the finished tree would give.
     """
     root = Element("#root")
     stack: List[Element] = [root]
@@ -127,10 +144,13 @@ def parse_fragment(markup: str) -> Element:
     # every document goes through here, so constant factors matter
     unescape = _htmlmod.unescape
     implicit = _IMPLICIT_CLOSERS.get
+    cell_closers = _IMPLICIT_CLOSERS["td"]
     void = _VOID_TAGS
     # one split call tokenizes the whole fragment without a Match object per
-    # tag: [text, closing, tag, rawattrs, selfclose, text, ...], so after the
-    # leading text every tag arrives as a 5-tuple with the text that follows
+    # tag: [text, cell_tag, cell_text, closing, tag, rawattrs, selfclose,
+    # text, ...], so after the leading text every token arrives as a 7-tuple
+    # with the text that follows; a fused cell fills the first two fields,
+    # any other tag the next four
     parts = _TAG_RE.split(markup)
     text = parts[0]
     if text and "&" in text:
@@ -139,10 +159,27 @@ def parse_fragment(markup: str) -> Element:
         kids.append(text)
     it = iter(parts)
     next(it)
-    for closing, tag, rawattrs, selfclose, text in zip(it, it, it, it, it):
-        if not tag.islower():  # islower scans without allocating; real-world
-            tag = tag.lower()  # markup is almost always lowercase already
-        if closing:
+    for cell_tag, cell_text, closing, tag, rawattrs, selfclose, text in zip(
+        it, it, it, it, it, it, it
+    ):
+        if cell_tag:
+            # <td>text</td> in one step: implicit closes as for the open
+            # tag, then the element is closed again at once, so the stack
+            # (and with it top/kids) ends where it started
+            while top.tag in cell_closers and len(stack) > 1:
+                stack.pop()
+                top = stack[-1]
+                kids = top.children
+            node = Element(cell_tag)
+            if cell_text:
+                if "&" in cell_text:
+                    cell_text = unescape(cell_text)
+                if cell_text:
+                    node.children.append(cell_text)
+            kids.append(node)
+        elif closing:
+            if not tag.islower():  # islower scans without allocating; real-world
+                tag = tag.lower()  # markup is almost always lowercase already
             if tag == top.tag:  # the common case: close the innermost element
                 stack.pop()
                 top = stack[-1]
@@ -156,6 +193,8 @@ def parse_fragment(markup: str) -> Element:
                         kids = top.children
                         break
         else:
+            if not tag.islower():
+                tag = tag.lower()
             # implicit closes (e.g. a <tr> closes a still-open <tr>/<td>/<th>)
             closers = implicit(tag)
             if closers:
@@ -172,6 +211,8 @@ def parse_fragment(markup: str) -> Element:
                 else None,
             )
             kids.append(node)
+            if tag == "table" and tables is not None:
+                tables.append(node)
             if not selfclose and tag not in void:
                 stack.append(node)
                 top = node
@@ -186,29 +227,3 @@ def parse_fragment(markup: str) -> Element:
             else:
                 kids.append(text)
     return root
-
-
-def find_elements(node: Element, tag: str) -> List[Element]:
-    """All descendants with the given tag, document order (lxml ``//tag``).
-
-    Iterative preorder with an explicit stack — this runs per document on
-    the full tree, and Python call frames per node were measurable."""
-    out: List[Element] = []
-    # stack of child lists with a cursor each, preserving document order
-    stack = [(node.children, 0)]
-    append = out.append
-    push = stack.append
-    while stack:
-        children, i = stack.pop()
-        n = len(children)
-        while i < n:
-            c = children[i]
-            i += 1
-            if c.__class__ is Element:
-                if c.tag == tag:
-                    append(c)
-                kids = c.children
-                if kids:
-                    push((children, i))  # resume parent after subtree
-                    children, i, n = kids, 0, len(kids)
-    return out

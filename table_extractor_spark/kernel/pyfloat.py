@@ -19,58 +19,59 @@ decimals; we use Python 3 ``str`` and pin that choice in the golden fixtures
 
 from __future__ import annotations
 
-from functools import lru_cache
 from typing import Any
 
 # fast-reject guard: most cell values are words, and raising/catching
 # ValueError per cell dominates the typing cost.  A stripped ASCII string
-# whose first char cannot start any float literal ('nan'/'inf' included) is
-# guaranteed to raise — reject without the exception.  Non-ASCII strings
-# (unicode digits, exotic whitespace) always take the exact float() path.
-_FLOAT_START = frozenset("0123456789+-.nNiI")
+# that starts with neither a digit, a sign nor a point is a float only as
+# 'nan'/'inf'/'infinity' (any case) — reject the rest without the
+# exception.  Non-ASCII strings (unicode digits, exotic whitespace) always
+# take the exact float() path.
+_FLOAT_START = frozenset("0123456789+-.")
+_FLOAT_NAMES = frozenset(("nan", "inf", "infinity"))
 
 
 def _fast_nonfloat(value: Any) -> bool:
     if type(value) is not str or not value.isascii():
         return False
     t = value.strip()
-    return not t or t[0] not in _FLOAT_START
-
-
-# Each cell string gets float-tested ~3x along the kernel path (type
-# resolution, then the summary filter's is_float AND is_int), and real
-# tables repeat values heavily ('-', years, small counts) — a bounded memo
-# on the STRING paths is ~10% of whole-document kernel time (profiled).
-# Pure functions of the string; the non-string paths stay uncached (and
-# unhashable inputs can never hit the cache).
-
-
-@lru_cache(maxsize=1 << 16)
-def _str_is_float_py2(value: str) -> bool:
-    if "_" in value or _fast_nonfloat(value):
-        return False
-    try:
-        float(value)
+    if not t:
         return True
-    except (TypeError, ValueError):
-        return False
+    return t[0] not in _FLOAT_START and t.lower() not in _FLOAT_NAMES
 
 
-@lru_cache(maxsize=1 << 16)
-def _str_is_int_py2(value: str) -> bool:
-    if "_" in value or _fast_nonfloat(value):
-        return False
-    try:
-        int(value)
-        return True
-    except (TypeError, ValueError):
-        return False
+# Each cell string gets float-tested twice along the kernel path (type
+# resolution, then the summary filter), and real tables repeat values
+# heavily ('-', years, small counts), so the string path is memoized.  The
+# memo is a plain dict cleared when full, not a functools.lru_cache: str
+# keys and bool values are not tracked by the cyclic GC, so neither is the
+# dict, while a full 65,536-entry lru_cache added ~30 ms to every full
+# collection (measured on a 4-vCPU VM).
+_MEMO_MAX = 1 << 16
+_IS_FLOAT: dict = {}
+
+
+def str_is_float(value: str) -> bool:
+    """``py2_is_float`` for a ``str`` argument (the kernel's hot loops)."""
+    known = _IS_FLOAT.get(value)
+    if known is not None:
+        return known
+    ok = "_" not in value and not _fast_nonfloat(value)
+    if ok:
+        try:
+            float(value)
+        except (TypeError, ValueError):
+            ok = False
+    if len(_IS_FLOAT) >= _MEMO_MAX:
+        _IS_FLOAT.clear()
+    _IS_FLOAT[value] = ok
+    return ok
 
 
 def py2_is_float(value: Any) -> bool:
     """``MapperTools.is_float`` semantics: True iff ``float(value)`` succeeds in py2."""
     if type(value) is str:
-        return _str_is_float_py2(value)
+        return str_is_float(value)
     if isinstance(value, str) and "_" in value:  # str subclass
         return False
     try:
@@ -82,9 +83,7 @@ def py2_is_float(value: Any) -> bool:
 
 def py2_is_int(value: Any) -> bool:
     """``MapperTools.is_int`` semantics: True iff ``int(value)`` succeeds in py2."""
-    if type(value) is str:
-        return _str_is_int_py2(value)
-    if isinstance(value, str) and "_" in value:  # str subclass
+    if isinstance(value, str) and ("_" in value or _fast_nonfloat(value)):
         return False
     try:
         int(value)
@@ -102,7 +101,7 @@ def parser_is_float(value: Any) -> bool:
     agree on strings: both reduce to ``float(value)`` raising or not).
     """
     if type(value) is str:
-        return _str_is_float_py2(value)
+        return str_is_float(value)
     if _fast_nonfloat(value):
         return False
     try:

@@ -22,6 +22,7 @@ per document (kind IS NULL) instead of a second parse or a struct column.
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -184,18 +185,33 @@ def _parse_batches(batches, emit_spans: bool) -> Iterator["pa.RecordBatch"]:
         refs: list = []
         lens: list = []
         metric_rows: list = []
-        for did, ks, ts, rs, os_ in zip(d, ks_col, ts_col, rs_col, os_col):
-            t0 = perf_counter()
-            if ks is None:
-                ks = ts = rs = os_ = empty
-            k, t, r, metrics = extract_document_cols(did, ks, ts, rs, os_)
-            metrics["kernel_us"] = int((perf_counter() - t0) * 1e6)
-            if emit_spans:
-                lens.append(len(k))
-                kinds.extend(k)
-                texts.extend(t)
-                refs.extend(r)
-            metric_rows.append(metrics)
+        # The cyclic GC is paused for the batch's kernel loop.  The kernel
+        # builds a tree and row dicts per table that outlive many young
+        # collections, so the collector keeps traversing them (~20% of
+        # kernel time measured), yet it never finds garbage: those
+        # structures are acyclic and reference counting frees them
+        # (tests/test_kernel_equivalence.py pins gc.collect() == 0).  The
+        # finally restores the caller's state before the batch is built or
+        # yielded, so neither a kernel error nor a consumer that stops
+        # iterating can leave the worker with the GC off.
+        gc_was_enabled = gc.isenabled()
+        gc.disable()
+        try:
+            for did, ks, ts, rs, os_ in zip(d, ks_col, ts_col, rs_col, os_col):
+                t0 = perf_counter()
+                if ks is None:
+                    ks = ts = rs = os_ = empty
+                k, t, r, metrics = extract_document_cols(did, ks, ts, rs, os_)
+                metrics["kernel_us"] = int((perf_counter() - t0) * 1e6)
+                if emit_spans:
+                    lens.append(len(k))
+                    kinds.extend(k)
+                    texts.extend(t)
+                    refs.extend(r)
+                metric_rows.append(metrics)
+        finally:
+            if gc_was_enabled:
+                gc.enable()
         # span rows and metric rows ship as SEPARATE batches of the same
         # schema, each with pa.nulls() for the other family's columns — the
         # r2 interleaved layout appended 11 python Nones per span row

@@ -62,12 +62,15 @@ OUT_SCHEMA = StructType([PARSED_SCHEMA[c] for c in OUT_COLUMNS]).add(
 _NOTHING_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
-def _read_parquet_or_none(spark: SparkSession, path: str) -> Optional[DataFrame]:
+def _read_parquet_or_none(
+    spark: SparkSession, path: str, schema: Optional[StructType] = None
+) -> Optional[DataFrame]:
     """``spark.read.parquet(path)``, or None when nothing was written there.
     Any other failure (corrupt file, permissions, I/O) propagates: read as
     "nothing done" it would make a resume quietly redo every bucket."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as e:
         if e.getCondition() in _NOTHING_WRITTEN:
             return None
@@ -234,22 +237,35 @@ class CheckpointedRun:
 
     def read_output(self, spark: SparkSession) -> DataFrame:
         """Committed output only: anti-join uncommitted buckets away, so a
-        crash between data write and lineage append is invisible to readers."""
-        out = spark.read.schema(OUT_SCHEMA).parquet(self.out_dir)
-        lin = spark.read.parquet(self.lineage_dir).filter(
-            F.col("run_id") == self.run_id
+        crash between data write and lineage append is invisible to readers.
+        A run with no committed wave yet (fresh, or its first wave crashed
+        before the lineage append) reads back as zero rows."""
+        out = _read_parquet_or_none(spark, self.out_dir, OUT_SCHEMA)
+        lin = self.lineage(spark)
+        if out is None or lin is None:
+            return spark.createDataFrame([], OUT_SCHEMA).drop("bucket")
+        committed = (
+            lin.filter(F.col("run_id") == self.run_id).select("bucket").distinct()
         )
-        committed = lin.select("bucket").distinct()
         return out.join(F.broadcast(committed), "bucket", "leftsemi").drop("bucket")
+
+    def _committed_lineage(self, spark: SparkSession) -> DataFrame:
+        """This run's lineage rows; ValueError when no wave has committed."""
+        lin = self.lineage(spark)
+        if lin is not None:
+            lin = lin.filter(F.col("run_id") == self.run_id)
+        if lin is None or lin.isEmpty():
+            raise ValueError(
+                f"run {self.run_id!r} has no committed wave in {self.lineage_dir}"
+            )
+        return lin
 
     def partition_skew_report(self, spark: SparkSession) -> DataFrame:
         """Partition-time spread from lineage (SURVEY §7.3.4): per-bucket
         kernel time lets you SEE a mega-article hot bucket.  Returns one row:
         (buckets, max_kernel_s, mean_kernel_s, skew_ratio) — ratio near 1.0
         means the salted spread is flat; a large ratio names the problem."""
-        lin = self.lineage(spark)
-        assert lin is not None, "no lineage yet"
-        per_bucket = lin.filter(F.col("run_id") == self.run_id).select(
+        per_bucket = self._committed_lineage(spark).select(
             "bucket", (F.col("kernel_us") / 1e6).alias("kernel_s")
         )
         return per_bucket.agg(
@@ -263,9 +279,7 @@ class CheckpointedRun:
 
     def metrics_report(self, spark: SparkSession) -> DataFrame:
         """The reference's final report (S8/A1/A2) over committed lineage."""
-        lin = self.lineage(spark)
-        assert lin is not None, "no lineage yet"
-        return lin.filter(F.col("run_id") == self.run_id).agg(
+        return self._committed_lineage(spark).agg(
             F.sum("n_docs").alias("docs"),
             F.sum("n_spans").alias("spans"),
             *[F.sum(f).alias(f) for f in METRIC_FIELDS],

@@ -172,6 +172,55 @@ def test_tableless_run_reads_back_empty(spark, tmp_path):
     assert out.count() == 0
 
 
+OUT_DTYPES = [
+    ("doc_id", "string"), ("kind", "string"), ("text", "string"),
+    ("media_ref", "string"), ("order", "int"),
+]
+
+
+def test_run_without_a_committed_wave_reads_back_empty(spark, run, monkeypatch):
+    """Before any wave commits, read_output is zero rows with the output
+    schema: on a fresh run, and after a first wave whose data was written
+    but whose lineage append crashed."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    fresh = run.read_output(spark)
+    assert fresh.dtypes == OUT_DTYPES and fresh.count() == 0
+
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_on_lineage(self, path, *args, **kwargs):
+        if path == run.lineage_dir:
+            raise RuntimeError("injected crash before the first lineage append")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_lineage)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run.run(spark, fixture_corpus_df(spark), max_waves=1)
+    assert run.completed_buckets(spark) == []
+    assert spark.read.parquet(run.out_dir).count() > 0  # the data write happened
+    crashed = run.read_output(spark)
+    assert crashed.dtypes == OUT_DTYPES and crashed.count() == 0
+
+
+def test_reports_reject_a_run_with_no_committed_wave(spark, run):
+    """The lineage reports raise a ValueError naming the run (not a bare
+    assert, which ``python -O`` strips) when the run has committed nothing:
+    no lineage at all, or only another run's lineage in the same base_dir."""
+    reports = (run.metrics_report, run.partition_skew_report)
+    for report in reports:
+        with pytest.raises(ValueError, match="'r1'"):
+            report(spark)
+    other = CheckpointedRun(
+        base_dir=run.base_dir, run_id="other", num_buckets=2, wave_size=2
+    )
+    assert other.run(spark, fixture_corpus_df(spark))["remaining"] == []
+    assert other.metrics_report(spark).collect()[0]["docs"] > 0
+    for report in reports:
+        with pytest.raises(ValueError, match="'r1'"):
+            report(spark)
+
+
 def test_incremental_manifest_anti_join(spark, tmp_path):
     manifest = str(tmp_path / "manifest")
     docs = fixture_corpus_df(spark, copies=2)

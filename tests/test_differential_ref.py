@@ -21,7 +21,7 @@ from table_extractor_spark.kernel.grid import (
     filter_summary_rows,
     parse_table,
 )
-from table_extractor_spark.kernel.htmlmini import Element, find_elements, parse_fragment
+from table_extractor_spark.kernel.htmlmini import Element, parse_fragment
 from table_extractor_spark.sources.corpus import fixture_documents
 
 PY2 = "/root/.pyenv/versions/2.7.18/bin/python2.7"
@@ -73,7 +73,9 @@ def run_mine(table: Element) -> dict:
 
 
 def tables_from_markup(markup: str):
-    return find_elements(parse_fragment(markup), "table")
+    tables: list = []
+    parse_fragment(markup, tables)
+    return tables
 
 
 def fixture_tables():
