@@ -422,8 +422,9 @@ def extract_data(table: Element, tab: TableParse) -> Tuple[bool, bool]:
                 continue
             kids = cell.children
             if not cell.attrib and len(kids) == 1 and kids[0].__class__ is str:
-                # most cells: one text node and no attributes, so no anchors
-                # and no media — build the raw cell and its typed form at once
+                # one text node and no attributes, so no anchors and no
+                # media: build the raw cell and its typed form at once
+                # (93.6% of the cells of the refweight synthetic pages)
                 text = kids[0].replace("\xa0", " ").replace("\n", "/")
                 if text == "Totale":
                     totale = True
@@ -547,16 +548,16 @@ def join_data_and_headers(tab: TableParse) -> None:
 
 def refine_data(
     tab: TableParse,
-    metrics: "Metrics | None" = None,
-    has_totale: bool = True,
-    has_colspan: bool = True,
+    metrics: "Metrics | None",
+    has_totale: bool,
+    has_colspan: bool,
 ) -> None:
     """Reference ``refine_data`` (:757-781): any exception aborts, leaving
     ``data_refined`` as-is (usually empty -> E3) — same swallow as the
     reference, but COUNTED into ``kernel_errors`` so a real parse bug is
     visible in the metrics table instead of vanishing at 10^12-doc scale.
-    ``has_totale``/``has_colspan`` (from ``extract_data``) False skip a stage
-    that would change nothing."""
+    ``has_totale``/``has_colspan`` come from ``extract_data``; False skips a
+    stage that would change nothing."""
     try:
         if has_totale:
             delete_useless_rows(tab, "Totale")
@@ -622,7 +623,7 @@ def extract_value_from_cell(cell):
 
 
 def filter_summary_rows(
-    table_data: List[dict], metrics: Metrics, values: Optional[List[list]] = None
+    table_data: List[dict], metrics: Metrics, values: List[list]
 ) -> List[dict]:
     """Career-summary row filter (reference ``filter_table_data``,
     MapperTools.py:211-254; enabled by settings.APPLY_FILTER_TO_TABLE_DATA).
@@ -634,14 +635,10 @@ def filter_summary_rows(
     the following row's `row` binding but not its index — observable only when
     a deleted row isn't last; fixtures pin the last-row case).
 
-    ``values`` is each row's cell values (``TableParse.values``), computed
-    here when not given; a deleted row is deleted from it too, so on return
-    it still lines up with the returned rows.
+    ``values`` is each row's cell values (``TableParse.values``); a deleted
+    row is deleted from it too, so on return it still lines up with the
+    returned rows.
     """
-    if values is None:
-        values = [
-            [extract_value_from_cell(c) for c in row.values()] for row in table_data
-        ]
     table_dict: dict = {}
     i = 0
     p = 0

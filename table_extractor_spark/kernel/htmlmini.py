@@ -21,10 +21,13 @@ Entities are decoded like lxml does (``&nbsp;`` -> ``\xa0``) via ``html.unescape
 
 The tokenizer is one ``re.split`` whose first alternative is a *fused cell
 token*: a plain lowercase ``<td>text</td>`` or ``<th>text</th>`` with no
-attributes and no ``<`` in the text.  Most cells of a wiki table have that
-shape, and the token builds in one step the ``Element`` that the general
-open/text/close path would build (the implicit td/th closes and ``&``
-unescaping included), so the tree is the same either way.  Anything else
+attributes and no ``<`` in the text.  The token builds in one step the
+``Element`` that the general open/text/close path would build (the implicit
+td/th closes and ``&`` unescaping included), so the tree is the same either
+way.  In the ``refweight_extract`` benchmark documents 93.5% of the cell tags
+of the synthetic pages and 99.7% of those of the 16 fixture pages take it;
+markup whose cells all carry attributes or links takes none (ROADMAP item 3
+times the kernel on such markup).  Anything else
 (attributes, markup inside, a mismatched close) takes the general tag
 alternative.  ``parse_fragment`` can also hand back the ``table`` elements
 as it creates them, in document order, so the caller needs no tree walk.

@@ -239,14 +239,25 @@ class CheckpointedRun:
         """Committed output only: anti-join uncommitted buckets away, so a
         crash between data write and lineage append is invisible to readers.
         A run with no committed wave yet (fresh, or its first wave crashed
-        before the lineage append) reads back as zero rows."""
-        out = _read_parquet_or_none(spark, self.out_dir, OUT_SCHEMA)
+        before the lineage append) reads back as zero rows.  Once a wave has
+        committed, a missing output directory means the output was lost or
+        moved, so the read fails instead."""
+        empty = spark.createDataFrame([], OUT_SCHEMA).drop("bucket")
         lin = self.lineage(spark)
-        if out is None or lin is None:
-            return spark.createDataFrame([], OUT_SCHEMA).drop("bucket")
+        if lin is None:
+            return empty
         committed = (
             lin.filter(F.col("run_id") == self.run_id).select("bucket").distinct()
         )
+        try:
+            out = spark.read.schema(OUT_SCHEMA).parquet(self.out_dir)
+        except AnalysisException as e:
+            # every wave's span write creates out_dir, even a wave with no
+            # rows: its absence is "nothing written yet" only while this run
+            # has no committed bucket (checked here, off the normal path)
+            if e.getCondition() == "PATH_NOT_FOUND" and committed.isEmpty():
+                return empty
+            raise
         return out.join(F.broadcast(committed), "bucket", "leftsemi").drop("bucket")
 
     def _committed_lineage(self, spark: SparkSession) -> DataFrame:

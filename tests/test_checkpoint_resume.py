@@ -203,6 +203,20 @@ def test_run_without_a_committed_wave_reads_back_empty(spark, run, monkeypatch):
     assert crashed.dtypes == OUT_DTYPES and crashed.count() == 0
 
 
+def test_lost_output_of_a_committed_run_fails_loudly(spark, run):
+    """Once a wave has committed, a missing output directory is lost data,
+    not an empty run: read_output raises instead of reading zero rows."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    run.run(spark, fixture_corpus_df(spark), max_waves=1)
+    assert run.completed_buckets(spark)
+    shutil.rmtree(run.out_dir)
+    with pytest.raises(AnalysisException):
+        run.read_output(spark).count()
+
+
 def test_reports_reject_a_run_with_no_committed_wave(spark, run):
     """The lineage reports raise a ValueError naming the run (not a bare
     assert, which ``python -O`` strips) when the run has committed nothing:

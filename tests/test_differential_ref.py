@@ -59,7 +59,7 @@ def run_mine(table: Element) -> dict:
     data = tab.data_refined
     m.data_extracted_to_map = 0  # isolate the summary-filter delta (harness parity)
     if data:
-        data = filter_summary_rows(data, m)
+        data = filter_summary_rows(data, m, tab.values)
     return {
         "headers_found": bool(getattr(tab, "headers", None) is not None and tab.error != "E2"),
         "vertical": 1 if tab.vertical else 0,

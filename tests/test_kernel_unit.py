@@ -238,6 +238,11 @@ def test_data_colspan_expands_same_object():
     assert list(row["A"]) == ["wide"] and list(row["B"]) == ["wide"]
 
 
+def cell_values(rows):
+    """Each row's cell values, as parse_table records them in TableParse.values."""
+    return [[extract_value_from_cell(c) for c in row.values()] for row in rows]
+
+
 def test_summary_filter_running_sum_and_mean():
     m = Metrics()
     rows = [
@@ -245,7 +250,7 @@ def test_summary_filter_running_sum_and_mean():
         {"name": Cell(["2011 Alpha Beta"]), "gp": Cell([20.0]), "g": Cell([5.0])},
         {"name": Cell(["Grand career total"]), "gp": Cell([30.0]), "g": Cell([8.0])},
     ]
-    out = filter_summary_rows(rows, m)
+    out = filter_summary_rows(rows, m, cell_values(rows))
     assert len(out) == 2 and m.data_extracted_to_map == -3
 
 
@@ -257,7 +262,7 @@ def test_summary_filter_needs_char_difference():
         {"name": Cell(["2011 Alpha"]), "gp": Cell([20.0]), "g": Cell([5.0])},
         {"name": Cell(["2012 Alpha"]), "gp": Cell([30.0]), "g": Cell([8.0])},
     ]
-    out = filter_summary_rows(rows, m)
+    out = filter_summary_rows(rows, m, cell_values(rows))
     assert len(out) == 3
 
 
