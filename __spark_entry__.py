@@ -9,8 +9,8 @@ and returns the normalized output-span DataFrame.
 (kernel extraction, metrics, triples, TTL and the explorer path),
 ``bench.py``'s headline set, and the operator queries the test suite checks
 by name.  EVERY registered query carries a DuckDB-runnable ANSI oracle: the
-approximate (ANN) and iterative (k-means, PQ, BPE) families run
-integer-exact and their oracles REPLAY the full deterministic training, so
+approximate and iterative ANN family (k-means training) runs
+integer-exact and its oracles REPLAY the full deterministic training, so
 no rows-only checks remain.
 """
 

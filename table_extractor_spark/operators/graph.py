@@ -5,7 +5,7 @@ Pregel-ish DataFrame shape (Malewicz et al. SIGMOD 2010): each iteration
 is one join (ranks onto out-edges) plus one partial-agg'd groupBy of the
 contributions — the per-superstep plan a 10^12-edge cluster run wants,
 with NO driver-side traffic at all (contrast the sanctioned O(1)-rows
-collects in BPE/Lloyd training: here even the loop state stays
+collects in Lloyd training: here even the loop state stays
 distributed; only the iteration COUNT lives on the driver).
 
 Arithmetic is integer-exact end to end (the engine's reproducibility
@@ -224,7 +224,7 @@ def k_hop_distances(
     doubles every hop and a deep walk OOMs the driver merely rendering
     it for the SQL UI.  (3) An EARLY EXIT the moment the frontier drains
     (the count on the checkpointed RDD is the sanctioned O(1)-scalar
-    driver traffic, same budget as BPE/Lloyd training): a k=10 request
+    driver traffic, same budget as Lloyd training): a k=10 request
     over a diameter-3 component does 3 rounds, not 10.  The visited
     accumulator additionally truncates its union chain every
     ``checkpoint_every`` hops so deep walks keep a shallow plan.

@@ -1,4 +1,4 @@
-"""C1. Training-data pipeline queries: dedup, similarity, BPE, packing.
+"""C1. Training-data pipeline queries: dedup, similarity, packing.
 
 Only the queries the test suite checks by name stay registered here.
 Same engine-parity rules as every other registered query (see the
@@ -384,238 +384,12 @@ def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "bpe_pair_counts",
-    oracle="""
-WITH wc AS (
-  SELECT w AS word, COUNT(*) AS n FROM (
-    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-  ) WHERE w <> '' GROUP BY w
-),
-pos AS (
-  SELECT word, n, unnest(generate_series(1, length(word))) AS i FROM wc
-),
-pairs AS (
-  SELECT substr(word, i, 1) AS a,
-         CASE WHEN i < length(word) THEN substr(word, i + 1, 1)
-              ELSE '</w>' END AS b,
-         n
-  FROM pos
-)
-SELECT a, b, CAST(SUM(n) AS BIGINT) AS cnt FROM pairs GROUP BY a, b
-ORDER BY cnt DESC, a, b LIMIT 30
-""",
-)
-def bpe_pair_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE vocabulary induction, round-1 discovery (operators/bpe): the
-    top-30 adjacent symbol pairs over the corpus word-TYPE table
-    (characters + end-of-word marker), weighted by word count — the pair
-    the full ``bpe_train`` loop would merge first is row 1.  All integer
-    counts and string equality; the corpus collapses to word types before
-    any pair work, so the per-round cost at 10^12 docs tracks |vocab|,
-    not |tokens|.  Training-loop semantics (greedy non-overlap merges,
-    tie order) are differentially pinned against a textbook reference in
-    tests/test_bpe.py."""
-    from ..operators import bpe as BP
-
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        BP.pair_counts(BP.word_symbol_table(docs))
-        .orderBy(F.col("cnt").desc(), "a", "b")
-        .limit(30)
-    )
-
-
-def _duck_bpe_with(n_merges: int) -> str:
-    """The WITH-clause replaying operators.bpe.bpe_train: the corpus
-    collapses to the word-type table ``s0`` (word, n, pos, sym — chars +
-    end-of-word marker), then one CTE group per merge round: pair counts
-    over adjacent positions, argmax (cnt desc, lhs, rhs), greedy
-    LEFT-TO-RIGHT NON-OVERLAPPING merge via gaps-and-islands (consecutive
-    match starts form an island; keep even offsets — 'aaa' + (a,a) merges
-    once), and a re-ranked rewrite.  All integer counts + string equality:
-    the replay is exact whatever the engine.  The ``bpe_encode`` and
-    ``bpe_fertility_by_lang`` oracles read the final symbol table
-    ``s{{N}}``."""
-    parts = ["""
-wc AS (
-  SELECT w AS word, COUNT(*) AS n FROM (
-    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-  ) WHERE w <> '' GROUP BY w
-),
-s0 AS MATERIALIZED (
-  SELECT word, n, i AS pos,
-         CASE WHEN i <= length(word) THEN substr(word, i, 1)
-              ELSE '</w>' END AS sym
-  FROM (SELECT word, n, unnest(generate_series(1, length(word) + 1)) AS i
-        FROM wc)
-)"""]
-    for r in range(n_merges):
-        parts.append(f"""
-pc{r} AS (
-  SELECT s1.sym AS a, s2.sym AS b, SUM(s1.n) AS cnt
-  FROM s{r} s1 JOIN s{r} s2 ON s1.word = s2.word AND s2.pos = s1.pos + 1
-  GROUP BY s1.sym, s2.sym
-),
-top{r} AS MATERIALIZED (SELECT a, b, cnt FROM pc{r} ORDER BY cnt DESC, a, b LIMIT 1),
-mstart{r} AS (
-  SELECT s1.word, s1.pos
-  FROM s{r} s1
-  JOIN s{r} s2 ON s1.word = s2.word AND s2.pos = s1.pos + 1
-  JOIN top{r} t ON s1.sym = t.a AND s2.sym = t.b
-),
-isl{r} AS (
-  SELECT word, pos,
-         pos - ROW_NUMBER() OVER (PARTITION BY word ORDER BY pos) AS grp
-  FROM mstart{r}
-),
-keep{r} AS MATERIALIZED (
-  SELECT word, pos FROM (
-    SELECT word, pos,
-           pos - MIN(pos) OVER (PARTITION BY word, grp) AS off
-    FROM isl{r}
-  ) WHERE off % 2 = 0
-),
-s{r + 1} AS MATERIALIZED (
-  SELECT word, n,
-         ROW_NUMBER() OVER (PARTITION BY word ORDER BY pos) AS pos, sym
-  FROM (
-    SELECT s.word, s.n, s.pos,
-           CASE WHEN k.pos IS NOT NULL THEN t.a || t.b ELSE s.sym END AS sym
-    FROM s{r} s
-    CROSS JOIN top{r} t
-    LEFT JOIN keep{r} k ON s.word = k.word AND s.pos = k.pos
-    WHERE NOT EXISTS (SELECT 1 FROM keep{r} kb
-                      WHERE kb.word = s.word AND kb.pos = s.pos - 1)
-  )
-)""")
-    return "WITH " + ",".join(parts)
-
-
-def _duck_bpe_encode(n_merges: int) -> str:
-    """Per-document tokenization under the learned vocabulary: each word
-    type's final symbol sequence comes straight from the replay's
-    ``s{{N}}`` table, documents re-tokenize by joining their words' symbol
-    runs in order.  Output md5-compacted (the probe battery showed the
-    compact shape is the right driver citizen for text-heavy outputs)."""
-    return (
-        _duck_bpe_with(n_merges)
-        + f""",
-wtok AS (
-  SELECT word, string_agg(sym, ' ' ORDER BY pos) AS toks,
-         CAST(COUNT(*) AS BIGINT) AS n_sym
-  FROM s{n_merges} GROUP BY word
-),
-dws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-dwords AS (
-  SELECT doc_id, unnest(w) AS word,
-         unnest(generate_series(1, len(w))) AS ord
-  FROM dws
-)
-SELECT d.doc_id,
-       CAST(SUM(t.n_sym) AS BIGINT) AS n_bpe_tokens,
-       md5(string_agg(t.toks, ' ' ORDER BY d.ord)) AS tokens_md5
-FROM dwords d JOIN wtok t ON d.word = t.word
-WHERE d.word <> ''
-GROUP BY d.doc_id"""
-    )
-
-
-BPE_MERGES = 6
-
-
-@register("bpe_encode", oracle=_duck_bpe_encode(BPE_MERGES))
-def bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The applied-tokenization side of the vocabulary (VERDICT r4 next
-    #7): train the merge table distributed, then encode every document
-    with it (operators/bpe.bpe_encode, expr path at this rule count) and
-    emit (doc_id, n_bpe_tokens, tokens_md5).  The oracle replays training
-    to the final symbol table and re-tokenizes each doc from its word
-    types — closing the loop from vocabulary induction to applied
-    tokenization under one driver hash.  Docs whose every token is empty
-    would have no oracle row; the corpus has none, and the Spark side
-    drops them symmetrically."""
-    from ..operators import bpe as BP
-
-    docs = load_table(spark, sf_dir, "documents")
-    rules = BP.bpe_train(docs, n_merges=BPE_MERGES)
-    enc = BP.bpe_encode(docs, rules)
-    return enc.filter(F.size("bpe_tokens") > 0).select(
-        "doc_id",
-        F.size("bpe_tokens").cast("long").alias("n_bpe_tokens"),
-        F.md5(F.array_join("bpe_tokens", " ")).alias("tokens_md5"),
-    )
-
-
-@register(
-    "bpe_fertility_by_lang",
-    oracle=_duck_bpe_with(BPE_MERGES)
-    + f""",
-wtok AS (
-  SELECT word, CAST(COUNT(*) AS BIGINT) AS n_sym
-  FROM s{BPE_MERGES} GROUP BY word
-),
-dws AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-dwords AS (SELECT doc_id, lang, unnest(w) AS word FROM dws),
-per AS (
-  SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_words,
-         CAST(SUM(t.n_sym) AS BIGINT) AS n_bpe_tokens
-  FROM dwords d JOIN wtok t ON d.word = t.word
-  WHERE d.word <> ''
-  GROUP BY d.lang
-)
-SELECT lang, n_words, n_bpe_tokens,
-       CAST((1000000 * n_bpe_tokens) // n_words AS BIGINT) AS fertility_ppm
-FROM per
-""",
-)
-def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility per language — BPE subword tokens emitted per
-    whitespace word, in exact ppm — the multilingual-equity audit run on
-    every candidate vocabulary (a language tokenizing at 2x the subwords
-    of another effectively pays double sequence length for the same
-    text; cf. the UniMax/NLLB tokenizer-fairness discussions).  Composes
-    the distributed trainer and encoder (operators/bpe): train once,
-    encode every doc (the per-doc size is the same quantity the
-    driver-green ``bpe_encode`` row pins), then one partial-agg'd
-    per-lang sum; the oracle replays training to the final symbol table
-    and re-derives every count."""
-    from ..operators import bpe as BP
-
-    docs = load_table(spark, sf_dir, "documents")
-    rules = BP.bpe_train(docs, n_merges=BPE_MERGES)
-    enc = BP.bpe_encode(docs, rules)
-    n_words = F.size(
-        F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-    )
-    return (
-        enc.select(
-            "lang",
-            n_words.alias("__nw"),
-            F.size("bpe_tokens").alias("__nb"),
-        )
-        .groupBy("lang")
-        .agg(
-            F.sum("__nw").cast("long").alias("n_words"),
-            F.sum("__nb").cast("long").alias("n_bpe_tokens"),
-        )
-        .filter(F.col("n_words") > 0)
-        .withColumn(
-            "fertility_ppm",
-            F.expr("(1000000 * n_bpe_tokens) div n_words").cast("long"),
-        )
-    )
-
-
-# r5 root-cause note (the r3/r4 driver-red on paragraph_dedup — and the
-# r4-reds on bpe_pair_counts / bpe_merges / shard_assembly): DuckDB promotes
-# integer SUM to HUGEINT (int128); a pandas/Arrow fetch renders that as
-# float64/decimal128 ('3' -> '3.0'), so any UNCAST integer-sum OUTPUT column
-# hash-mismatches at a driver that fetches via pandas, while
-# fetchall()-based local checks stay green.  Exactly the four r4-red
-# queries — and only those four of all 100 — had a HUGEINT output column
-# (here: n_kept).  Fix: CAST every integer-sum output to BIGINT; enforced
-# registry-wide by test_registry_contract.test_no_hugeint_oracle_outputs.
+# Integer-sum outputs are CAST to BIGINT (here: n_kept).  DuckDB promotes
+# integer SUM to HUGEINT (int128), and a pandas/Arrow fetch renders that as
+# float64/decimal128 ('3' -> '3.0'), so an uncast integer-sum output column
+# hash-mismatches at a driver that fetches via pandas while fetchall()-based
+# checks still match.  Enforced registry-wide by
+# test_registry_contract.test_no_hugeint_oracle_outputs.
 # The SQL below otherwise stays version-robust: zipped unnest +
 # generate_series words, GROUP BY (ord-1)/10 chunking with
 # string_agg(... ORDER BY ord), ROW_NUMBER first-occurrence ordered

@@ -393,46 +393,6 @@ def supplier_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "cohort_retention",
-    oracle="""
-WITH c AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) // 604800000000 AS cohort_period
-  FROM events GROUP BY user_id
-), a AS (
-  SELECT DISTINCT e.user_id, c.cohort_period,
-         epoch_us(e.ts) // 604800000000 - c.cohort_period AS period_offset
-  FROM events e JOIN c ON e.user_id = c.user_id
-), n AS (
-  SELECT cohort_period, period_offset,
-         CAST(COUNT(*) AS BIGINT) AS n_users
-  FROM a GROUP BY cohort_period, period_offset
-), s AS (
-  SELECT cohort_period, CAST(COUNT(*) AS BIGINT) AS cohort_size
-  FROM c GROUP BY cohort_period
-)
-SELECT CAST(n.cohort_period AS BIGINT) AS cohort_period,
-       CAST(period_offset AS BIGINT) AS period_offset,
-       n_users, cohort_size,
-       CAST(1000000 * n_users // cohort_size AS BIGINT) AS retention_ppm
-FROM n JOIN s ON n.cohort_period = s.cohort_period
-""",
-)
-def cohort_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix (operators/funnel.cohort_retention): users
-    bucketed by the WEEK of their first event (integer division of epoch
-    microseconds — the timestamp-parity convention, no calendar/timezone
-    functions), each later week reporting how many came back, in exact
-    ppm of the cohort.  One per-user min, one co-partitioned user-key
-    join, a (user, cohort, offset) distinct bounded by active
-    user-periods, two bounded-key aggregations, cohort sizes broadcast."""
-    from ..operators.funnel import cohort_retention
-
-    ev = load_table(spark, sf_dir, "events")
-    return cohort_retention(ev)
-
-
-@register(
     "reification_index",
     oracle="""
 SELECT l_orderkey, l_linenumber,

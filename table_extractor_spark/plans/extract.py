@@ -29,6 +29,7 @@ import zipimport
 from typing import Iterator, Optional, Tuple
 
 import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -136,9 +137,9 @@ def _install_lazy_zip_invalidation() -> None:
     re-reads an archive only when its ``(st_mtime_ns, st_size, st_ino)``
     changed since its last read, so new ``--py-files`` are still seen.
     Python 3.12 made that invalidation lazy (CPython gh-103200), so there
-    this does nothing.  Idempotent; installed from the worker-side
-    generator, so the driver and the Spark-free kernel keep the stock
-    behaviour."""
+    this does nothing.  Idempotent.  ``_parse_batches`` installs it only
+    inside a Spark task, so the driver (a test or a local iteration over
+    batches) and the Spark-free kernel keep the stock behaviour."""
     cls = zipimport.zipimporter
     if sys.version_info >= (3, 12) or hasattr(cls.invalidate_caches, "stat_keyed"):
         return
@@ -170,7 +171,8 @@ def _parse_batches(batches, emit_spans: bool) -> Iterator["pa.RecordBatch"]:
 
     import numpy as np
 
-    _install_lazy_zip_invalidation()
+    if TaskContext.get() is not None:
+        _install_lazy_zip_invalidation()
 
     names = list(OUT_COLUMNS) + list(METRIC_FIELDS)
     empty: tuple = ()

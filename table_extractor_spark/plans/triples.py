@@ -55,7 +55,7 @@ def adjust_resource(c: Column) -> Column:
     return F.replace(out, F.lit(" "), F.lit("_"))
 
 
-def _table_cells(spans: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _table_cells(spans: DataFrame) -> DataFrame:
     """The cell spans of ``spans`` with the table structure rebuilt from each
     document's ordered span sequence:
 
@@ -67,18 +67,18 @@ def _table_cells(spans: DataFrame, id_col: str = "doc_id") -> DataFrame:
       (J5 positional zip, HtmlTableParser.py:944-951).
 
     Cells of a table with no header span are dropped.  Every window
-    partitions by ``id_col`` first, so all of them share one distribution on
-    the document: the caller's, if it already partitioned on ``id_col``,
+    partitions by ``doc_id`` first, so all of them share one distribution on
+    the document: the caller's, if it already partitioned on ``doc_id``,
     else one hash exchange."""
     kind = F.col("kind")
-    w_doc = Window.partitionBy(id_col).orderBy("order")
+    w_doc = Window.partitionBy("doc_id").orderBy("order")
     seg = spans.withColumn(
         "table_idx", F.sum(F.when(kind == "section", 1).otherwise(0)).over(w_doc)
     )
 
     # per table: its section text, its ordered header list, and each cell's
     # position in the table's cell sequence (one Window, one sort)
-    w_tbl = Window.partitionBy(id_col, "table_idx").orderBy("order")
+    w_tbl = Window.partitionBy("doc_id", "table_idx").orderBy("order")
     w_tbl_all = w_tbl.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     w_tbl_upto = w_tbl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     hdrs = F.sort_array(
@@ -375,18 +375,12 @@ def write_ttl(
     ttl_file_lines(triples, base_uri, partitions).write.mode("overwrite").text(path)
 
 
-def linearize_tables(
-    spans: DataFrame,
-    kv_sep: str = ": ",
-    col_sep: str = " | ",
-    row_sep: str = "\n",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def linearize_tables(spans: DataFrame) -> DataFrame:
     """Per-document TRAINING TEXT from extracted table spans — the
     "table-to-text" serialization an LLM-pretraining pipeline applies to
     mined tables (each data row becomes "Header1: v1 | Header2: v2", rows
-    joined in table order): the step that turns this engine's extraction
-    output into corpus documents.
+    joined by newlines in table order): the step that turns this engine's
+    extraction output into corpus documents.
 
     Tables, their headers and each cell's (row, column) come from the same
     segmentation as ``emit_triples`` (``_table_cells``): a 'section' span
@@ -400,18 +394,18 @@ def linearize_tables(
     exchange on the doc id; no join, no broadcast, no Python.
     """
     kind = F.col("kind")
-    cells = _table_cells(spans.filter(kind.isin("section", "header", "cell")), id_col)
-    pair = F.concat(F.col("header"), F.lit(kv_sep), F.col("text"))
-    rows = cells.groupBy(id_col, "table_idx", "row_idx").agg(
+    cells = _table_cells(spans.filter(kind.isin("section", "header", "cell")))
+    pair = F.concat(F.col("header"), F.lit(": "), F.col("text"))
+    rows = cells.groupBy("doc_id", "table_idx", "row_idx").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("col_idx", pair.alias("p")))),
                 lambda s: s.getField("p"),
             ),
-            col_sep,
+            " | ",
         ).alias("__row_text")
     )
-    return rows.groupBy(id_col).agg(
+    return rows.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_rows"),
         F.array_join(
             F.transform(
@@ -420,6 +414,6 @@ def linearize_tables(
                 ),
                 lambda s: s.getField("__row_text"),
             ),
-            row_sep,
+            "\n",
         ).alias("linearized"),
     )

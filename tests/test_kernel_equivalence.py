@@ -20,7 +20,6 @@ import hashlib
 import importlib.util
 import json
 import os
-import zipimport
 
 import pyarrow as pa
 from hypothesis import given, settings, strategies as st
@@ -144,17 +143,11 @@ def _batch(docs):
     )
 
 
-def _drain_checking_gc(batches, monkeypatch):
+def _drain_checking_gc(batches):
     """Run the generator and record, per yielded batch, whether the GC is
-    on.  The generator installs the worker's stat-keyed
-    ``zipimporter.invalidate_caches``; monkeypatch puts the stock one back."""
+    on."""
     from table_extractor_spark.plans.extract import parse_documents_gen
 
-    monkeypatch.setattr(
-        zipimport.zipimporter,
-        "invalidate_caches",
-        zipimport.zipimporter.invalidate_caches,
-    )
     seen = []
     for out in parse_documents_gen(iter(batches)):
         seen.append(gc.isenabled())
@@ -162,19 +155,19 @@ def _drain_checking_gc(batches, monkeypatch):
     return seen
 
 
-def test_parse_batches_restores_an_enabled_gc(monkeypatch):
+def test_parse_batches_restores_an_enabled_gc():
     docs = list(fixture_documents())
     assert gc.isenabled()
-    seen = _drain_checking_gc([_batch(docs[:5]), _batch(docs[5:])], monkeypatch)
+    seen = _drain_checking_gc([_batch(docs[:5]), _batch(docs[5:])])
     assert seen and all(seen)
     assert gc.isenabled()
 
 
-def test_parse_batches_keeps_a_disabled_gc_disabled(monkeypatch):
+def test_parse_batches_keeps_a_disabled_gc_disabled():
     docs = list(fixture_documents())
     gc.disable()
     try:
-        seen = _drain_checking_gc([_batch(docs)], monkeypatch)
+        seen = _drain_checking_gc([_batch(docs)])
         assert seen and not any(seen)
         assert not gc.isenabled()
     finally:

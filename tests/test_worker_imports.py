@@ -1,8 +1,10 @@
-"""The extraction stage's per-worker import fix, without a JVM: before Python
-3.12, ``importlib.invalidate_caches()`` (called by a reused PySpark worker
-before every task) re-reads the directory of every zip on ``sys.path``;
-the stat-keyed ``zipimporter.invalidate_caches`` must re-read an archive only
-when it changed, and still pick up a rewritten archive."""
+"""The extraction stage's per-worker import fix: before Python 3.12,
+``importlib.invalidate_caches()`` (called by a reused PySpark worker before
+every task) re-reads the directory of every zip on ``sys.path``; the
+stat-keyed ``zipimporter.invalidate_caches`` must re-read an archive only
+when it changed, and still pick up a rewritten archive.  The generator
+installs it inside a Spark task only, never on the driver.  All tests but
+the last run without a JVM."""
 
 from __future__ import annotations
 
@@ -11,9 +13,11 @@ import sys
 import zipfile
 import zipimport
 
+import pyarrow as pa
 import pytest
 
 from table_extractor_spark.plans import extract
+from table_extractor_spark.sources.corpus import fixture_documents
 
 
 def write_zip(path, modules):
@@ -99,3 +103,48 @@ def test_install_does_nothing_on_python_312(archive, monkeypatch):
     monkeypatch.setattr(sys, "version_info", (3, 12, 0, "final", 0))
     extract._install_lazy_zip_invalidation()
     assert zipimport.zipimporter.invalidate_caches is stock
+
+
+def test_driver_side_generator_leaves_zipimport_alone(monkeypatch):
+    # put the attribute back afterwards, whatever the generator did to it
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    stock = zipimport.zipimporter.invalidate_caches
+    assert not hasattr(stock, "stat_keyed")
+    doc_id, spans = fixture_documents()[0]
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([doc_id]),
+            pa.array([[s["kind"] for s in spans]]),
+            pa.array([[s["text"] for s in spans]]),
+            pa.array([[s["media_ref"] for s in spans]]),
+            pa.array([[s["offset"] for s in spans]], pa.list_(pa.int32())),
+        ],
+        ["doc_id", "__k", "__t", "__r", "__o"],
+    )
+    assert list(extract.parse_documents_gen(iter([batch])))
+    assert zipimport.zipimporter.invalidate_caches is stock
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="lazy since 3.12")
+def test_generator_installs_the_patch_inside_a_spark_task(spark):
+    from pyspark.sql import functions as F
+
+    from table_extractor_spark.sources.tables import fixture_corpus_df
+
+    def probe(batches):
+        for _ in extract.parse_documents_gen(batches):
+            pass
+        installed = hasattr(zipimport.zipimporter.invalidate_caches, "stat_keyed")
+        yield pa.RecordBatch.from_arrays([pa.array([installed])], ["stat_keyed"])
+
+    cols = fixture_corpus_df(spark).select(
+        "doc_id",
+        *[F.col("spans." + f).alias(a) for f, a in
+          (("kind", "__k"), ("text", "__t"), ("media_ref", "__r"), ("offset", "__o"))],
+    )
+    rows = cols.mapInArrow(probe, "stat_keyed boolean").collect()
+    assert rows and all(r.stat_keyed for r in rows)
