@@ -15,31 +15,30 @@ spans once and shuffles twice: on doc_id for the table windows, and for the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from .triples import TABLE_IDX_SQL
 
 
 def table_inventory(out_spans: DataFrame) -> DataFrame:
     """(doc_id, table_idx, section, header) — one row per header occurrence.
 
     Reconstructs table membership from the ordered span sequence: a table's
-    spans start at its 'section' span (running count = W2-style latch), and
-    each header takes its table's section from a window over (doc_id,
-    table_idx).  Both windows ride one hash exchange on ``doc_id``; headers
-    before a doc's first section belong to no table and are dropped."""
-    kind = F.col("kind")
-    w_doc = Window.partitionBy("doc_id").orderBy("order")
-    w_tbl = Window.partitionBy("doc_id", "table_idx")
+    spans start at its 'section' span (running count = W2-style latch,
+    ``triples.TABLE_IDX_SQL``), and each header takes its table's section
+    from a window over (doc_id, table_idx).  Both windows ride one hash
+    exchange on ``doc_id``; headers before a doc's first section belong to
+    no table and are dropped."""
     return (
-        out_spans.filter(kind.isin("section", "header"))
-        .withColumn(
-            "table_idx",
-            F.sum(F.when(kind == "section", 1).otherwise(0)).over(w_doc),
+        out_spans.where("kind IN ('section', 'header')")
+        .selectExpr("*", TABLE_IDX_SQL)
+        .selectExpr(
+            "*",
+            "max(CASE WHEN kind = 'section' THEN text END) "
+            "OVER (PARTITION BY doc_id, table_idx) AS section",
         )
-        .withColumn(
-            "section", F.max(F.when(kind == "section", F.col("text"))).over(w_tbl)
-        )
-        .filter((kind == "header") & (F.col("table_idx") > 0))
-        .select("doc_id", "table_idx", "section", F.col("text").alias("header"))
+        .where("kind = 'header' AND table_idx > 0")
+        .selectExpr("doc_id", "table_idx", "section", "text AS header")
     )
 
 
@@ -51,22 +50,19 @@ def settings_inventory(
     (section, header, n_tables, examples<=3, property) — property pre-filled
     from the ontology label table when a case-insensitive match exists, else
     '' (the blank the user fills in, WriteSettingsFile.py:60-104)."""
-    inv = table_inventory(out_spans)
-    grouped = inv.groupBy("section", "header").agg(
-        F.count("*").alias("n_tables"),
-        F.slice(F.sort_array(F.collect_set("doc_id")), 1, max_examples).alias(
-            "examples"
+    grouped = table_inventory(out_spans).groupBy("section", "header").agg(
+        F.expr("count(*) AS n_tables"),
+        F.expr(
+            f"slice(sort_array(collect_set(doc_id)), 1, {int(max_examples)}) "
+            "AS examples"
         ),
     )
-    onto = ontology.select(
-        F.lower(F.col("label")).alias("__label"), F.col("property").alias("__prop")
-    )
-    return (
-        grouped.join(
-            F.broadcast(onto), F.lower("header") == F.col("__label"), "left"
-        )
-        .withColumn("property", F.coalesce("__prop", F.lit("")))
-        .drop("__label", "__prop")
+    onto = ontology.selectExpr("lower(label) AS __label", "property AS __prop")
+    return grouped.join(
+        F.broadcast(onto), F.expr("lower(header) = __label"), "left"
+    ).selectExpr(
+        "section", "header", "n_tables", "examples",
+        "coalesce(__prop, '') AS property",
     )
 
 

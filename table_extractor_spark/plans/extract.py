@@ -23,9 +23,6 @@ per document (kind IS NULL) instead of a second parse or a struct column.
 from __future__ import annotations
 
 import gc
-import os
-import sys
-import zipimport
 from typing import Iterator, Optional, Tuple
 
 import pyarrow as pa
@@ -42,6 +39,9 @@ from pyspark.sql.types import (
 
 from ..kernel.document import extract_document_cols
 from ..operators.repartition import salted_repartition
+from ..worker_daemon import (
+    install_lazy_zip_invalidation as _install_lazy_zip_invalidation,
+)
 
 # ---- schemas (FIXTURES.md §1 input / §2 output) ---------------------------
 
@@ -126,51 +126,14 @@ def parse_documents_metrics_gen(batches) -> Iterator["pa.RecordBatch"]:
     yield from _parse_batches(batches, emit_spans=False)
 
 
-def _install_lazy_zip_invalidation() -> None:
-    """Stop each Python task re-reading every zip on ``sys.path``.
-
-    Before every task, a reused PySpark worker calls
-    ``importlib.invalidate_caches()``; before Python 3.12 that eagerly
-    re-reads the central directory of each ``zipimporter`` (16 of them over
-    pyspark.zip, the py4j zip and the Spark jar), ~160 ms of CPU per task
-    on a 4-vCPU VM against ~1 ms for an empty ``mapInArrow`` body.  The replacement
-    re-reads an archive only when its ``(st_mtime_ns, st_size, st_ino)``
-    changed since its last read, so new ``--py-files`` are still seen.
-    Python 3.12 made that invalidation lazy (CPython gh-103200), so there
-    this does nothing.  Idempotent.  ``_parse_batches`` installs it only
-    inside a Spark task, so the driver (a test or a local iteration over
-    batches) and the Spark-free kernel keep the stock behaviour."""
-    cls = zipimport.zipimporter
-    if sys.version_info >= (3, 12) or hasattr(cls.invalidate_caches, "stat_keyed"):
-        return
-    reread = cls.invalidate_caches
-    read_at: dict = {}  # archive path -> stat key when its directory was read
-
-    def invalidate_caches(self) -> None:
-        try:
-            st = os.stat(self.archive)
-            key = (st.st_mtime_ns, st.st_size, st.st_ino)
-        except OSError:
-            key = None
-        if key is not None and read_at.get(self.archive) == key:
-            files = zipimport._zip_directory_cache.get(self.archive)
-            if files is not None:
-                self._files = files
-                return
-        reread(self)
-        # stat taken BEFORE the read: a rewrite racing the read leaves a
-        # stale key behind, which only costs one more read next time
-        read_at[self.archive] = key
-
-    invalidate_caches.stat_keyed = True
-    cls.invalidate_caches = invalidate_caches
-
-
 def _parse_batches(batches, emit_spans: bool) -> Iterator["pa.RecordBatch"]:
     from time import perf_counter
 
     import numpy as np
 
+    # a worker started by build_session's daemon already has it; under
+    # spark-submit the daemon starts before --py-files are on its path, so
+    # the kernel stage installs it in its own workers
     if TaskContext.get() is not None:
         _install_lazy_zip_invalidation()
 

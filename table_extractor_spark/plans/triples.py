@@ -39,28 +39,39 @@ rule).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions.typing import py2_float_matches
+from ..functions.sql import sql_string
+from ..functions.typing import PY2_FLOAT_RE
 
 SECTION_PREFIX = "SECTION_"
 
+# the spans the chain reads: link and media spans carry nothing it uses
+# (a cell has its media_ref)
+CHAIN_KINDS_SQL = "kind IN ('section', 'header', 'cell')"
 
-def adjust_resource(c: Column) -> Column:
-    """``MapperTools.adjust_resource`` (:298-311): strip ONE leading and ONE
-    trailing space, then every remaining space becomes '_' — the cell-value
-    -> URI-tail normalization the reference applies before probing."""
-    out = F.regexp_replace(c, r"^ ", "")
-    out = F.regexp_replace(out, r" $", "")
-    return F.replace(out, F.lit(" "), F.lit("_"))
+# W2-style latch: a span's table is the running count of 'section' spans
+# in its document, so a doc's spans before its first section form table 0
+TABLE_IDX_SQL = (
+    "sum(CASE WHEN kind = 'section' THEN 1 ELSE 0 END) "
+    "OVER (PARTITION BY doc_id ORDER BY `order`) AS table_idx"
+)
+
+
+def adjust_resource(expr: str) -> str:
+    """``MapperTools.adjust_resource`` (:298-311) over the SQL expression
+    ``expr``: strip ONE leading and ONE trailing space, then every remaining
+    space becomes '_' — the cell-value -> URI-tail normalization the
+    reference applies before probing."""
+    trimmed = f"regexp_replace(regexp_replace({expr}, '^ ', ''), ' $', '')"
+    return f"replace({trimmed}, ' ', '_')"
 
 
 def _table_cells(spans: DataFrame) -> DataFrame:
     """The cell spans of ``spans`` with the table structure rebuilt from each
     document's ordered span sequence:
 
-    * ``table_idx``: running count of 'section' spans (W2-style latch), so a
-      doc's spans before its first section form table 0;
+    * ``table_idx``: running count of 'section' spans (``TABLE_IDX_SQL``);
     * ``section`` and the ordered ``headers`` of the cell's table;
     * ``row_idx``, ``col_idx`` and ``header``: the cell's position in its
       table's cell sequence, divided by and modulo the table's header count
@@ -70,37 +81,31 @@ def _table_cells(spans: DataFrame) -> DataFrame:
     partitions by ``doc_id`` first, so all of them share one distribution on
     the document: the caller's, if it already partitioned on ``doc_id``,
     else one hash exchange."""
-    kind = F.col("kind")
-    w_doc = Window.partitionBy("doc_id").orderBy("order")
-    seg = spans.withColumn(
-        "table_idx", F.sum(F.when(kind == "section", 1).otherwise(0)).over(w_doc)
-    )
-
     # per table: its section text, its ordered header list, and each cell's
     # position in the table's cell sequence (one Window, one sort)
-    w_tbl = Window.partitionBy("doc_id", "table_idx").orderBy("order")
-    w_tbl_all = w_tbl.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    w_tbl_upto = w_tbl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hdrs = F.sort_array(
-        F.collect_list(F.when(kind == "header", F.struct("order", "text"))).over(
-            w_tbl_all
-        )
+    tbl = (
+        "OVER (PARTITION BY doc_id, table_idx ORDER BY `order` "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND {})"
     )
+    tbl_all = tbl.format("UNBOUNDED FOLLOWING")
     return (
-        seg.withColumn(
-            "section", F.max(F.when(kind == "section", F.col("text"))).over(w_tbl_all)
+        spans.selectExpr("*", TABLE_IDX_SQL)
+        .selectExpr(
+            "*",
+            f"max(CASE WHEN kind = 'section' THEN text END) {tbl_all} AS section",
+            "transform(sort_array(collect_list(CASE WHEN kind = 'header' "
+            f"THEN struct(`order`, text) END) {tbl_all}), h -> h.text) AS headers",
+            "CAST(count(CASE WHEN kind = 'cell' THEN 1 END) "
+            f"{tbl.format('CURRENT ROW')} - 1 AS INT) AS cell_seq",
         )
-        .withColumn("headers", F.transform(hdrs, lambda h: h.getField("text")))
-        .withColumn(
-            "cell_seq",
-            (F.count(F.when(kind == "cell", 1)).over(w_tbl_upto) - 1).cast("int"),
-        )
-        .withColumn("n_headers", F.size("headers"))
-        .filter((kind == "cell") & (F.col("n_headers") > 0))
+        .where("kind = 'cell' AND size(headers) > 0")
         # column index = position mod header count (J5)
-        .withColumn("row_idx", (F.col("cell_seq") / F.col("n_headers")).cast("int"))
-        .withColumn("col_idx", F.col("cell_seq") % F.col("n_headers"))
-        .withColumn("header", F.element_at("headers", F.col("col_idx") + 1))
+        .selectExpr(
+            "*",
+            "CAST(cell_seq / size(headers) AS INT) AS row_idx",
+            "cell_seq % size(headers) AS col_idx",
+            "element_at(headers, cell_seq % size(headers) + 1) AS header",
+        )
     )
 
 
@@ -142,24 +147,21 @@ def emit_triples(
     in a job of its own before the shuffle reads it again.  The triples
     come out range-partitioned on ``doc_id``, which is the order
     ``write_ttl`` needs, so the TTL's global sort adds no exchange.
+
+    The plan is written as SQL expression text in a few ``selectExpr``
+    steps: building it costs a handful of parses, not a py4j call per
+    ``Column`` node.
     """
-    kind = F.col("kind")
     # every step below is a function of one document: the range exchange is
     # the plan's only shuffle of the spans, and each window partitions by
-    # (doc_id, ...) so it reuses that distribution.  Link and media spans
-    # carry nothing the triples read (a cell has its media_ref).
-    spans = out_spans.filter(kind.isin("section", "header", "cell"))
-    spans = spans.repartitionByRange("doc_id")
-
+    # (doc_id, ...) so it reuses that distribution.
+    spans = out_spans.where(CHAIN_KINDS_SQL).repartitionByRange("doc_id")
     cells = _table_cells(spans)
 
     # J2: section gate — inner broadcast join drops unmapped tables
-    sect_rules = rules.select(
-        F.col("key").alias("__skey"), F.col("property").alias("section_prop")
-    )
     cells = cells.join(
-        F.broadcast(sect_rules),
-        F.concat(F.lit(SECTION_PREFIX), F.col("section")) == F.col("__skey"),
+        F.broadcast(rules.selectExpr("key AS __skey", "property AS section_prop")),
+        F.expr(f"concat({sql_string(SECTION_PREFIX)}, section) = __skey"),
     )
 
     # reification index: monotone row counter across a doc's MAPPED tables
@@ -168,40 +170,31 @@ def emit_triples(
     # the reference's map() never runs for an unmapped section, so gated
     # tables consume no reification indices (Mapper.py:92-98; pinned by the
     # randomized batch differential).
-    w_rows = Window.partitionBy("doc_id").orderBy("table_idx", "row_idx")
-    cells = cells.withColumn("reif", F.dense_rank().over(w_rows))
+    cells = cells.selectExpr(
+        "*",
+        "dense_rank() OVER (PARTITION BY doc_id ORDER BY table_idx, row_idx) AS reif",
+    )
 
     # row and cell triples from the same frame: a row's first cell also
     # carries its row triple (Mapper.py:97-101), so every gated row gets one
     # whether or not any of its cells map
-    cells = cells.withColumn(
-        "is_row",
-        F.explode(
-            F.when(F.col("col_idx") == 0, F.array(F.lit(True), F.lit(False)))
-            .otherwise(F.array(F.lit(False)))
-        ),
+    cells = cells.selectExpr(
+        "*",
+        "explode(CASE WHEN col_idx = 0 THEN array(true, false) "
+        "ELSE array(false) END) AS is_row",
     )
-    is_row = F.col("is_row")
     # a row triple's predicate is its section's property: null keys keep
     # it out of the header-rule and entity joins
-    cell_header = F.when(~is_row, F.col("header"))
+    cell_header = "CASE WHEN NOT is_row THEN header END"
 
     # J1: strict `<section>_<header>` then loose `<header>` cascade
-    strict = rules.select(
-        F.col("key").alias("__stkey"), F.col("property").alias("strict_prop")
-    )
-    loose = rules.select(
-        F.col("key").alias("__lokey"), F.col("property").alias("loose_prop")
-    )
-    cells = (
-        cells.join(
-            F.broadcast(strict),
-            F.concat("section", F.lit("_"), cell_header) == F.col("__stkey"),
-            "left",
-        )
-        .join(F.broadcast(loose), cell_header == F.col("__lokey"), "left")
-        .withColumn("prop", F.coalesce("strict_prop", "loose_prop"))
-    )
+    strict = rules.selectExpr("key AS __stkey", "property AS strict_prop")
+    loose = rules.selectExpr("key AS __lokey", "property AS loose_prop")
+    cells = cells.join(
+        F.broadcast(strict),
+        F.expr(f"concat(section, '_', {cell_header}) = __stkey"),
+        "left",
+    ).join(F.broadcast(loose), F.expr(f"{cell_header} = __lokey"), "left")
 
     # row triples pass; cell triples are mapped, non-empty cells, typed via
     # the py2 float() grammar (F10, MapperTools.py:183-195) — NOT try_cast,
@@ -210,59 +203,40 @@ def emit_triples(
     # string cells — every string py2 int() accepts, py2 float() accepts
     # first — so no 'int' kind exists here (documented rather than ported
     # as dead code).
-    mapped = cells.filter(
-        is_row | (F.col("prop").isNotNull() & (F.col("text") != "-"))
-    )
+    mapped = cells.selectExpr(
+        "*", "coalesce(strict_prop, loose_prop) AS prop"
+    ).where("is_row OR (prop IS NOT NULL AND text != '-')")
     if entities is not None:
-        ent = entities.select(F.col("entity").alias("__ent")).distinct()
-        mapped = mapped.withColumn(
-            "__adj", F.when(~is_row, adjust_resource(F.col("text")))
-        ).join(F.broadcast(ent), F.col("__adj") == F.col("__ent"), "left")
-        probe_hit = F.col("__ent").isNotNull()
-        probe_obj = F.col("__adj")
+        ent = entities.selectExpr("entity AS __ent").distinct()
+        mapped = mapped.selectExpr(
+            "*", f"CASE WHEN NOT is_row THEN {adjust_resource('text')} END AS __adj"
+        ).join(F.broadcast(ent), F.expr("__adj = __ent"), "left")
+        probe_hit, probe_obj = "__ent IS NOT NULL", "__adj"
     else:
-        probe_hit = F.lit(False)
-        probe_obj = F.col("text")
+        probe_hit, probe_obj = "false", "text"
 
-    subject_row = F.concat_ws("__", "doc_id", F.col("reif").cast("string"))
-    is_media = F.col("media_ref") != ""
-    is_float = py2_float_matches(F.col("text"))
-    return mapped.select(
+    subject_row = "concat_ws('__', doc_id, CAST(reif AS STRING))"
+    is_media = "media_ref != ''"
+    is_float = f"text RLIKE {sql_string(PY2_FLOAT_RE)}"
+    return mapped.selectExpr(
         "doc_id",
-        F.when(is_row, F.col("doc_id")).otherwise(subject_row).alias("subject"),
-        F.when(is_row, F.col("section_prop"))
-        .otherwise(F.col("prop"))
-        .alias("predicate"),
-        F.when(is_row, subject_row)
-        .when(is_media, F.col("media_ref"))
-        .when(is_float, F.col("text"))
-        .when(probe_hit, probe_obj)
-        .otherwise(F.col("text"))
-        .alias("object"),
-        F.when(is_row, F.lit("resource"))
-        .when(is_media, F.lit("uri"))
-        .when(is_float, F.lit("float"))
-        .when(probe_hit, F.lit("resource"))
-        .otherwise(F.lit("string"))
-        .alias("object_kind"),
-        (
-            F.col("reif") * 1000
-            + F.when(is_row, 0).otherwise(F.col("col_idx") + 1)
-        ).alias("t_order"),
+        f"CASE WHEN is_row THEN doc_id ELSE {subject_row} END AS subject",
+        "CASE WHEN is_row THEN section_prop ELSE prop END AS predicate",
+        f"CASE WHEN is_row THEN {subject_row} WHEN {is_media} THEN media_ref "
+        f"WHEN {is_float} THEN text WHEN {probe_hit} THEN {probe_obj} "
+        "ELSE text END AS object",
+        f"CASE WHEN is_row THEN 'resource' WHEN {is_media} THEN 'uri' "
+        f"WHEN {is_float} THEN 'float' WHEN {probe_hit} THEN 'resource' "
+        "ELSE 'string' END AS object_kind",
+        "reif * 1000 + CASE WHEN is_row THEN 0 ELSE col_idx + 1 END AS t_order",
     )
 
 
-def _ttl_escape_literal(c: Column) -> Column:
-    """Turtle string-literal escaping (grammar ECHAR): backslash first, then
-    double quote, newline, carriage return, tab.  The reference serializes
-    via rdflib (which escapes); emitting raw cell text would produce
-    malformed Turtle for real wiki content."""
-    out = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
-    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
-    out = F.replace(out, F.lit("\r"), F.lit("\\r"))
-    return F.replace(out, F.lit("\t"), F.lit("\\t"))
-
+# Turtle string-literal escaping (grammar ECHAR): backslash first, then
+# double quote, newline, carriage return, tab
+_ECHAR_ESCAPES = (
+    ("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t"),
+)
 
 # characters the IRIREF production forbids inside <...>, percent-encoded;
 # '%' first so already-encoded input stays decodable
@@ -273,13 +247,11 @@ _IRI_ESCAPES = (
 )
 
 
-def _ttl_escape_iri(c: Column) -> Column:
-    """Percent-encode the IRIREF-forbidden characters in a URI tail built
-    from data (doc_id / media_ref) so every <...> term is valid Turtle."""
-    out = c
-    for raw, enc in _IRI_ESCAPES:
-        out = F.replace(out, F.lit(raw), F.lit(enc))
-    return out
+def _replace_all(expr: str, pairs) -> str:
+    """SQL text applying ``replace`` for each (raw, escaped) pair in order."""
+    for raw, enc in pairs:
+        expr = f"replace({expr}, {sql_string(raw)}, {sql_string(enc)})"
+    return expr
 
 
 def ttl_lines(
@@ -290,8 +262,9 @@ def ttl_lines(
     """S5: serialize triples to Turtle text lines (one string column), the
     DataFrame equivalent of graph.serialize(dest, 'turtle')
     (Analyzer.py:198-245).  Write with ``df.write.text``.  Literals are
-    ECHAR-escaped and data-derived URI terms percent-encoded, so the output
-    parses as Turtle whatever the cell text contains.
+    ECHAR-escaped (the reference serializes via rdflib, which escapes) and
+    data-derived URI terms percent-encoded, so the output parses as Turtle
+    whatever the cell text contains.
 
     Namespaces follow the reference's Mapper exactly (Mapper.py:76-81,
     100-113, confirmed against its PUBLISHED extraction outputs under
@@ -299,44 +272,30 @@ def ttl_lines(
     (``base_uri``), mapped PROPERTIES under dbo (``ontology_uri``) — the
     r3-and-earlier serializer put predicates under dbr, which no reference
     .ttl ever does."""
-    uri = lambda c: F.concat(  # noqa: E731
-        F.lit("<"), F.lit(base_uri), _ttl_escape_iri(c), F.lit(">")
+    uri = lambda c: (  # noqa: E731
+        f"concat('<', {sql_string(base_uri)}, {_replace_all(c, _IRI_ESCAPES)}, '>')"
     )
-    pred = F.concat(
-        F.lit("<"), F.lit(ontology_uri), _ttl_escape_iri(F.col("predicate")),
-        F.lit(">"),
+    pred = (
+        f"concat('<', {sql_string(ontology_uri)}, "
+        f"{_replace_all('predicate', _IRI_ESCAPES)}, '>')"
     )
-    lit = lambda c: F.concat(F.lit('"'), _ttl_escape_literal(c), F.lit('"'))  # noqa: E731
+    lit = f"""concat('"', {_replace_all('object', _ECHAR_ESCAPES)}, '"')"""
+    xsd = "'^^<http://www.w3.org/2001/XMLSchema#{}>'".format
     obj = (
-        F.when(F.col("object_kind") == "resource", uri(F.col("object")))
-        .when(
-            F.col("object_kind") == "uri",
-            F.concat(F.lit("<"), _ttl_escape_iri(F.col("object")), F.lit(">")),
-        )
-        .when(
-            F.col("object_kind") == "float",
-            F.concat(
-                lit(F.col("object")),
-                F.lit("^^<http://www.w3.org/2001/XMLSchema#float>"),
-            ),
-        )
+        f"CASE WHEN object_kind = 'resource' THEN {uri('object')} "
+        "WHEN object_kind = 'uri' "
+        f"THEN concat('<', {_replace_all('object', _IRI_ESCAPES)}, '>') "
+        f"WHEN object_kind = 'float' THEN concat({lit}, {xsd('float')}) "
         # the reference types plain strings EXPLICITLY
         # (Mapper.check_value_type: Literal(..., datatype=XSD.string);
         # published .ttl shows "..."^^xsd:string) — term-identical to a
         # plain literal under RDF 1.1, serialized the reference's way
-        .otherwise(
-            F.concat(
-                lit(F.col("object")),
-                F.lit("^^<http://www.w3.org/2001/XMLSchema#string>"),
-            )
-        )
+        f"ELSE concat({lit}, {xsd('string')}) END"
     )
-    return triples.select(
+    return triples.selectExpr(
         "doc_id",
         "t_order",
-        F.concat_ws(
-            " ", uri(F.col("subject")), pred, obj, F.lit(".")
-        ).alias("line"),
+        f"concat_ws(' ', {uri('subject')}, {pred}, {obj}, '.') AS line",
     )
 
 
@@ -393,8 +352,7 @@ def linearize_tables(spans: DataFrame) -> DataFrame:
     Shape: the segmentation windows and both groupBys share one hash
     exchange on the doc id; no join, no broadcast, no Python.
     """
-    kind = F.col("kind")
-    cells = _table_cells(spans.filter(kind.isin("section", "header", "cell")))
+    cells = _table_cells(spans.where(CHAIN_KINDS_SQL))
     pair = F.concat(F.col("header"), F.lit(": "), F.col("text"))
     rows = cells.groupBy("doc_id", "table_idx", "row_idx").agg(
         F.array_join(

@@ -3,11 +3,23 @@
 ``recommended_confs`` centralizes the settings the pipeline is tuned for;
 ``build_session`` applies them for local runs (tests, bench, sandbox).  On a
 real cluster pass the same dict to spark-submit ``--conf`` flags.
+
+``build_session`` also starts every local Python worker through
+``worker_daemon``, so no task pays the per-task zip re-read (see that
+module).  ``recommended_confs`` leaves the stock daemon: under spark-submit
+the daemon starts before ``--py-files`` are on its path, so it could not
+import the wrapper; there the kernel stage installs the fix in its own
+workers (``plans/extract._parse_batches``).
 """
 
 from __future__ import annotations
 
+import os
 from typing import Dict, Optional
+
+# the directory holding the package: a local Python worker can import the
+# package when this is its working directory (the driver's) or on PYTHONPATH
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def recommended_confs(shuffle_partitions: Optional[int] = None) -> Dict[str, str]:
@@ -49,6 +61,14 @@ def recommended_confs(shuffle_partitions: Optional[int] = None) -> Dict[str, str
     return confs
 
 
+def _workers_import_package() -> bool:
+    """Whether a local daemon started with ``python -m`` finds the package.
+    If not, the stock daemon stays: a wrapper it cannot import would fail
+    every Python task, not only those that run package code."""
+    path = [os.getcwd()] + os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    return any(p and os.path.abspath(p) == _PACKAGE_ROOT for p in path)
+
+
 def build_session(
     master: str = "local[*]",
     app_name: str = "table-extractor-spark",
@@ -62,6 +82,10 @@ def build_session(
     confs = recommended_confs(shuffle_partitions)
     confs.setdefault("spark.driver.memory", driver_memory)
     confs.setdefault("spark.ui.enabled", "false")
+    # local[...] only: local-cluster executors start in their own directories
+    local = master == "local" or master.startswith("local[")
+    if local and _workers_import_package():
+        confs["spark.python.daemon.module"] = "table_extractor_spark.worker_daemon"
     if extra:
         confs.update(extra)
     for k, v in confs.items():

@@ -3,12 +3,14 @@
 every task) re-reads the directory of every zip on ``sys.path``; the
 stat-keyed ``zipimporter.invalidate_caches`` must re-read an archive only
 when it changed, and still pick up a rewritten archive.  The generator
-installs it inside a Spark task only, never on the driver.  All tests but
-the last run without a JVM."""
+installs it inside a Spark task only, never on the driver; under
+``build_session`` the package's daemon installs it in every worker.  The
+tests that take the ``spark`` fixture start a JVM; the others do not."""
 
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 import zipfile
 import zipimport
@@ -24,6 +26,21 @@ def write_zip(path, modules):
     with zipfile.ZipFile(path, "w") as zf:
         for name in modules:
             zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+def _fixture_batch() -> pa.RecordBatch:
+    """One fixture document as the kernel stage's input batch."""
+    doc_id, spans = fixture_documents()[0]
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([doc_id]),
+            pa.array([[s["kind"] for s in spans]]),
+            pa.array([[s["text"] for s in spans]]),
+            pa.array([[s["media_ref"] for s in spans]]),
+            pa.array([[s["offset"] for s in spans]], pa.list_(pa.int32())),
+        ],
+        ["doc_id", "__k", "__t", "__r", "__o"],
+    )
 
 
 @pytest.fixture()
@@ -114,18 +131,7 @@ def test_driver_side_generator_leaves_zipimport_alone(monkeypatch):
     )
     stock = zipimport.zipimporter.invalidate_caches
     assert not hasattr(stock, "stat_keyed")
-    doc_id, spans = fixture_documents()[0]
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array([doc_id]),
-            pa.array([[s["kind"] for s in spans]]),
-            pa.array([[s["text"] for s in spans]]),
-            pa.array([[s["media_ref"] for s in spans]]),
-            pa.array([[s["offset"] for s in spans]], pa.list_(pa.int32())),
-        ],
-        ["doc_id", "__k", "__t", "__r", "__o"],
-    )
-    assert list(extract.parse_documents_gen(iter([batch])))
+    assert list(extract.parse_documents_gen(iter([_fixture_batch()])))
     assert zipimport.zipimporter.invalidate_caches is stock
 
 
@@ -148,3 +154,69 @@ def test_generator_installs_the_patch_inside_a_spark_task(spark):
     )
     rows = cols.mapInArrow(probe, "stat_keyed boolean").collect()
     assert rows and all(r.stat_keyed for r in rows)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="lazy since 3.12")
+def test_generator_installs_the_patch_when_it_runs_in_a_task(monkeypatch):
+    """The kernel stage's own install, without a JVM: the spark-submit path
+    relies on it, since there the stock daemon starts every worker."""
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    assert not hasattr(zipimport.zipimporter.invalidate_caches, "stat_keyed")
+    monkeypatch.setattr(extract.TaskContext, "get", lambda: object())
+    assert list(extract.parse_documents_gen(iter([_fixture_batch()])))
+    assert hasattr(zipimport.zipimporter.invalidate_caches, "stat_keyed")
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="lazy since 3.12")
+def test_build_session_workers_have_the_patch_without_package_code(spark):
+    """Under ``build_session`` the package's daemon starts every Python
+    worker, so a task that runs no package code (the scan of a frame built
+    from a local list, then a stdlib-only probe) already has the patch."""
+
+    def probe(batches):
+        for _ in batches:
+            pass
+        with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
+            daemon = f.read().split(b"\0")
+        installed = hasattr(zipimport.zipimporter.invalidate_caches, "stat_keyed")
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([installed]),
+                pa.array([b"table_extractor_spark.worker_daemon" in daemon]),
+            ],
+            ["stat_keyed", "our_daemon"],
+        )
+
+    rows = (
+        spark.createDataFrame([(i,) for i in range(8)], "i int")
+        .repartition(4)
+        .mapInArrow(probe, "stat_keyed boolean, our_daemon boolean")
+        .collect()
+    )
+    assert rows and all(r.stat_keyed and r.our_daemon for r in rows)
+
+
+def test_recommended_confs_keep_the_stock_daemon():
+    """spark-submit starts the daemon before ``--py-files`` are on its
+    path, so the confs it is given must not name the package's daemon."""
+    from table_extractor_spark.session import recommended_confs
+
+    for confs in (recommended_confs(), recommended_confs(8)):
+        assert "spark.python.daemon.module" not in confs
+
+
+def test_daemon_only_where_local_workers_find_the_package(tmp_path, monkeypatch):
+    from table_extractor_spark import session
+
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    assert not session._workers_import_package()
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join(["/x", session._PACKAGE_ROOT]))
+    assert session._workers_import_package()
+    monkeypatch.delenv("PYTHONPATH")
+    monkeypatch.chdir(session._PACKAGE_ROOT)
+    assert session._workers_import_package()
