@@ -47,6 +47,15 @@ def main(argv=None) -> int:
     )
     from table_extractor_spark.streaming.checkpoint import CheckpointedRun
 
+    # validates run id, bucket and wave counts before a session is built
+    run = CheckpointedRun(
+        base_dir=args.output,
+        run_id=args.run_id,
+        num_buckets=args.num_buckets,
+        salt=args.salt,
+        wave_size=args.wave_size,
+    )
+
     builder = SparkSession.builder.appName(f"table-extract-{args.run_id}")
     for k, v in recommended_confs(args.shuffle_partitions).items():
         builder = builder.config(k, v)
@@ -56,13 +65,6 @@ def main(argv=None) -> int:
     if args.incremental_manifest:
         docs = new_documents(spark, docs, args.incremental_manifest)
 
-    run = CheckpointedRun(
-        base_dir=args.output,
-        run_id=args.run_id,
-        num_buckets=args.num_buckets,
-        salt=args.salt,
-        wave_size=args.wave_size,
-    )
     summary = run.run(spark, docs, max_waves=args.max_waves)
     print(
         f"run {args.run_id}: {len(summary['processed_now'])} buckets processed, "

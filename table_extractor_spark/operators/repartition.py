@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def bucket_expr(num_partitions: int, salt: int = 0, key: str = "doc_id"):
@@ -64,40 +64,3 @@ def spread_for_compute(df: DataFrame, key: str) -> DataFrame:
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, F.col(key))
 
-
-def skew_report(
-    df: DataFrame, key_col: str, top_k: int = 20
-) -> DataFrame:
-    """(rank, <key>, cnt, share_ppm): the hot-key profile of a join or
-    aggregation key — the diagnostic to run BEFORE a big shuffle, because
-    the decision it feeds (broadcast the other side? salt this key? lean
-    on AQE skew-join?) is cheap before the job and expensive after a
-    straggler task has been running for an hour.  share_ppm is the key's
-    integer parts-per-million share of all rows; a key at ~1e6/P ppm
-    (P = shuffle partitions) already owns an entire partition.
-
-    Shape: the per-key count partial-aggregates map-side; the global
-    top-k is TakeOrderedAndProject (per-partition heads + driver merge,
-    never a full sort of the key table); the rank window then runs over
-    the already-LIMITed top_k rows — a single-partition stage of exactly
-    ``top_k`` rows, bounded by construction.  Ties rank by key value, so
-    the report is total."""
-    total = df.agg(F.count("*").cast("long").alias("__total"))
-    top = (
-        df.groupBy(key_col)
-        .agg(F.count("*").cast("long").alias("cnt"))
-        # asc_nulls_last: Spark's ASC default is nulls-FIRST, DuckDB's
-        # (and most warehouses') is nulls-LAST — pin the portable order
-        # so a NULL hot key ranks the same everywhere.
-        .orderBy(F.col("cnt").desc(), F.col(key_col).asc_nulls_last())
-        .limit(top_k)
-    )
-    w = Window.orderBy(F.col("cnt").desc(), F.col(key_col).asc_nulls_last())
-    return (
-        top.crossJoin(F.broadcast(total))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .withColumn(
-            "share_ppm", F.expr("(1000000 * cnt) div __total").cast("long")
-        )
-        .select("rank", key_col, "cnt", "share_ppm")
-    )

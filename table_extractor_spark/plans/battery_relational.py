@@ -258,15 +258,14 @@ SELECT user_id, n, CAST(rk AS INT) AS rk FROM (
 """,
 )
 def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact heavy hitters (hot keys — the skew-detection input): one
-    partial-aggregated groupBy then a top-10.  The mergeable-sketch variant
-    (count_min_sketch, for when even the per-key agg is too wide) is
-    error-bound-pinned in pytest — its binary is engine-specific.
+    """Exact heavy hitters (hot keys): one partial-aggregated groupBy then
+    a top-10.  The mergeable-sketch variant (count_min_sketch, for when
+    even the per-key agg is too wide) is error-bound-pinned in pytest —
+    its binary is engine-specific.
 
-    Plan shape (the ``skew_report``/``supplier_pagerank`` pattern): the
-    top-10 is taken with ``orderBy().limit()`` — a distributed
-    TakeOrderedAndProject (per-partition heads + driver merge) — and the
-    rank window then runs over exactly 10 rows.  Ranking BEFORE the limit
+    Plan shape: the top-10 is taken with ``orderBy().limit()`` — a
+    distributed TakeOrderedAndProject (per-partition heads + driver
+    merge) — and the rank window then runs over exactly 10 rows.  Ranking BEFORE the limit
     put an unpartitioned row_number window over the whole per-user
     aggregate: single-partition, corpus-linear — the r6 verdict's
     scale-killer #2.  The (n desc, user_id) order is total, so
@@ -280,116 +279,6 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
     )
     return top.withColumn("rk", F.row_number().over(w))
-
-
-@register(
-    "skew_report",
-    oracle="""
-WITH per AS (
-  SELECT lang, CAST(COUNT(*) AS BIGINT) AS cnt FROM documents GROUP BY lang
-), tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS __total FROM documents
-), top AS (
-  SELECT lang, cnt FROM per ORDER BY cnt DESC, lang LIMIT 20
-)
-SELECT CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, lang) AS BIGINT) AS rank,
-       lang, cnt,
-       CAST((1000000 * cnt) // __total AS BIGINT) AS share_ppm
-FROM top, tot
-""",
-)
-def skew_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-shuffle skew diagnostic (operators/repartition.skew_report):
-    the hot-key profile of a join/aggregation key, run BEFORE committing a
-    plan to a big shuffle — it decides broadcast-vs-salt-vs-AQE while the
-    decision is still cheap.  share_ppm is each key's integer ppm share of
-    all rows; a key at ~1e6/P ppm (P = shuffle partitions) already owns an
-    entire partition, which is exactly the mega-article skew the corpus's
-    ``lang`` column exhibits (en ≈ 44%).  The per-key count is map-side
-    partial-agg'd; the global top-k is TakeOrderedAndProject (never a full
-    sort of the key table); the rank window runs over the already-LIMITed
-    top_k rows — a bounded single-partition stage by construction."""
-    from ..operators.repartition import skew_report
-
-    docs = load_table(spark, sf_dir, "documents")
-    return skew_report(docs, "lang", top_k=20)
-
-
-def _duck_pagerank_round(prev: str, out: str) -> str:
-    """One exact-integer PageRank CTE: rank' = 150000 + 850000 *
-    sum(rank div outdeg) div 1e6 (DuckDB SUM promotes to int128; the
-    final CAST lands every round back on BIGINT like the Spark side)."""
-    return f"""{out} AS (
-  SELECT n.node,
-         CAST(150000 + 850000 * COALESCE(SUM(r.rank_ppm // d.deg), 0)
-              // 1000000 AS BIGINT) AS rank_ppm
-  FROM nodes n
-  LEFT JOIN edges e ON e.dst = n.node
-  LEFT JOIN outdeg d ON d.src = e.src
-  LEFT JOIN {prev} r ON r.node = e.src
-  GROUP BY n.node
-)"""
-
-
-@register(
-    "supplier_pagerank",
-    oracle=f"""
-WITH pairs AS (
-  SELECT DISTINCT 'c:' || CAST(o_custkey AS VARCHAR) AS c,
-                  's:' || CAST(l_suppkey AS VARCHAR) AS s
-  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-), edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION
-  SELECT s AS src, c AS dst FROM pairs
-), outdeg AS (
-  SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY src
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), r0 AS (
-  SELECT node, CAST(1000000 AS BIGINT) AS rank_ppm FROM nodes
-), {_duck_pagerank_round("r0", "r1")},
-{_duck_pagerank_round("r1", "r2")},
-{_duck_pagerank_round("r2", "r3")}
-SELECT node, rank_ppm,
-       CAST(ROW_NUMBER() OVER (ORDER BY rank_ppm DESC, node) AS BIGINT) AS rk
-FROM r3 ORDER BY rank_ppm DESC, node LIMIT 20
-""",
-)
-def supplier_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative graph ranking (operators/graph.pagerank): 3 exact-integer
-    PageRank rounds over the customer<->supplier interaction graph mined
-    from orders x lineitem (both directions, so the graph is cyclic and
-    mass actually circulates), then the top-20 nodes.  The iteration is
-    the Pregel-ish DataFrame shape — one join + one partial-agg'd groupBy
-    per round, ZERO driver traffic inside the loop — and the ppm integer
-    arithmetic is order-invariant, so the oracle replays all three rounds
-    as chained CTEs bit-for-bit.  Top-20 is TakeOrderedAndProject, never
-    a full sort of the node table."""
-    from ..operators.graph import pagerank
-
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    ranks = pagerank(edges, iters=3)
-    w = Window.orderBy(F.col("rank_ppm").desc(), F.col("node"))
-    return (
-        ranks.orderBy(F.col("rank_ppm").desc(), F.col("node"))
-        .limit(20)
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-    )
 
 
 @register(
@@ -616,127 +505,6 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_qty",
         )
     )
-
-
-# Shared edge list for the graph-analytics queries: parts that co-occur in
-# >= 2 distinct orders (the weight floor keeps one-off co-purchases out, so
-# the graph is sparse and the analytics are over repeated affinity, not
-# noise).  Canonical undirected pairs, x < y.
-_DUCK_PART_EDGES = """pw AS (
-  SELECT a.l_partkey AS x, b.l_partkey AS y
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(DISTINCT a.l_orderkey) >= 2
-)"""
-
-
-def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark twin of _DUCK_PART_EDGES: one self-equi-join on the order
-    key (bounded per order by lines-per-order, never quadratic in parts)
-    and one partial-agg'd pair groupBy with the weight->=2 floor."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    b = li.select(
-        F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("pk2")
-    )
-    return (
-        li.join(
-            b,
-            (li["l_orderkey"] == F.col("ok2"))
-            & (li["l_partkey"] < F.col("pk2")),
-        )
-        .groupBy(
-            F.col("l_partkey").alias("x"), F.col("pk2").alias("y")
-        )
-        .agg(F.countDistinct("l_orderkey").alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("x", "y")
-    )
-
-
-@register(
-    "part_triangle_counts",
-    oracle=f"""
-WITH {_DUCK_PART_EDGES},
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-    SELECT x AS node FROM pw UNION ALL SELECT y AS node FROM pw) t
-  GROUP BY node
-), ed AS (
-  SELECT CASE WHEN du < dv OR (du = dv AND u < v) THEN u ELSE v END AS s,
-         CASE WHEN du < dv OR (du = dv AND u < v) THEN v ELSE u END AS t,
-         CASE WHEN du < dv OR (du = dv AND u < v) THEN dv ELSE du END AS dt
-  FROM (SELECT pw.x AS u, pw.y AS v, d1.deg AS du, d2.deg AS dv
-        FROM pw JOIN deg d1 ON d1.node = pw.x
-                JOIN deg d2 ON d2.node = pw.y) j
-), tri AS (
-  SELECT e1.s AS s, e1.t AS a, e2.t AS b
-  FROM ed e1 JOIN ed e2 ON e1.s = e2.s
-   AND (e1.dt < e2.dt OR (e1.dt = e2.dt AND e1.t < e2.t))
-  JOIN ed e3 ON e3.s = e1.t AND e3.t = e2.t
-)
-SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
-FROM (SELECT s AS node FROM tri UNION ALL SELECT a AS node FROM tri
-      UNION ALL SELECT b AS node FROM tri) c
-GROUP BY node
-""",
-)
-def part_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting (operators/graph.triangle_counts) over the part
-    co-purchase graph: per-part triangle participation — the local
-    clustering signal behind community detection and recommendation
-    diversity.  The degree-ordered edge-iterator (Schank & Wagner 2005;
-    Suri & Vassilvitskii WWW 2011) is the 100-TB story: orienting each
-    edge toward its higher-(degree, id) endpoint caps every out-degree at
-    O(sqrt(m)), so the wedge self-join stays O(m^1.5) even on a power-law
-    degree distribution where the naive neighbor join is quadratic in the
-    hub degree.  Every orientation comparison is explicit (deg, id) tuple
-    logic the oracle replays verbatim; the edge list itself is the shared
-    weight->=2 co-occurrence CTE."""
-    from ..operators.graph import triangle_counts
-
-    edges = _part_edges(spark, sf_dir)
-    return triangle_counts(edges, src="x", dst="y")
-
-
-@register(
-    "part_k_hop_frontier",
-    oracle=f"""
-WITH RECURSIVE {_DUCK_PART_EDGES},
-e AS (
-  SELECT x AS src, y AS dst FROM pw
-  UNION ALL
-  SELECT y AS src, x AS dst FROM pw
-),
-r(node, hop) AS (
-  SELECT MIN(src), 0 FROM e
-  UNION
-  SELECT e.dst, r.hop + 1 FROM r JOIN e ON e.src = r.node WHERE r.hop < 3
-)
-SELECT node, CAST(MIN(hop) AS BIGINT) AS hop FROM r GROUP BY node
-""",
-)
-def part_k_hop_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-hop BFS (operators/graph.k_hop_distances): minimum hop distance
-    (<= 3) from the lowest-keyed part over the undirected co-purchase
-    graph — the reachability primitive behind related-item expansion and
-    blast-radius queries.  Spark runs the Pregel BFS loop (frontier join
-    + LEFT ANTI dedup per superstep, zero driver traffic — even the seed
-    is a one-row DataFrame, not a collect); the oracle is the textbook
-    recursive CTE whose UNION dedup makes MIN(hop) the shortest distance.
-    The anti-join is the scale keystone: without it a dense graph's
-    frontier re-expands into settled regions and grows as paths instead
-    of nodes."""
-    from ..operators.graph import k_hop_distances
-
-    pw = _part_edges(spark, sf_dir)
-    edges = pw.select(
-        F.col("x").alias("src"), F.col("y").alias("dst")
-    ).union(pw.select(F.col("y").alias("src"), F.col("x").alias("dst")))
-    seeds = edges.agg(F.min("src").alias("node"))
-    return k_hop_distances(edges, seeds, k=3)
 
 
 @register(

@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from .triples import TABLE_IDX_SQL
 
+# example doc_ids listed per (section, header) row of the settings inventory
+MAX_EXAMPLES = 3
+
 
 def table_inventory(out_spans: DataFrame) -> DataFrame:
     """(doc_id, table_idx, section, header) — one row per header occurrence.
@@ -42,18 +45,17 @@ def table_inventory(out_spans: DataFrame) -> DataFrame:
     )
 
 
-def settings_inventory(
-    out_spans: DataFrame, ontology: DataFrame, max_examples: int = 3
-) -> DataFrame:
+def settings_inventory(out_spans: DataFrame, ontology: DataFrame) -> DataFrame:
     """A5/A6/O4/J4: the domain_settings content as a DataFrame:
 
-    (section, header, n_tables, examples<=3, property) — property pre-filled
-    from the ontology label table when a case-insensitive match exists, else
-    '' (the blank the user fills in, WriteSettingsFile.py:60-104)."""
+    (section, header, n_tables, examples<=MAX_EXAMPLES, property) —
+    property pre-filled from the ontology label table when a
+    case-insensitive match exists, else '' (the blank the user fills in,
+    WriteSettingsFile.py:60-104)."""
     grouped = table_inventory(out_spans).groupBy("section", "header").agg(
         F.expr("count(*) AS n_tables"),
         F.expr(
-            f"slice(sort_array(collect_set(doc_id)), 1, {int(max_examples)}) "
+            f"slice(sort_array(collect_set(doc_id)), 1, {MAX_EXAMPLES}) "
             "AS examples"
         ),
     )

@@ -29,7 +29,8 @@ def recommended_confs(shuffle_partitions: Optional[int] = None) -> Dict[str, str
         # deterministic timestamp semantics for cross-engine oracles
         # (DuckDB timestamps are UTC-naive; Spark's are session-TZ)
         "spark.sql.session.timeZone": "UTC",
-        # Arrow batches for the kernel stage (mapInPandas)
+        # Arrow for toPandas() and pandas-side createDataFrame; the kernel
+        # stage is mapInArrow, which uses Arrow whatever this says
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # ALWAYS use the sort-based shuffle writer.  The default bypass-merge
         # writer kicks in at <=200 reduce partitions and opens one file per

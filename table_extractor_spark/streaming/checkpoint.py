@@ -103,6 +103,11 @@ class CheckpointedRun:
             raise ValueError(
                 f"run_id must be a non-empty path-safe token, got {self.run_id!r}"
             )
+        if self.num_buckets < 1 or self.wave_size < 1:
+            raise ValueError(
+                f"num_buckets and wave_size must be >= 1, got "
+                f"{self.num_buckets} and {self.wave_size}"
+            )
 
     @property
     def out_dir(self) -> str:
@@ -215,6 +220,8 @@ class CheckpointedRun:
         (same base_dir/run_id) to resume.  Exactly-once per bucket: a bucket
         is either absent from lineage (and will be fully (re)written) or
         present (and will be skipped)."""
+        if max_waves is not None and max_waves < 0:
+            raise ValueError(f"max_waves must be >= 0, got {max_waves}")
         done = set(self.completed_buckets(spark))
         pending = [b for b in range(self.num_buckets) if b not in done]
         waves = [

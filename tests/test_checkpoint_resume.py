@@ -286,6 +286,15 @@ def test_path_unsafe_run_id_rejected(tmp_path):
         CheckpointedRun(base_dir=str(tmp_path), run_id="a/b")
     with pytest.raises(ValueError):
         CheckpointedRun(base_dir=str(tmp_path), run_id="x=1")
+    with pytest.raises(ValueError, match="num_buckets"):
+        CheckpointedRun(base_dir=str(tmp_path), run_id="r", num_buckets=0)
+    with pytest.raises(ValueError, match="wave_size"):
+        CheckpointedRun(base_dir=str(tmp_path), run_id="r", wave_size=0)
+    # checked before the lineage read, so no session is needed
+    with pytest.raises(ValueError, match="max_waves"):
+        CheckpointedRun(base_dir=str(tmp_path), run_id="r").run(
+            None, None, max_waves=-1
+        )
 
 
 def test_corrupt_lineage_raises_instead_of_reprocessing(spark, run):

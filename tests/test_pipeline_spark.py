@@ -124,46 +124,6 @@ def test_coalesce_spread_keeps_num_partitions_as_floor(spark):
     assert "Coalesce 4" in plan and plan.count("Exchange") == 1, plan
 
 
-def test_skew_report_values_and_null_key_order(spark):
-    """skew_report (the pre-shuffle hot-key diagnostic): exact counts,
-    integer ppm shares, total rank order — and a NULL key must sort AFTER
-    equal-count non-null keys (asc_nulls_last pins Spark to the
-    DuckDB/warehouse default so the driver oracle agrees row-for-row)."""
-    from table_extractor_spark.operators.repartition import skew_report
-
-    rows = [("a",)] * 5 + [("b",)] * 3 + [(None,)] * 3 + [("c",)] * 1
-    df = spark.createDataFrame(rows, "k string")
-    got = [r.asDict() for r in skew_report(df, "k", top_k=10).collect()]
-    assert got == [
-        {"rank": 1, "k": "a", "cnt": 5, "share_ppm": 416666},
-        {"rank": 2, "k": "b", "cnt": 3, "share_ppm": 250000},
-        {"rank": 3, "k": None, "cnt": 3, "share_ppm": 250000},
-        {"rank": 4, "k": "c", "cnt": 1, "share_ppm": 83333},
-    ]
-
-    # top_k truncates to the hottest keys only
-    top1 = skew_report(df, "k", top_k=1).collect()
-    assert [(r["rank"], r["k"]) for r in top1] == [(1, "a")]
-
-
-def test_skew_report_plan_is_topk_not_full_sort(spark):
-    """The global top-k must be TakeOrderedAndProject (per-partition heads
-    + driver merge), never a full Sort of the key table; the rank window
-    runs over the already-LIMITed rows so its single partition is bounded
-    by construction."""
-    from table_extractor_spark.operators.repartition import skew_report
-
-    docs = fixture_corpus_df(spark, copies=4)
-    plan = (
-        skew_report(docs, "doc_id", top_k=20)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "BroadcastExchange" in plan, plan  # the 1-row total join
-
-
 def test_plan_shape(spark):
     """The physical plan must keep the prefilter JVM-side (below the Python
     stage) and contain exactly one shuffle for the salted repartition."""

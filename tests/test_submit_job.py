@@ -104,13 +104,24 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     assert spans_by_doc(run.read_output(spark)) == spans_by_doc(expected)
 
 
-def test_p8_input_validation_rejects_bad_args():
+def test_p8_input_validation_rejects_bad_args(monkeypatch):
     """P8: the job entry rejects malformed invocations before any Spark
     work — missing required args exit via argparse; a path-unsafe run id
-    raises before a session is built."""
+    or a zero bucket count raises before a session is built."""
     import scripts.submit_job as sj
+    from pyspark.sql import SparkSession
 
     with pytest.raises(SystemExit):
         sj.main([])  # --input/--output/--run-id all required
     with pytest.raises(SystemExit):
         sj.main(["--input", "/x"])  # still missing output/run-id
+
+    def no_session(self):
+        raise AssertionError("a session was built before validation")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_session)
+    base = ["--input", "/x", "--output", "/y"]
+    with pytest.raises(ValueError, match="run_id"):
+        sj.main(base + ["--run-id", "a/b"])
+    with pytest.raises(ValueError, match="num_buckets"):
+        sj.main(base + ["--run-id", "r", "--num-buckets", "0"])
